@@ -1109,9 +1109,8 @@ def _q_rag_fallback(spark, sf):
     docs = spark.createDataFrame(
         rows, "doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
-    parsed = parse_documents(docs)
-    results = pipeline.extract_parameters(parsed)
-    return (with_rag_fallback(results, parsed, enabled=True)
+    results = pipeline.extract_from_raw(docs)
+    return (with_rag_fallback(results, parse_documents(docs), enabled=True)
             .where("param_id = 'bureau_credit_score'")
             .select("doc_id", "param_id", "value_num", "value_type",
                     "status", F.round("confidence", 6).alias("confidence"),
@@ -1354,9 +1353,10 @@ def _q_a9_consistency(spark, sf):
 
 
 def _q_a9b_engine_agreement(spark, sf):
-    """A9 (engine form): the relational JVM extraction and the
-    Arrow-UDF extraction are INDEPENDENT physical plans of the same
-    semantics (extract/retrieval_sql.py vs extract/retrieval.py) —
+    """A9 (engine form): the relational JVM extraction and the fused
+    Arrow-UDF extraction (the shipped plan) are INDEPENDENT physical
+    plans of the same semantics (extract/retrieval_sql.py vs the fused
+    parse stage, parse._parse_retr_batches) —
     every (doc_id, param_id) result row must agree across all value/
     source/confidence/status fields.  Output: total rows + mismatch
     count; the oracle pins the analytic row count (15 rows per crif
@@ -1373,7 +1373,8 @@ def _q_a9b_engine_agreement(spark, sf):
     cols = ["value_num", "value_bool", "value_str", "value_type",
             "source", "confidence", "status", "similarity_score"]
     a = extract_all(parse_documents(docs), engine="sql").alias("a")
-    b = extract_all_udf(parse_documents(docs)).alias("b")
+    b = extract_all_udf(
+        parse_documents(docs, fuse_retrieval=True)).alias("b")
     j = a.join(b, ["doc_id", "param_id"], "full_outer")
     agree = " AND ".join(f"a.{c} <=> b.{c}" for c in cols)
     return j.agg(

@@ -18,15 +18,16 @@ extraction parameters ``(value, source, confidence, status,
 similarity_score)`` — see ``app/main.py:45-83`` and
 ``app/utils/output_formatter.py:12-43`` in the reference.
 
-Design: DataFrame/SQL-first.  The only Python-side stages are the
-Arrow-batched ``mapInPandas`` parse stage (tokenize + boilerplate
-strip + chunk/table rebuild, mirroring ``app/services/parser.py``) and
-one vectorized ``pandas_udf`` for deterministic embedding retrieval
-(replacing the reference's Ollama HTTP calls,
-``app/services/embeddings.py:25-51``).  Everything else — account
-parsing, table-signature extraction, DPD aggregation, confidence
-ladders — is JVM-side Spark SQL (higher-order array functions, regexp,
-CASE), shuffle-free per document.
+Design: DataFrame/SQL-first around ONE Python stage.  The shipped
+extraction (``pipeline.extract_from_raw``) is a single Arrow-batched
+``mapInPandas`` stage — parse (mirroring ``app/services/parser.py``),
+deterministic embedding retrieval (replacing the reference's Ollama
+HTTP calls, ``app/services/embeddings.py:25-51``), account parsing and
+the per-parameter values — followed by a codegen projection that
+builds the typed result rows, shuffle-free per document.  The
+clean-span parse is pure JVM SQL, and an independent relational engine
+(``SPARK_GRAFT_ENGINE=sql``) computes the same results with JVM-side
+retrieval and account aggregation.
 """
 
 __version__ = "0.1.0"

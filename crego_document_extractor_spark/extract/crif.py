@@ -1,24 +1,21 @@
-"""CRIF bureau-report parameter extraction — JVM-side Spark SQL.
+"""CRIF bureau-report parameter extraction — the result builders.
 
 Mirrors the reference control flow (crif.py:37-78, 123-221) for all 15
-parameters.  Physical shape: table-signature values, per-parameter
-best-chunk lookups and confidence ladders are narrow per-document SQL;
-the ACCOUNT path — the per-document hot loop — is relational:
+parameters.  Every per-parameter scalar the result structs read
+(best score, chunk-aware value, winning table id, chunk account
+counts, report and account aggregates) is a primitive column, built by
+one of two independent engines:
 
-  posexplode(account chunks) → scalar regexp columns (whole-stage
-  codegen) → per-doc partial/final aggregation
+* the fused parse (parse.py ``fuse_retrieval=True``): one Python stage
+  computes them all, and ``extract_all_udf`` is a pure-codegen
+  projection over its output — the shipped plan;
+* the relational engine (``extract_all(engine='sql')``): JVM-side
+  retrieval and account aggregation (retrieval_sql.py) over the full
+  parsed schema — the independent cross-check.
 
-in a SINGLE lineage: the non-account columns ride the explode on the
-pos-0 row and are recovered with first(ignorenulls), so the parse
-stage executes once, there is no self-join, and the one shuffle
-carries only doc_id + slim scalars (the wide nested payload is
-consumed before the aggregation).  Map-side partial aggregation
-absorbs mega-docs (a 10k-account document combines to one row per map
-task — no salting needed).  The former formulation built account
-structs inside ``transform(chunks, ...)``, which is CodegenFallback:
-interpreted, allocation-heavy, and the measured single-JVM scaling
-ceiling at 32 cores.  The only Python is the vectorized retrieval UDF
-(retrieval.py).
+Kind routing (main.py:66-69) is a CASE over per-kind result arrays in
+one projection (``_explode_by_kind``), so the parse stage executes
+exactly once (a plan-level union re-runs it per branch).
 
 Reference-faithful quirks preserved (see oracle.py for the full list):
 
@@ -35,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import sqlexpr as X
-from .retrieval import with_retrieval
 from ..specs import PARAMETER_SPECS
 
 _NULLS = ("CAST(NULL AS double)", "CAST(NULL AS boolean)",
@@ -149,22 +145,10 @@ def _flag_param(i: int, spec: dict) -> str:
     pid = spec["param_id"]
     bscore = f"bscore_{i}"
     if pid in X.FLAG_PREDS:
-        bc = f"bc_{i}"
-        pred = X.FLAG_PREDS[pid].format(r="ba.remarks")
-        blocks = (f"slice(split({bc}.text, 'Account Number:'), 2, {X.SLICE_REST})")
-        # parse_account_from_text over each sub-block (crif.py:395-401);
-        # only account_type validity + remarks matter for flags
-        ca = (f"filter(transform({blocks}, blk -> named_struct("
-              f"'account_type', {X.extract_field('blk', 'Account Type')}, "
-              f"'remarks', {X.extract_field('blk', 'Account Remarks')})), "
-              f"ba -> ba.account_type != '')")
+        # nc_i / mc_i: accounts / matched accounts in the winning text
+        # chunk's 'Account Number:' sub-blocks (crif.py:395-401)
         n_chunk = f"nc_{i}"
         m_chunk = f"mc_{i}"
-        inter = {
-            n_chunk: f"(CASE WHEN {bc} IS NOT NULL THEN size({ca}) ELSE 0 END)",
-            m_chunk: (f"(CASE WHEN {bc} IS NOT NULL THEN "
-                      f"size(filter({ca}, ba -> {pred})) ELSE 0 END)"),
-        }
         chunk_ok = f"({n_chunk} > 0 AND {m_chunk} > 0)"
         rep_m = f"rep_m_{pid}"
         value = f"(CASE WHEN {chunk_ok} THEN true ELSE {rep_m} > 0 END)"
@@ -176,13 +160,11 @@ def _flag_param(i: int, spec: dict) -> str:
         conf = (f"(CASE WHEN {chunk_ok} THEN 0.5d ELSE 0.9d END) "
                 f"* {X.boost(bscore)}")
     else:  # bureau_ntc_accepted — no checker, report path (crif.py:263-266)
-        inter = {}
         value = "false"
         source = "concat('Account Remarks (0/', cast(n_accounts AS string), ' accounts)')"
         conf = f"0.9d * {X.boost(bscore)}"
-    struct = _result(pid, _NULLS[0], value, _NULLS[2], "'bool'",
-                     source, conf, "'extracted'", bscore)
-    return struct, inter
+    return _result(pid, _NULLS[0], value, _NULLS[2], "'bool'",
+                   source, conf, "'extracted'", bscore)
 
 
 _DERIVED_VALUE = {
@@ -206,79 +188,46 @@ def _derived_param(i: int, spec: dict) -> str:
                    "'int'", source, conf, "'extracted'", bscore)
 
 
-#: chunks holding account blocks (crif.py:395 header routing)
-_ACCT_CHUNKS = "filter(chunks, c -> startswith(c.header, 'Account Information'))"
+def _embedding_results() -> list[str]:
+    """The 15 crif result structs of embedding mode over the
+    per-parameter scalar columns (either engine's)."""
+    results = []
+    for i, spec in enumerate(PARAMETER_SPECS):
+        pid = spec["param_id"]
+        if spec["category"] == "policy":
+            results.append(_policy_result(pid))
+            continue
+        if spec["category"] == "direct":
+            struct = _direct_param(i, spec)
+        elif spec["category"] == "flag":
+            struct = _flag_param(i, spec)
+        else:
+            struct = _derived_param(i, spec)
+        # retrieval miss → NOT_FOUND (crif.py:154-162)
+        results.append(f"(CASE WHEN bscore_{i} IS NULL "
+                       f"THEN {_not_found_result(pid)} ELSE {struct} END)")
+    return results
 
-#: per-account scalar fields consumed by the report aggregates
-_ACCT_FIELDS = ("account_type", "remarks", "is_active", "worst_dpd")
 
+def _explode_by_kind(df: DataFrame, crif_results: list[str]) -> DataFrame:
+    """One result row per (document, parameter): the crif structs for
+    crif docs, the two GSTR structs for gstr docs, nothing otherwise."""
+    from .gstr import gstr_result_structs
 
-def _with_accounts(df: DataFrame, carry: list[str],
-                   extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """Relational account path (parse_crif_report, crif_parser.py:7-25
-    + crif_models.py:47-88).
-
-    posexplode_outer the account chunks (empty docs keep a null row),
-    compute each account field as a scalar regexp column — codegen, not
-    an interpreted lambda — and aggregate per input ROW.  The ``carry``
-    columns survive on the pos-0 row only and come back through
-    first(ignorenulls), so each doc's payload crosses the shuffle
-    exactly once and rows 1..n carry just the account scalars.
-
-    The grouping key is a per-row id, NOT doc_id: the reference
-    processes one request = one document, so two input rows that
-    happen to share a doc_id must stay independent results (row-count
-    preserved).  monotonically_increasing_id is deterministic per
-    (partition, row-index) and never appears in the output — it is
-    consumed by the aggregation inside the same single lineage."""
-    keep_pos0 = [
-        F.when(F.col("apos").isNull() | (F.col("apos") == 0), F.col(c)).alias(c)
-        for c in carry
-    ]
-    fields = X.account_fields("ac.text")
-    ex = (df.withColumn("_rid", F.monotonically_increasing_id())
-          .select("_rid", "doc_id", *extra_keys, *carry,
-                  F.posexplode_outer(F.expr(_ACCT_CHUNKS)).alias("apos", "ac"))
-          .select("_rid", "doc_id", *extra_keys, *keep_pos0,
-                  *[F.expr(fields[f]).alias(f) for f in _ACCT_FIELDS]))
-    valid = "(account_type IS NOT NULL AND account_type != '')"
-    live = f"({valid} AND {X.live_plbl_pred('account_type', 'is_active')})"
-    aggs = [F.first(c, ignorenulls=True).alias(c) for c in carry]
-    aggs += [
-        F.count(F.when(F.expr(valid), 1)).cast("int").alias("n_accounts"),
-        F.count(F.when(F.expr(f"{valid} AND worst_dpd >= 30"), 1))
-        .cast("int").alias("rep_dpd30"),
-        F.count(F.when(F.expr(f"{valid} AND worst_dpd >= 60"), 1))
-        .cast("int").alias("rep_dpd60"),
-        F.count(F.when(F.expr(f"{valid} AND worst_dpd >= 90"), 1))
-        .cast("int").alias("rep_dpd90"),
-        F.coalesce(F.max(F.expr(live)), F.lit(False)).alias("rep_live_plbl"),
-    ]
-    for pid, pred in X.FLAG_PREDS.items():
-        p = pred.format(r="remarks")
-        aggs.append(F.count(F.when(F.expr(f"{valid} AND {p}"), 1))
-                    .cast("int").alias(f"rep_m_{pid}"))
-    # non-primitive values that must survive the aggregation ride as
-    # GROUP KEYS (all functionally dependent on _rid): group keys may
-    # be strings without breaking HashAggregate, aggregate buffers may
-    # not.
-    return ex.groupBy("_rid", "doc_id", *extra_keys).agg(*aggs).drop("_rid")
+    arr = (f"CASE WHEN doc_kind = 'crif' THEN array({', '.join(crif_results)}) "
+           f"WHEN doc_kind = 'gstr' THEN {gstr_result_structs()} "
+           f"ELSE array() END")
+    return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
+            .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
 
 
 def _with_tables(df: DataFrame) -> DataFrame:
-    """Table-signature report values (crif_parser.py:28-127) — narrow
-    higher-order exprs over the small per-doc tables array; the summary
-    struct is flattened to primitive columns (see _SUMMARY_FIELDS).
-
-    The FUSED parse stage pre-flattens these in Python (semantics
-    account_summary/bureau_score/credit_inquiries — the same
-    definitions the oracle proves equal to these SQL forms), saving
-    the interpreted-HOF evaluation here; when those columns are
-    already present this is a no-op and the SQL forms below stay the
-    sql engine's (and legacy path's) implementation, cross-checked
-    end-to-end by the A9b agreement query."""
-    if "rep_score" in df.columns:
-        return df
+    """Table-signature report values (crif_parser.py:28-127) for the
+    relational engine — narrow higher-order exprs over the small per-doc
+    tables array; the summary struct is flattened to primitive columns
+    (see _SUMMARY_FIELDS).  The fused parse computes the same values in
+    Python (semantics account_summary/bureau_score/credit_inquiries);
+    the A9b agreement query cross-checks the two end-to-end."""
     df = (df.withColumn("rep_score", F.expr(X.doc_score()))
           .withColumn("rep_summary", F.expr(X.doc_summary()))
           .withColumn("rep_inquiries", F.expr(X.doc_inquiries())))
@@ -286,22 +235,31 @@ def _with_tables(df: DataFrame) -> DataFrame:
         df = df.withColumn(f"rep_sum_{fld}", F.col(f"rep_summary.{fld}"))
     return df.drop("rep_summary")
 
-#: primitive report columns carried across the account aggregation
-_REP_CARRY = ["rep_score", "rep_inquiries"] + [
-    f"rep_sum_{fld}" for fld in _SUMMARY_FIELDS]
+
+def is_fused(parsed: DataFrame) -> bool:
+    """True for a fused parse (``parse_documents(fuse_retrieval=True)``)."""
+    return "bscore_0" in parsed.columns
+
+
+def _require_fused(parsed: DataFrame) -> None:
+    if not is_fused(parsed):
+        raise ValueError(
+            "this form reads the fused parse — use "
+            "parse_documents(docs, fuse_retrieval=True) or "
+            "pipeline.extract_from_raw(docs)")
 
 
 _LEGACY_WEIGHTS = {"direct": "0.95d", "flag": "0.85d", "derived": "1.0d"}
 
 
-def extract_crif_legacy(parsed: DataFrame) -> DataFrame:
+def extract_legacy(parsed: DataFrame) -> DataFrame:
     """Legacy direct-parsing mode (crif_legacy.py:22-159,
-    USE_EMBEDDING_GUIDED_EXTRACTION=False): report-level values only,
-    direct_table/flag_detection/computed weights, no similarity boost,
-    formatter-default 'extracted' status everywhere (incl. policy)."""
-    df = _with_tables(parsed.where(F.col("doc_kind") == "crif"))
-    if "n_accounts" not in df.columns:
-        df = _with_accounts(df, list(_REP_CARRY))
+    USE_EMBEDDING_GUIDED_EXTRACTION=False) over the fused parse:
+    report-level values only, direct_table/flag_detection/computed
+    weights, no similarity boost, formatter-default 'extracted' status
+    everywhere (incl. policy).  GSTR documents get the same two rows as
+    in embedding mode."""
+    _require_fused(parsed)
     results = []
     for spec in PARAMETER_SPECS:
         pid = spec["param_id"]
@@ -340,189 +298,63 @@ def extract_crif_legacy(parsed: DataFrame) -> DataFrame:
                 results.append(_result(pid, f"cast({value} AS double)",
                                        _NULLS[1], _NULLS[2], "'int'", source,
                                        w, "'extracted'", _NULLS[3]))
-    arr = "array(" + ", ".join(results) + ")"
-    return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
-            .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
-
-
-def extract_crif(parsed: DataFrame) -> DataFrame:
-    """parsed (doc_kind='crif') → long results table, one row per
-    (doc_id, param_id) — embedding-guided mode (the reference default,
-    config.py:58)."""
-    return extract_all(parsed.where(F.col("doc_kind") == "crif"))
-
-
-#: measured corpus-size crossover (BENCH/ENGINE_AB.md round-5 sweep):
-#: the r5 parse+retrieval FUSION moved it below the smallest measured
-#: size — the fused Arrow-UDF plan ties the relational plan at 600
-#: docs and wins 1.3-1.9x from 2400 to 24000 (and 1.8x at 160k, r3/r4)
-#: — so the default crossover is 0 (auto resolves udf at every scale).
-#: The size-aware mechanism stays env-overridable for recalibration if
-#: future semantics shift the balance back.
-ENGINE_CROSSOVER_DOCS = int(
-    __import__("os").environ.get("SPARK_GRAFT_ENGINE_CROSSOVER", "0"))
+    return _explode_by_kind(parsed, results)
 
 
 def default_engine(n_docs: int | None = None) -> str:
-    """THE engine-selection point, shared by every entry path
-    (pipeline.extract_parameters, direct extract_all/extract_crif
-    callers, bench children): `SPARK_GRAFT_ENGINE` env ('sql', 'udf',
-    or 'auto' — the default).  'auto' resolves by the estimated input
-    size when the caller provides one (`n_docs`): the relational
-    engine below ENGINE_CROSSOVER_DOCS, the fused Arrow-UDF engine
-    at/above it (r4 VERDICT #2 — the shipped default should be the
-    measured winner at EVERY scale, not just the design point).
-    Without a size hint, 'auto' falls back to 'udf', the winner at
-    the 160k-doc design scale."""
+    """THE engine-selection point, shared by every entry path:
+    `SPARK_GRAFT_ENGINE` ('udf' — the fused plan, the default — or
+    'sql', the relational engine).  ``n_docs`` is accepted for callers
+    that pass a corpus-size hint; the fused plan wins at every measured
+    size, so it does not change the choice."""
     import os
-    env = os.environ.get("SPARK_GRAFT_ENGINE", "auto")
-    if env != "auto":
-        return env
-    if n_docs is None:
-        return "udf"
-    return "sql" if n_docs < ENGINE_CROSSOVER_DOCS else "udf"
+    engine = os.environ.get("SPARK_GRAFT_ENGINE") or "udf"
+    if engine not in ("udf", "sql"):
+        raise ValueError(
+            f"SPARK_GRAFT_ENGINE must be 'udf' or 'sql', got {engine!r}")
+    return engine
 
 
 def extract_all(parsed: DataFrame, engine: str | None = None,
                 n_docs: int | None = None) -> DataFrame:
-    """UNIFIED single-plan extraction for both document kinds.
+    """Embedding-mode extraction for both document kinds.
 
-    Kind routing (main.py:66-69) is a CASE over per-kind result arrays
-    inside ONE lineage, so the parse stage executes exactly once (a
-    plan-level union re-runs the Python parse per branch — measured).
+    engine=None resolves via ``default_engine(n_docs)``.
+    engine='udf': ``extract_all_udf`` over a fused parse.
+    engine='sql': the relational engine over the full parsed schema —
+    retrieval and account aggregation run JVM-side (retrieval_sql.py),
+    an INDEPENDENT physical plan; the A9b agreement query
+    (test_accuracy.py:79-115 analogue) proves the two agree."""
+    if (engine or default_engine(n_docs)) == "udf":
+        return extract_all_udf(parsed)
+    from .gstr import with_gstr_columns
+    from .retrieval_sql import relational_extract_columns
 
-    engine=None resolves via ``default_engine(n_docs)`` (env switch,
-    size-aware 'auto' default).
-    engine='sql': the retrieval stage runs JVM-side
-    (retrieval_sql.py) — zero Python beyond the Arrow parse.
-    engine='udf': the Arrow pandas_udf retrieval — an INDEPENDENT
-    physical plan; the A9 consistency check (test_accuracy.py:79-115
-    analogue) proves the two agree."""
-    if engine is None:
-        engine = default_engine(n_docs)
-    if engine == "sql":
-        from .gstr import gstr_result_structs, with_gstr_columns
-        from .retrieval_sql import relational_extract_columns
-
-        if "tables" not in parsed.columns:
-            raise ValueError(
-                "engine='sql' needs the full parsed schema "
-                "(tables/chunks/text); got a pre-flattened fused parse — "
-                "use parse_documents(docs) without fuse_retrieval")
-        # r6: the relational plan references text/tables/chunks dozens
-        # of times; over the prunable JVM parse those are interpreted
-        # HOF expressions the optimizer may inline per reference
-        # (measured 25 s → 74 s at sf1.0/240k).  When the input is an
-        # unmodified parse_documents() output, rebuild from its source
-        # with the opaque Arrow parse — one materialization, attribute
-        # references downstream (the exact pre-r6 plan; parity between
-        # the two parse forms is pinned by the span-equality suite).
-        src = getattr(parsed, "_plain_parse_docs", None)
-        if src is not None:
-            from ..parse import parse_documents_arrow
-            parsed = parse_documents_arrow(src)
-        # the relational engine computes the account aggregates itself
-        # (its independence is what the A9b agreement check buys); a
-        # fused-parse input's pre-flattened copies would collide with
-        # the aggregation aliases, so shed them here
-        from ..parse import _ACCT_AGG_COLS
-        df = _with_tables(parsed.drop(*_ACCT_AGG_COLS))
-        df = with_gstr_columns(df)
-        df = relational_extract_columns(df)
-        results = []
-        for i, spec in enumerate(PARAMETER_SPECS):
-            pid = spec["param_id"]
-            if spec["category"] == "policy":
-                results.append(_policy_result(pid))
-                continue
-            if spec["category"] == "direct":
-                struct = _direct_param(i, spec)
-            elif spec["category"] == "flag":
-                struct, _ = _flag_param(i, spec)
-            else:
-                struct = _derived_param(i, spec)
-            # retrieval miss → NOT_FOUND (crif.py:154-162)
-            results.append(f"(CASE WHEN bscore_{i} IS NULL "
-                           f"THEN {_not_found_result(pid)} ELSE {struct} END)")
-        arr = (f"CASE WHEN doc_kind = 'crif' THEN array({', '.join(results)}) "
-               f"WHEN doc_kind = 'gstr' THEN {gstr_result_structs()} "
-               f"ELSE array() END")
-        return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
-                .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
-    return extract_all_udf(parsed)
+    if "tables" not in parsed.columns:
+        raise ValueError(
+            "engine='sql' needs the full parsed schema "
+            "(tables/chunks/text); got a pre-flattened fused parse — "
+            "use parse_documents(docs) without fuse_retrieval")
+    # r6: the relational plan references text/tables/chunks dozens
+    # of times; over the prunable JVM parse those are interpreted
+    # HOF expressions the optimizer may inline per reference
+    # (measured 25 s → 74 s at sf1.0/240k).  When the input is an
+    # unmodified parse_documents() output, rebuild from its source
+    # with the opaque Arrow parse — one materialization, attribute
+    # references downstream (the exact pre-r6 plan; parity between
+    # the two parse forms is pinned by the span-equality suite).
+    src = getattr(parsed, "_plain_parse_docs", None)
+    if src is not None:
+        from ..parse import parse_documents_arrow
+        parsed = parse_documents_arrow(src)
+    df = relational_extract_columns(with_gstr_columns(_with_tables(parsed)))
+    return _explode_by_kind(df, _embedding_results())
 
 
 def extract_all_udf(parsed: DataFrame) -> DataFrame:
-    """Arrow-UDF engine.  Two input shapes:
-
-    * FULLY PRE-FLATTENED fused parse (parse.py fuse_retrieval=True,
-      detected by `bscore_0`): every per-parameter scalar is already a
-      primitive column, so this is a pure-codegen projection — build
-      the result structs, explode.  ZERO shuffles, zero JVM HOFs,
-      slim Arrow payload (the flagship plan).
-    * full parsed schema (legacy round-2 plan): pandas_udf retrieval +
-      JVM HOF lookups + relational account aggregation.  Kept as a
-      third physical form for the consistency harness."""
-    from .gstr import GSTR_CARRY, GSTR_KEYS, gstr_result_structs, with_gstr_columns
-
-    pref = "bscore_0" in parsed.columns
-    if pref:
-        df = parsed
-    else:
-        df = with_retrieval(parsed)
-        df = _with_tables(df)
-        df = with_gstr_columns(df)
-
-    # per-parameter best-chunk lookups: computed BEFORE the account
-    # aggregation while the wide tables/chunks columns are still in
-    # scope; only the slim derived scalars ride the shuffle
-    carry = list(_REP_CARRY)
-    results = []
-    for i, spec in enumerate(PARAMETER_SPECS):
-        pid = spec["param_id"]
-        best = f"try_element_at(retr, {i + 1})"
-        if spec["category"] == "policy":
-            results.append(_policy_result(pid))
-            continue
-        if not pref:
-            # only the best score survives past the account aggregation
-            # — a primitive column, so the aggregation stays
-            # HashAggregate
-            df = df.withColumn(f"bscore_{i}", F.expr(f"{best}.score"))
-            carry.append(f"bscore_{i}")
-        if spec["category"] == "direct":
-            if not pref:
-                df = df.withColumn(
-                    f"bt_{i}",
-                    F.expr(f"CASE WHEN {best}.score IS NOT NULL AND {best}.ctype = 'table' "
-                           f"THEN try_element_at(filter(tables, t -> t.id = {best}.ref_idx), 1) END"))
-                df = (df.withColumn(f"cv_{i}", F.expr(_direct_chunk_value(pid, f"bt_{i}")))
-                      .withColumn(f"bt_id_{i}", F.expr(f"bt_{i}.id")))
-                carry += [f"cv_{i}", f"bt_id_{i}"]
-            struct = _direct_param(i, spec)
-        elif spec["category"] == "flag":
-            struct, inter = _flag_param(i, spec)
-            if not pref:
-                if pid in X.FLAG_PREDS:
-                    df = df.withColumn(
-                        f"bc_{i}",
-                        F.expr(f"CASE WHEN {best}.score IS NOT NULL AND {best}.ctype = 'text' "
-                               f"THEN try_element_at(filter(chunks, c -> c.chunk_idx = {best}.ref_idx), 1) END"))
-                for name, expr in inter.items():
-                    df = df.withColumn(name, F.expr(expr))
-                carry += list(inter)
-        else:
-            struct = _derived_param(i, spec)
-        # retrieval miss → NOT_FOUND (crif.py:154-162)
-        results.append(f"(CASE WHEN bscore_{i} IS NULL "
-                       f"THEN {_not_found_result(pid)} ELSE {struct} END)")
-
-    if not pref:
-        carry += GSTR_CARRY
-        if "n_accounts" not in df.columns:
-            df = _with_accounts(df, carry, extra_keys=("doc_kind", *GSTR_KEYS))
-    arr = (f"CASE WHEN doc_kind = 'crif' THEN array({', '.join(results)}) "
-           f"WHEN doc_kind = 'gstr' THEN {gstr_result_structs()} "
-           f"ELSE array() END")
-    return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
-            .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
+    """Arrow-UDF engine: a pure-codegen projection over the fused parse
+    (parse.py fuse_retrieval=True), where every per-parameter scalar is
+    already a primitive column — build the result structs, explode.
+    Zero shuffles, zero JVM HOFs (the flagship plan)."""
+    _require_fused(parsed)
+    return _explode_by_kind(parsed, _embedding_results())

@@ -5,10 +5,10 @@ and ``gst_month`` (filing period), sharing source/confidence/status
 like the reference's single sales record (gstr.py:31-37).
 
 ``with_gstr_columns`` / ``gstr_result_structs`` are split so the
-unified single-plan extraction (crif.extract_all) can compute the
-primitive g_* columns BEFORE the account aggregation and build the
-result structs after it — the standalone ``extract_gstr`` composes the
-same two pieces.
+relational engine (crif.extract_all) can compute the primitive g_*
+columns BEFORE its account aggregation and build the result structs
+after it; the fused parse computes the same primitives in Python
+(parse._gstr_primitives).
 """
 
 from __future__ import annotations
@@ -73,10 +73,3 @@ def gstr_result_structs() -> str:
         ")"
     )
 
-
-def extract_gstr(parsed: DataFrame) -> DataFrame:
-    from .crif import RESULT_FIELDS
-
-    df = with_gstr_columns(parsed.where(F.col("doc_kind") == "gstr"))
-    return (df.select("doc_id", F.explode(F.expr(gstr_result_structs())).alias("r"))
-            .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))

@@ -3,17 +3,18 @@
 The reference scores every candidate chunk against every parameter
 query with cosine similarity, sorts desc, takes top-3, filters >= 0.5
 and uses the best chunk (embeddings.py:73-136).  Only the argmax and
-its score are observable downstream, so the Spark operator computes
-exactly that: one vectorized ``pandas_udf`` over the per-document
-candidate array returning the best (candidate, score) per parameter —
-no shuffle, no per-row Python.
+its score are observable downstream, so ``retrieve_rows`` computes
+exactly that for one document's candidate pool: the best (candidate,
+score) per parameter.  The fused parse stage (parse.py) calls it per
+document; the ``best_chunks`` pandas_udf wraps it for the opt-in RAG
+fallback.  No shuffle, no per-row Python UDF.
 
 The embedding itself is the deterministic hashed-feature vector from
 :mod:`..semantics` (replacing the reference's Ollama HTTP calls —
 sandboxed determinism is what its own consistency test demands,
-test_accuracy.py:79-115).  The UDF shares the exact scoring code with
-the oracle, so retrieval parity is by construction; the *consumption*
-of the retrieval result (chunk-aware extraction SQL) is independent.
+test_accuracy.py:79-115).  This code shares the exact scoring with
+the oracle, so retrieval parity is by construction; the relational
+engine (retrieval_sql.py) is the independent implementation.
 """
 
 from __future__ import annotations
@@ -55,8 +56,9 @@ _QUERY_NORMS = np.linalg.norm(_QUERY_MAT, axis=1)
 
 def retrieve_rows(cand_list) -> list[dict]:
     """One document's candidate structs → the per-parameter best-chunk
-    rows (the single shared definition — used by the `best_chunks`
-    pandas_udf AND the fused parse+retrieval MapInPandas stage)."""
+    rows (the single shared definition — used by the fused
+    parse+retrieval MapInPandas stage AND the `best_chunks` pandas_udf
+    of the RAG fallback)."""
     cand_vecs = [S.embed(c["content"]) for c in cand_list]
     retrieved = S.retrieve_best(_QUERY_MAT, cand_vecs, _QUERY_NORMS)
     row = []
@@ -102,18 +104,12 @@ best_chunks = _best_chunks_udf.asNondeterministic()
 
 
 def with_retrieval(parsed_df):
-    """Add the per-parameter best-chunk column (zero-shuffle).
+    """Add the per-parameter best-chunk column ``retr`` to a full
+    parse (zero-shuffle) — the candidate lookup of the opt-in RAG
+    fallback (ops/answer.py).
 
     Kind-aware: only crif documents have retrieval candidates
     (crif.py:80-121); other kinds ship an empty candidate list into the
-    UDF (near-free) so the unified single-plan extraction can run the
-    Python stage exactly once over the whole corpus.
-
-    No-op when `retr` is already present — the fused
-    parse+retrieval MapInPandas (parse.py, fuse_retrieval=True)
-    computes it inside the parse stage, removing one JVM↔Python Arrow
-    round-trip from the flagship plan (r4 VERDICT #6)."""
-    if "retr" in parsed_df.columns:
-        return parsed_df
+    UDF (near-free)."""
     cands = f"CASE WHEN doc_kind = 'crif' THEN {CANDIDATES_EXPR} ELSE array() END"
     return parsed_df.withColumn("retr", best_chunks(F.expr(cands)))

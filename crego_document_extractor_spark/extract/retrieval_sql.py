@@ -16,8 +16,8 @@ This module computes the identical result in pure Spark SQL:
     -> explode(tokens)                            -- narrow
     -> HashAggregate per (row, unit): 64 sign-sums  (map-side combine)
     -> per-unit cosine scores vs 15 query-vector literals (codegen)
-    -> aggregate per row: per-parameter argmax (max_by) + the account
-       aggregates that previously lived in crif._with_accounts
+    -> aggregate per row: per-parameter argmax (max_by) + the report
+       account aggregates
 
 Bit-exactness vs the numpy oracle (semantics.retrieve_best) holds
 because every embedding component is a ± sum of small integers — all

@@ -7,10 +7,14 @@ completed_at)``.  Resuming is an anti-join of pending buckets against
 the manifest (the Spark form of the reference's SHA256 parse cache,
 cache.py:36-125: only misses recompute).
 
-Output is written ``partitionBy(bucket)`` with dynamic partition
-overwrite, so a re-run of an interrupted bucket atomically replaces
-any partial files — the plain-parquet stand-in for an Iceberg
-MERGE/commit at production scale.
+Results come from the production extraction path
+(``pipeline.extract_from_raw``).  Output is repartitioned by bucket
+(one file per bucket per run) and written ``partitionBy(bucket)`` with
+a per-write dynamic partition overwrite (the session's
+``partitionOverwriteMode`` is left alone), so a re-run of an
+interrupted bucket atomically replaces any partial files — the
+plain-parquet stand-in for an Iceberg MERGE/commit at production
+scale.
 """
 
 from __future__ import annotations
@@ -19,8 +23,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .parse import parse_documents
-from .pipeline import extract_parameters
+from .pipeline import extract_from_raw
 
 MANIFEST = "_manifest"
 RESULTS = "results"
@@ -55,8 +58,6 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
     (optionally restricted to ``buckets_subset`` — used by tests to
     simulate an interrupted run).  Returns run metrics."""
     spark = docs.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     done = completed_buckets(spark, out_dir)
     attempt = _attempt_no(spark, out_dir)
     run_id = f"run-{attempt}"
@@ -67,13 +68,17 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
         pending = pending.where(F.col("bucket").isin(buckets_subset))
 
     t0 = time.perf_counter()
-    parsed = parse_documents(pending.select("doc_id", "spans"))
-    results = extract_parameters(parsed)
-    out = (results
-           .withColumn("bucket",
-                       F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")))
-    (out.write.mode("overwrite").partitionBy("bucket")
-        .parquet(f"{out_dir}/{RESULTS}"))
+    results = extract_from_raw(pending.select("doc_id", "spans"))
+    # one writer task per bucket: without the exchange every input
+    # partition writes a file into every bucket (partitions × buckets
+    # small files); only the slim result rows cross it, no span data
+    out = with_bucket(results, n_buckets).repartition("bucket")
+    # per-write option, not a session-conf flip: a session-wide
+    # setting would leak into the caller's other writes and race with
+    # concurrent writers (same fix as ops/pack.py)
+    (out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(f"{out_dir}/{RESULTS}"))
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
     # per-bucket metrics for the manifest (lineage + extraction metrics)

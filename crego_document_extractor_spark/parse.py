@@ -112,7 +112,8 @@ def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 #: per-doc account-aggregate columns pre-flattened by the fused stage
-#: (names/types mirror the _with_accounts SQL aggregation exactly)
+#: (names/types mirror the relational engine's aggregation exactly,
+#: extract/retrieval_sql.py)
 _ACCT_AGG_COLS = ("n_accounts", "rep_dpd30", "rep_dpd60", "rep_dpd90",
                   "rep_live_plbl", "rep_m_bureau_suit_filed",
                   "rep_m_bureau_wilful_default",
@@ -131,7 +132,7 @@ def _direct_cv(pid: str, t: dict):
     """Chunk-aware direct value from the winning TABLE candidate
     (crif.py:311-359) — the Python twin of crif._direct_chunk_value's
     SQL forms, built from the same semantics extractors the oracle
-    uses, so fused-vs-unfused parity is by shared definition."""
+    uses, so fused-vs-oracle parity is by shared definition."""
     if pid == "bureau_credit_score":
         return S.bureau_score_from_table(t)
     if pid == "bureau_written_off_debt_amount":
@@ -207,10 +208,10 @@ def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     (19 filter(tables/chunks) calls) as the residual cost after the r5
     fusion, so the fused payload is now ~50 primitive columns and the
     JVM side is pure codegen CASE/concat over them.  Semantics are
-    shared function-for-function with the unfused plan (retrieve_rows /
-    candidate_pool / semantics extractors), which stays as the second
+    shared function-for-function with the oracle (retrieve_rows /
+    semantics extractors); the relational engine is the independent
     physical form, cross-checked by the A9b agreement query and the
-    fused==unfused parity test (tests/test_paths.py)."""
+    fused==relational parity test (tests/test_paths.py)."""
     from .extract.retrieval import candidate_pool, retrieve_rows
     from .specs import PARAMETER_SPECS
 
@@ -229,10 +230,9 @@ def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         # ACCOUNT aggregates (parse_crif_report, crif_parser.py:7-25):
         # one Account-Information chunk = one account, parse_account
         # returns None on empty Account Type — the same validity the
-        # SQL path filters on.  Pre-flattening these lets the udf
-        # engine skip the posexplode→HashAggregate entirely (its only
-        # shuffle); the SQL forms in _with_accounts stay the sql
-        # engine's path.
+        # SQL path filters on.  Pre-flattening these keeps the shipped
+        # plan shuffle-free; the relational engine aggregates the same
+        # values JVM-side (extract/retrieval_sql.py).
         for k in _ACCT_AGG_COLS:
             rep[k] = []
         for chunks in pdf["chunks"]:

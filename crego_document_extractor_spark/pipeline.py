@@ -1,14 +1,18 @@
 """End-to-end extraction pipeline.
 
 ``documents(doc_id, spans)`` → (clean_spans, parameter results,
-formatted per-document output).  Physical shape (SURVEY.md §7):
+formatted per-document output).  Every entry point (``run``, the
+lineage job, streaming, the benchmarks) builds its results with
+``extract_from_raw``, whose physical shape (SURVEY.md §7) is:
 
-* PARSE    one Arrow ``mapInPandas`` stage (narrow, no shuffle)
-* EXTRACT  higher-order SQL per document + one retrieval pandas_udf
-           (narrow, no shuffle)
-* the ONLY wide operation is the optional per-document output
-  assembly groupBy (S8) — and the per-doc results explode/re-group can
-  be fused away by asking for `formatted_output` directly.
+* JVM blanking of non-crif/gstr spans (they produce no result rows)
+* ONE fused Arrow ``mapInPandas`` stage: parse, retrieval, account and
+  report aggregates, per-parameter scalars (narrow, no shuffle)
+* a codegen projection building the result structs, explode
+
+Clean spans come from the prunable pure-JVM parse of the same input.
+The only wide operation is the optional per-document output assembly
+groupBy (S8).
 
 At 100 TB the pipeline is therefore scan → project → write; skew from
 heavy-tailed documents affects single-task latency only (one doc is
@@ -20,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .parse import parse_documents, load_documents
-from .extract.crif import extract_all, extract_crif, extract_crif_legacy
-from .extract.gstr import extract_gstr
+from .extract.crif import (default_engine, extract_all, extract_all_udf,
+                           extract_legacy, is_fused)
 
 __all__ = ["load_documents", "parse_documents", "clean_spans",
            "extract_parameters", "run", "formatted_output"]
@@ -60,25 +64,24 @@ def clean_spans(parsed: DataFrame) -> DataFrame:
     return parsed.select("doc_id", "clean_spans")
 
 
-def extract_parameters(parsed: DataFrame, mode: str = "embedding",
-                       n_docs: int | None = None) -> DataFrame:
-    """Route by document kind (main.py:66-69).  mode='embedding' (the
-    reference default, config.py:58) runs the UNIFIED single-plan
-    extraction — kind routing is a CASE inside one lineage, so the
-    Python parse stage executes exactly once (a plan-level union would
-    re-run it per branch).  mode='legacy' is the direct-parsing path
-    (crif_legacy.py)."""
-    if mode == "embedding":
-        # Engine default decided by measurement (BENCH/BASELINE.md):
-        # the Arrow-UDF retrieval plan is ~1.8x faster end-to-end AND
-        # scales no worse than the pure-JVM relational plan on this
-        # host — removing the Python stage did not move the 8→32
-        # ceiling, so the fast engine is the default and the
-        # relational engine stays selectable (SPARK_GRAFT_ENGINE=sql)
-        # and agreement-proven (q_a9b_engine_agreement).  Resolution
-        # lives in ONE place: extract.crif.default_engine().
-        return extract_all(parsed, n_docs=n_docs)
-    return extract_crif_legacy(parsed).unionByName(extract_gstr(parsed))
+def extract_parameters(parsed: DataFrame, mode: str = "embedding") -> DataFrame:
+    """Parsed documents → long results table, one row per (doc_id,
+    param_id); the form follows from what ``parsed`` is:
+
+    * a fused parse (``parse_documents(docs, fuse_retrieval=True)``) →
+      the codegen projection over its pre-flattened columns, for
+      mode='embedding' (the reference default, config.py:58) or
+      mode='legacy' (the direct-parsing path, crif_legacy.py);
+    * a full ``parse_documents(docs)`` parse → the relational engine,
+      the only engine that reads the full schema (embedding mode only).
+    """
+    if is_fused(parsed):
+        return (extract_all_udf(parsed) if mode == "embedding"
+                else extract_legacy(parsed))
+    if mode != "embedding":
+        raise ValueError("legacy mode reads the fused parse — use "
+                         "extract_from_raw(docs, mode='legacy')")
+    return extract_all(parsed, engine="sql")
 
 
 def run(docs: DataFrame, repartition: bool = True) -> tuple[DataFrame, DataFrame]:
@@ -86,7 +89,7 @@ def run(docs: DataFrame, repartition: bool = True) -> tuple[DataFrame, DataFrame
     if repartition:
         docs = ensure_parallelism(docs)
     parsed = parse_documents(docs)
-    results = extract_parameters(parsed)
+    results = extract_from_raw(docs)
     from .ops.answer import rag_fallback_enabled, with_rag_fallback
     if rag_fallback_enabled():
         # deterministic extractive RAG fallback (reference
@@ -97,39 +100,33 @@ def run(docs: DataFrame, repartition: bool = True) -> tuple[DataFrame, DataFrame
 
 def extract_from_raw(docs: DataFrame, mode: str = "embedding",
                      n_docs: int | None = None) -> DataFrame:
-    """documents(doc_id, spans) → results, choosing the fastest
-    physical form for the resolved engine: with the udf engine the
-    parse and retrieval Python stages FUSE into one MapInPandas (one
-    Arrow round-trip instead of two — the flagship was
-    python-stage-bound, r4 VERDICT #6); the sql engine keeps the plain
-    parse (its retrieval is JVM-side).  Semantically identical to
-    ``extract_parameters(parse_documents(docs))`` either way.
-
-    ``n_docs`` (optional estimated corpus size) lets the 'auto'
-    engine default pick the measured winner at this scale
-    (extract.crif.default_engine)."""
-    from .extract.crif import default_engine
-    engine = default_engine(n_docs)
-    fuse = mode == "embedding" and engine == "udf"
-    if fuse:
-        # r6 (guide §4.1 — ship only the columns/rows the opaque stage
-        # needs): the fused output is consumed exclusively through
-        # extract_all_udf's doc-kind CASE, which emits an EMPTY result
-        # array for every kind other than crif/gstr — so those
-        # documents' spans are never observable downstream and need
-        # not cross the Arrow boundary nor be parsed at all.  Blank
-        # them JVM-side (~40% of the bench corpus is html: −0.5 s of
-        # Arrow transfer + Python parse at 240k docs); the per-doc
-        # result rows are identical either way (parity suite).
-        from .parse import DOC_KIND_SQL, SPAN_TYPE
-        empty = (f"CAST(array() AS "
-                 f"ARRAY<STRUCT<kind: STRING, text: STRING, "
-                 f"media_ref: STRING, offset: INT>>)")
-        docs = docs.withColumn("spans", F.expr(
-            f"CASE WHEN {DOC_KIND_SQL} IN ('crif', 'gstr') "
-            f"THEN spans ELSE {empty} END"))
-    return extract_parameters(parse_documents(docs, fuse_retrieval=fuse),
-                              mode=mode, n_docs=n_docs)
+    """documents(doc_id, spans) → results: THE production extraction
+    path.  The parse, retrieval and every per-parameter scalar come
+    from one fused MapInPandas (one Arrow round-trip — the flagship
+    was python-stage-bound, r4 VERDICT #6), followed by a codegen
+    projection.  Only ``SPARK_GRAFT_ENGINE=sql`` selects the relational
+    engine instead (embedding mode; legacy always reads the fused
+    columns).  ``n_docs`` is an optional corpus-size hint passed on to
+    ``default_engine``."""
+    if mode == "embedding" and default_engine(n_docs) == "sql":
+        return extract_parameters(parse_documents(docs))
+    # r6 (guide §4.1 — ship only the columns/rows the opaque stage
+    # needs): the result projection emits an EMPTY result array for
+    # every kind other than crif/gstr — so those documents' spans are
+    # never observable downstream and need not cross the Arrow
+    # boundary nor be parsed at all.  Blank them JVM-side (~40% of the
+    # bench corpus is html: −0.5 s of Arrow transfer + Python parse at
+    # 240k docs); the per-doc result rows are identical either way
+    # (parity suite).
+    from .parse import DOC_KIND_SQL
+    empty = (f"CAST(array() AS "
+             f"ARRAY<STRUCT<kind: STRING, text: STRING, "
+             f"media_ref: STRING, offset: INT>>)")
+    docs = docs.withColumn("spans", F.expr(
+        f"CASE WHEN {DOC_KIND_SQL} IN ('crif', 'gstr') "
+        f"THEN spans ELSE {empty} END"))
+    return extract_parameters(parse_documents(docs, fuse_retrieval=True),
+                              mode=mode)
 
 
 def formatted_output(results: DataFrame) -> DataFrame:

@@ -13,8 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
-from .parse import parse_documents, DOCUMENTS_SCHEMA
-from .pipeline import extract_parameters
+from .parse import DOCUMENTS_SCHEMA
+from .pipeline import extract_from_raw
 
 
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
@@ -56,10 +56,6 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
               .parquet(input_dir))
 
     def process(batch_df, batch_id: int) -> None:
-        # extract_from_raw, not extract_parameters(parse_documents(..)):
-        # it picks the fused single-Python-stage plan for the udf
-        # engine (r6) — semantically identical either way
-        from .pipeline import extract_from_raw
         results = extract_from_raw(batch_df)
         (results.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(f"{output_dir}/results"))

@@ -8,6 +8,9 @@ Ship the package with --py-files and run:
         jobs/extract_job.py --input <documents parquet/Iceberg path> \
         --output <results dir> [--buckets 4096] [--spans-output <dir>]
 
+Results come from the fused production plan
+(``pipeline.extract_from_raw``, through ``lineage.run_with_lineage``);
+--spans-output comes from the prunable JVM parse of the same input.
 The job is resumable: re-submitting with the same --output continues
 from the lineage manifest (only buckets not yet marked done run).
 """
@@ -40,13 +43,12 @@ def main() -> None:
         spark.conf.set(k, v)
 
     from crego_document_extractor_spark import lineage, pipeline
-    from crego_document_extractor_spark.parse import parse_documents
 
     docs = spark.read.parquet(args.input)
     metrics = lineage.run_with_lineage(docs, args.output, args.buckets)
     if args.spans_output:
-        parsed = parse_documents(docs)
-        pipeline.clean_spans(parsed).write.mode("overwrite").parquet(args.spans_output)
+        (pipeline.clean_spans(pipeline.parse_documents(docs))
+         .write.mode("overwrite").parquet(args.spans_output))
     print(json.dumps(metrics))
     spark.stop()
 

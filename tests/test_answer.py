@@ -56,7 +56,7 @@ def miss_docs(spark):
 
 def test_with_rag_fallback_patches_miss(spark, miss_docs):
     parsed = parse_documents(miss_docs)
-    results = pipeline.extract_parameters(parsed)
+    results = pipeline.extract_from_raw(miss_docs)
     base = {r["param_id"]: r for r in results.collect()}
     target = base["bureau_credit_score"]
     assert target["value_num"] is None  # programmatic miss (no table)
@@ -79,6 +79,6 @@ def test_with_rag_fallback_patches_miss(spark, miss_docs):
 
 def test_rag_fallback_flag_off_is_identity(spark, miss_docs):
     parsed = parse_documents(miss_docs)
-    results = pipeline.extract_parameters(parsed)
+    results = pipeline.extract_from_raw(miss_docs)
     out = A.with_rag_fallback(results, parsed, enabled=False)
     assert out is results

@@ -10,16 +10,19 @@ FIELDS = ("value_num", "value_bool", "value_str", "value_type",
 
 def test_legacy_mode_matches_oracle(spark, docs_path, raw_docs):
     docs_df = pipeline.load_documents(spark, docs_path)
-    parsed = pipeline.parse_documents(docs_df)
     got = {(r["doc_id"], r["param_id"]): r.asDict()
-           for r in pipeline.extract_parameters(parsed, mode="legacy").collect()
-           if r["doc_id"].startswith("crif-")}
+           for r in pipeline.extract_from_raw(docs_df, mode="legacy").collect()}
 
+    # gstr documents keep their embedding-mode rows; other kinds emit none
     exp = {}
     for d in raw_docs:
-        if not d["doc_id"].startswith("crif-"):
+        if d["doc_id"].startswith("crif-"):
+            rows = oracle.extract_crif_legacy(oracle.parse_document(d))
+        elif d["doc_id"].startswith("gstr-"):
+            rows = oracle.extract_gstr(oracle.parse_document(d))
+        else:
             continue
-        for r in oracle.extract_crif_legacy(oracle.parse_document(d)):
+        for r in rows:
             exp[(r["doc_id"], r["param_id"])] = r
 
     assert set(got) == set(exp)
@@ -39,8 +42,7 @@ def test_legacy_weights_differ_from_embedding(spark, docs_path):
     """Legacy uses direct_table=0.95/flag=0.85/computed=1.0 and no
     similarity boost — confidences must differ from embedding mode."""
     docs_df = pipeline.load_documents(spark, docs_path)
-    parsed = pipeline.parse_documents(docs_df)
-    leg = pipeline.extract_parameters(parsed, mode="legacy")
+    leg = pipeline.extract_from_raw(docs_df, mode="legacy")
     assert leg.where("similarity_score IS NOT NULL").count() == 0
     confs = {r["confidence"] for r in
              leg.where("param_id = 'bureau_dpd_30'").collect()}

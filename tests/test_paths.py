@@ -5,6 +5,8 @@ FLAG), checked Spark-vs-oracle."""
 
 import math
 
+import pytest
+
 from crego_document_extractor_spark import oracle
 from crego_document_extractor_spark.parse import DOCUMENTS_SCHEMA
 from crego_document_extractor_spark import pipeline
@@ -92,7 +94,17 @@ def test_chunk_aware_paths_match_oracle(spark):
     assert 0.70 <= suit["similarity_score"] < 0.85
 
 
-def test_duplicate_doc_ids_stay_independent(spark, tmp_path):
+def _relational(docs):
+    from crego_document_extractor_spark.extract.crif import extract_all
+    return extract_all(pipeline.parse_documents(docs), engine="sql")
+
+
+# the shipped plan and the independent cross-check
+FORMS = {"fused": pipeline.extract_from_raw, "relational": _relational}
+
+
+@pytest.mark.parametrize("form", sorted(FORMS))
+def test_duplicate_doc_ids_stay_independent(spark, tmp_path, form):
     """Two input rows sharing a doc_id are two documents (the reference
     processes one request = one document): extraction must preserve the
     row count and per-row values — no cross-row merging on doc_id
@@ -107,28 +119,40 @@ def test_duplicate_doc_ids_stay_independent(spark, tmp_path):
     d2 = pipeline.load_documents(spark, p2)
 
     def rows(df):
-        return sorted(
-            tuple(repr(v) for v in r)
-            for r in pipeline.extract_parameters(
-                pipeline.parse_documents(df)).collect())
+        return sorted(tuple(repr(v) for v in r)
+                      for r in FORMS[form](df).collect())
 
     combined = rows(d1.unionByName(d2))
     separate = sorted(rows(d1) + rows(d2))
     assert combined == separate
 
 
-def test_fused_extract_equals_unfused(spark):
-    """pipeline.extract_from_raw (fused parse+retrieval MapInPandas)
-    must be row-for-row identical to the two-stage plan — the r5
-    fusion is a physical rewrite only."""
-    from crego_document_extractor_spark import corpus, pipeline
-    from crego_document_extractor_spark.parse import parse_documents
-    import tempfile, os
+def test_fused_extract_equals_relational(spark, tmp_path):
+    """pipeline.extract_from_raw (the shipped fused plan) must be
+    row-for-row identical to the independent relational engine on a
+    corpus with mega-documents."""
+    from crego_document_extractor_spark import corpus
 
-    path = os.path.join(tempfile.mkdtemp(), "fuse.parquet")
+    path = str(tmp_path / "fuse.parquet")
     corpus.write_corpus(path, 120, seed=13, big_doc_every=17)
     docs = spark.read.parquet(path)
-    unfused = sorted(map(tuple, pipeline.extract_parameters(
-        parse_documents(docs)).collect()))
+    relational = sorted(map(tuple, _relational(docs).collect()))
     fused = sorted(map(tuple, pipeline.extract_from_raw(docs).collect()))
-    assert fused == unfused
+    assert fused == relational
+
+
+def test_run_plan_is_one_python_stage_without_exchange(spark, raw_docs):
+    """pipeline.run's results under the default engine execute as ONE
+    MapInPandas stage with no Exchange: the shipped plan is scan →
+    blank → fused Python stage → codegen projection."""
+    # as wide as ensure_parallelism's target, so run() adds no
+    # repartition of its own
+    width = spark.sparkContext.defaultParallelism * 2
+    rdd = spark.sparkContext.parallelize(
+        [(d["doc_id"], d["spans"]) for d in raw_docs[:40]], width)
+    docs = spark.createDataFrame(rdd, DOCUMENTS_SCHEMA)
+    _, results = pipeline.run(docs)
+    results.collect()
+    plan = results._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 0, plan
+    assert plan.count("MapInPandas") == 1, plan

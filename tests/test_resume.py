@@ -12,8 +12,7 @@ def _collect(df):
                   .collect())
 
 
-def test_interrupted_run_resumes_idempotently(spark, docs_path, tmp_path):
-    docs = pipeline.load_documents(spark, docs_path)
+def _assert_resume_converges(spark, docs, tmp_path):
     full_dir = str(tmp_path / "full")
     part_dir = str(tmp_path / "partial")
     n_buckets = 16
@@ -43,6 +42,26 @@ def test_interrupted_run_resumes_idempotently(spark, docs_path, tmp_path):
     m4 = lineage.run_with_lineage(docs, part_dir, n_buckets)
     assert m4["buckets_processed"] == 0
     assert _collect(lineage.read_results(spark, part_dir)) == full
+
+
+def test_interrupted_run_resumes_idempotently(spark, docs_path, tmp_path):
+    _assert_resume_converges(
+        spark, pipeline.load_documents(spark, docs_path), tmp_path)
+
+
+def test_lineage_leaves_session_overwrite_mode(spark, docs_path, tmp_path):
+    """The dynamic partition overwrite is a per-write option: a session
+    left on 'static' stays 'static', and resume still converges (a
+    static overwrite would drop the buckets done before the kill)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        _assert_resume_converges(
+            spark, pipeline.load_documents(spark, docs_path), tmp_path)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_manifest_metrics(spark, docs_path, tmp_path):
