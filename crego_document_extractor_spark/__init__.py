@@ -26,8 +26,9 @@ HTTP calls, ``app/services/embeddings.py:25-51``), account parsing and
 the per-parameter values — followed by a codegen projection that
 builds the typed result rows, shuffle-free per document.  The
 clean-span parse is pure JVM SQL, and an independent relational engine
-(``SPARK_GRAFT_ENGINE=sql``) computes the same results with JVM-side
-retrieval and account aggregation.
+computes the same results with JVM-side retrieval and account
+aggregation; it is the cross-check, reached only by calling
+``extract_all(parse_documents(docs), engine="sql")``.
 """
 
 __version__ = "0.1.0"

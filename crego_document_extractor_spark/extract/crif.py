@@ -302,30 +302,22 @@ def extract_legacy(parsed: DataFrame) -> DataFrame:
 
 
 def default_engine(n_docs: int | None = None) -> str:
-    """THE engine-selection point, shared by every entry path:
-    `SPARK_GRAFT_ENGINE` ('udf' — the fused plan, the default — or
-    'sql', the relational engine).  ``n_docs`` is accepted for callers
-    that pass a corpus-size hint; the fused plan wins at every measured
-    size, so it does not change the choice."""
-    import os
-    engine = os.environ.get("SPARK_GRAFT_ENGINE") or "udf"
-    if engine not in ("udf", "sql"):
-        raise ValueError(
-            f"SPARK_GRAFT_ENGINE must be 'udf' or 'sql', got {engine!r}")
-    return engine
+    """The engine every production entry point runs: 'udf', the fused
+    plan.  Kept for ``bench.py``, which reports it; ``n_docs`` is
+    ignored.  The relational engine is reached only by calling it,
+    ``extract_all(parse_documents(docs), engine='sql')``."""
+    return "udf"
 
 
-def extract_all(parsed: DataFrame, engine: str | None = None,
-                n_docs: int | None = None) -> DataFrame:
+def extract_all(parsed: DataFrame, engine: str | None = None) -> DataFrame:
     """Embedding-mode extraction for both document kinds.
 
-    engine=None resolves via ``default_engine(n_docs)``.
-    engine='udf': ``extract_all_udf`` over a fused parse.
+    engine=None or 'udf': ``extract_all_udf`` over a fused parse.
     engine='sql': the relational engine over the full parsed schema —
     retrieval and account aggregation run JVM-side (retrieval_sql.py),
     an INDEPENDENT physical plan; the A9b agreement query
     (test_accuracy.py:79-115 analogue) proves the two agree."""
-    if (engine or default_engine(n_docs)) == "udf":
+    if engine in (None, "udf"):
         return extract_all_udf(parsed)
     from .gstr import with_gstr_columns
     from .retrieval_sql import relational_extract_columns

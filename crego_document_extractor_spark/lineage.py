@@ -87,7 +87,9 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
              .where(F.col("bucket").isin(buckets_subset)
                     if buckets_subset is not None else F.lit(True))
              .groupBy("bucket").agg(F.count("*").alias("n_docs")))
-    rows = (spark.read.parquet(f"{out_dir}/{RESULTS}")
+    # read back with the written schema: when nothing was pending the
+    # write leaves no data file to infer a schema from
+    rows = (spark.read.schema(out.schema).parquet(f"{out_dir}/{RESULTS}")
             .groupBy("bucket").agg(F.count("*").alias("n_rows")))
     manifest = (stats.join(rows, "bucket", "left")
                 .select("bucket",

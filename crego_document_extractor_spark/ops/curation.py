@@ -251,7 +251,10 @@ def duplicate_ngram_report(df: DataFrame, n: int = 8, min_docs: int = 2,
     second doc_id join — `n_grams` is simply count(*) of the same
     exploded distinct grams, so one marker left-join + one aggregate
     yields both columns (values identical: census rows are unique per
-    gram, so the left join never multiplies rows)."""
+    gram, so the left join never multiplies rows).  Both counts are
+    pooled per `doc_id` and joined back to every input row, so that
+    claim assumes unique `doc_id`s: rows sharing one all get the
+    pooled counts."""
     grams = df.select(F.col(id_col).alias("doc_id"),
                       F.explode(F.expr(_word_ngrams(text_col, n)))
                       .alias("gram"))

@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .parse import parse_documents, load_documents
-from .extract.crif import (default_engine, extract_all, extract_all_udf,
-                           extract_legacy, is_fused)
+from .extract.crif import extract_all, extract_all_udf, extract_legacy, is_fused
 
 __all__ = ["load_documents", "parse_documents", "clean_spans",
            "extract_parameters", "run", "formatted_output"]
@@ -104,12 +103,9 @@ def extract_from_raw(docs: DataFrame, mode: str = "embedding",
     path.  The parse, retrieval and every per-parameter scalar come
     from one fused MapInPandas (one Arrow round-trip — the flagship
     was python-stage-bound, r4 VERDICT #6), followed by a codegen
-    projection.  Only ``SPARK_GRAFT_ENGINE=sql`` selects the relational
-    engine instead (embedding mode; legacy always reads the fused
-    columns).  ``n_docs`` is an optional corpus-size hint passed on to
-    ``default_engine``."""
-    if mode == "embedding" and default_engine(n_docs) == "sql":
-        return extract_parameters(parse_documents(docs))
+    projection.  ``n_docs`` is accepted and ignored.  The relational
+    engine is the cross-check, reached only by calling it:
+    ``extract_all(parse_documents(docs), engine='sql')``."""
     # r6 (guide §4.1 — ship only the columns/rows the opaque stage
     # needs): the result projection emits an EMPTY result array for
     # every kind other than crif/gstr — so those documents' spans are

@@ -16,7 +16,7 @@ def get_df(spark, name):
         from crego_document_extractor_spark import pipeline
         docs = spark.read.parquet(os.environ.get(
             "SPARK_GRAFT_CORPUS", "/tmp/spark_graft_bench_corpus_24000.parquet"))
-        return pipeline.extract_from_raw(docs, n_docs=24000)
+        return pipeline.extract_from_raw(docs)
     if name == "clean_spans_pass":
         from crego_document_extractor_spark import pipeline
         from crego_document_extractor_spark.parse import parse_documents

@@ -5,7 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crego_document_extractor_spark import corpus, oracle  # noqa: E402
+from crego_document_extractor_spark import corpus, oracle, pipeline  # noqa: E402
 from crego_document_extractor_spark.session import get_spark  # noqa: E402
 
 N_DOCS = 200
@@ -51,21 +51,28 @@ def expected_rows(expected):
     return out
 
 
-@pytest.fixture(scope="session", params=["udf", "sql"])
-def pipeline_outputs(spark, docs_path, request):
-    """Runs the full pipeline under BOTH retrieval engines — the
-    Arrow-UDF default and the pure-JVM relational plan — so every
-    downstream parity test asserts oracle equality for each."""
-    from crego_document_extractor_spark import pipeline
+def _relational(docs):
+    from crego_document_extractor_spark.extract.crif import extract_all
+    return extract_all(pipeline.parse_documents(docs), engine="sql")
 
-    os.environ["SPARK_GRAFT_ENGINE"] = request.param
-    try:
-        docs_df = pipeline.load_documents(spark, docs_path)
-        spans_df, results_df = pipeline.run(docs_df)
-        spans = {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
-                 for r in spans_df.collect()}
-        rows = {(r["doc_id"], r["param_id"]): r.asDict()
-                for r in results_df.collect()}
-    finally:
-        os.environ.pop("SPARK_GRAFT_ENGINE", None)
+
+#: the two result forms: the shipped fused plan and the independent
+#: relational cross-check
+FORMS = {"fused": pipeline.extract_from_raw, "relational": _relational}
+#: each form's ``extract_all`` engine name, the pipeline_outputs test id
+ENGINES = {"fused": "udf", "relational": "sql"}
+
+
+@pytest.fixture(scope="session", params=sorted(FORMS), ids=ENGINES.get)
+def pipeline_outputs(spark, docs_path, request):
+    """Results of BOTH forms, so every downstream parity test asserts
+    oracle equality for each; the spans come from the JVM parse, the
+    same for both."""
+    docs_df = pipeline.ensure_parallelism(
+        pipeline.load_documents(spark, docs_path))
+    spans_df = pipeline.clean_spans(pipeline.parse_documents(docs_df))
+    spans = {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
+             for r in spans_df.collect()}
+    rows = {(r["doc_id"], r["param_id"]): r.asDict()
+            for r in FORMS[request.param](docs_df).collect()}
     return spans, rows

@@ -6,6 +6,7 @@ tables, colon-less field lines, unicode padding)."""
 
 import math
 
+from conftest import FORMS
 from hypothesis import given, settings, strategies as st
 
 from crego_document_extractor_spark import oracle
@@ -69,16 +70,12 @@ def test_fuzzed_documents_match_oracle(spark, docs_spec):
         [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
                         for s in d["spans"]]) for d in docs],
         schema=DOCUMENTS_SCHEMA)
-    # fuzz the RELATIONAL engine — it is the independent SQL
-    # implementation; the UDF engine is covered by the parametrized
+    # fuzz the RELATIONAL form — it is the independent SQL
+    # implementation; the fused plan is covered by the parametrized
     # conftest fixture and the A9b agreement query
-    import os
-    os.environ["SPARK_GRAFT_ENGINE"] = "sql"
-    try:
-        spans_df, results_df = pipeline.run(df, repartition=False)
-        exp = {d["doc_id"]: oracle.extract_document(d) for d in docs}
-    finally:
-        os.environ.pop("SPARK_GRAFT_ENGINE", None)
+    spans_df = pipeline.clean_spans(pipeline.parse_documents(df))
+    results_df = FORMS["relational"](df)
+    exp = {d["doc_id"]: oracle.extract_document(d) for d in docs}
 
     got_spans = {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
                  for r in spans_df.collect()}

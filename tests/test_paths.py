@@ -6,6 +6,7 @@ FLAG), checked Spark-vs-oracle."""
 import math
 
 import pytest
+from conftest import FORMS
 
 from crego_document_extractor_spark import oracle
 from crego_document_extractor_spark.parse import DOCUMENTS_SCHEMA
@@ -42,24 +43,18 @@ DOC_FLAG_CHUNK = _doc("crif-900002", [
 
 
 def _run(spark, docs):
-    import os
     df = spark.createDataFrame([(d["doc_id"], [tuple(s.values()) for s in
                                                [{"kind": x["kind"], "text": x["text"],
                                                  "media_ref": x["media_ref"],
                                                  "offset": x["offset"]}
                                                 for x in d["spans"]]])
                                 for d in docs], schema=DOCUMENTS_SCHEMA)
-    # pin the RELATIONAL engine: these path tests target the
-    # independent SQL implementations (the UDF engine shares the
-    # oracle's python semantics by construction and is covered by the
-    # engine-parametrized conftest fixture)
-    os.environ["SPARK_GRAFT_ENGINE"] = "sql"
-    try:
-        _, results = pipeline.run(df, repartition=False)
-        return {(r["doc_id"], r["param_id"]): r.asDict()
-                for r in results.collect()}
-    finally:
-        os.environ.pop("SPARK_GRAFT_ENGINE", None)
+    # the RELATIONAL form: these path tests target the independent SQL
+    # implementations (the fused plan shares the oracle's python
+    # semantics by construction and is covered by the parametrized
+    # conftest fixture)
+    return {(r["doc_id"], r["param_id"]): r.asDict()
+            for r in FORMS["relational"](df).collect()}
 
 
 def _expected(docs):
@@ -92,15 +87,6 @@ def test_chunk_aware_paths_match_oracle(spark):
     assert suit["source"] == "Account Remarks (1/1 accounts in chunk)"
     assert math.isclose(suit["confidence"], 0.5 * 0.9, abs_tol=1e-12)  # chunk_aware × boost(0.701)
     assert 0.70 <= suit["similarity_score"] < 0.85
-
-
-def _relational(docs):
-    from crego_document_extractor_spark.extract.crif import extract_all
-    return extract_all(pipeline.parse_documents(docs), engine="sql")
-
-
-# the shipped plan and the independent cross-check
-FORMS = {"fused": pipeline.extract_from_raw, "relational": _relational}
 
 
 @pytest.mark.parametrize("form", sorted(FORMS))
@@ -136,15 +122,12 @@ def test_fused_extract_equals_relational(spark, tmp_path):
     path = str(tmp_path / "fuse.parquet")
     corpus.write_corpus(path, 120, seed=13, big_doc_every=17)
     docs = spark.read.parquet(path)
-    relational = sorted(map(tuple, _relational(docs).collect()))
+    relational = sorted(map(tuple, FORMS["relational"](docs).collect()))
     fused = sorted(map(tuple, pipeline.extract_from_raw(docs).collect()))
     assert fused == relational
 
 
-def test_run_plan_is_one_python_stage_without_exchange(spark, raw_docs):
-    """pipeline.run's results under the default engine execute as ONE
-    MapInPandas stage with no Exchange: the shipped plan is scan →
-    blank → fused Python stage → codegen projection."""
+def _assert_run_ships_fused_plan(spark, raw_docs):
     # as wide as ensure_parallelism's target, so run() adds no
     # repartition of its own
     width = spark.sparkContext.defaultParallelism * 2
@@ -156,3 +139,18 @@ def test_run_plan_is_one_python_stage_without_exchange(spark, raw_docs):
     plan = results._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 0, plan
     assert plan.count("MapInPandas") == 1, plan
+
+
+def test_run_plan_is_one_python_stage_without_exchange(spark, raw_docs):
+    """pipeline.run's results execute as ONE MapInPandas stage with no
+    Exchange: the shipped plan is scan → blank → fused Python stage →
+    codegen projection."""
+    _assert_run_ships_fused_plan(spark, raw_docs)
+
+
+def test_run_plan_ignores_engine_env(spark, raw_docs, monkeypatch):
+    """No environment variable moves production onto the relational
+    engine: with the retired SPARK_GRAFT_ENGINE=sql set, pipeline.run
+    still ships the fused plan."""
+    monkeypatch.setenv("SPARK_GRAFT_ENGINE", "sql")
+    _assert_run_ships_fused_plan(spark, raw_docs)

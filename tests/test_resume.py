@@ -2,6 +2,8 @@
 (north_rule: per-partition checkpointed lineage + metrics; the Spark
 form of the reference's parse cache, cache.py:36-125)."""
 
+import pytest
+
 from crego_document_extractor_spark import lineage, pipeline
 
 
@@ -62,6 +64,26 @@ def test_lineage_leaves_session_overwrite_mode(spark, docs_path, tmp_path):
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("nothing_pending", ["empty_input", "empty_subset"])
+def test_run_with_nothing_pending(spark, docs_path, tmp_path, nothing_pending):
+    """A run with nothing pending on a fresh output dir processes no
+    bucket, and a later full run into the same dir converges to a fresh
+    run."""
+    docs = pipeline.load_documents(spark, docs_path)
+    out = str(tmp_path / "out")
+    if nothing_pending == "empty_input":
+        m = lineage.run_with_lineage(docs.limit(0), out, 16)
+    else:
+        m = lineage.run_with_lineage(docs, out, 16, buckets_subset=[])
+    assert m["buckets_processed"] == 0
+
+    fresh = str(tmp_path / "fresh")
+    lineage.run_with_lineage(docs, fresh, 16)
+    assert lineage.run_with_lineage(docs, out, 16)["buckets_processed"] == 16
+    assert (_collect(lineage.read_results(spark, out))
+            == _collect(lineage.read_results(spark, fresh)))
 
 
 def test_manifest_metrics(spark, docs_path, tmp_path):
