@@ -7,8 +7,9 @@ like the reference's single sales record (gstr.py:31-37).
 ``with_gstr_columns`` / ``gstr_result_structs`` are split so the
 relational engine (crif.extract_all) can compute the primitive g_*
 columns BEFORE its account aggregation and build the result structs
-after it; the fused parse computes the same primitives in Python
-(parse._gstr_primitives).
+after it; the fused parse builds the same primitives in Python from
+the oracle's own ``semantics.gstr_sales`` and ``gstr_month``
+(parse._fused_row).
 """
 
 from __future__ import annotations

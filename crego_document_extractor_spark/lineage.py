@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .pipeline import extract_from_raw
 
@@ -100,11 +100,14 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
                         F.lit(attempt).alias("attempt"),
                         F.lit(run_id).alias("run_id"),
                         F.current_timestamp().alias("completed_at")))
-    manifest.write.mode("append").parquet(f"{out_dir}/{MANIFEST}")
-
-    n_done = manifest.count()
+    # the bucket count is observed on the manifest write itself: a
+    # count() afterwards would re-run the input re-scan, the read-back
+    # and the join
+    written = Observation("manifest")
+    (manifest.observe(written, F.count(F.lit(1)).alias("n"))
+        .write.mode("append").parquet(f"{out_dir}/{MANIFEST}"))
     return {"run_id": run_id, "attempt": attempt,
-            "buckets_processed": n_done, "wall_ms": wall_ms,
+            "buckets_processed": written.get["n"], "wall_ms": wall_ms,
             "buckets_previously_done": len(done)}
 
 

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import semantics as S
+from ..extract.retrieval import candidate_pool, retrieve_rows
 from ..specs import PARAMETER_SPECS, query_text
 
 NOT_FOUND = "NOT_FOUND"
@@ -119,38 +120,40 @@ def coerce(value: str, etype: str):
 
 _FB_SCHEMA = ("doc_id string, param_id string, fb_num double, "
               "fb_bool boolean, fb_str string, fb_type string, "
-              "fb_found boolean, score double")
+              "score double")
+_FB_COLUMNS = [c.split()[0] for c in _FB_SCHEMA.split(", ")]
 
 
 def _answer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Per document with an eligible miss: retrieve exactly as the fused
+    stage does, then answer each missed parameter that has a best chunk
+    from that chunk's full text; only found answers are emitted."""
     for pdf in batches:
-        out = {k: [] for k in ("doc_id", "param_id", "fb_num", "fb_bool",
-                               "fb_str", "fb_type", "fb_found")}
-        # the retrieval score rides through the answer stage (r6): the
-        # old plan joined the answers back to a SECOND evaluation of
-        # the whole retr subtree just to reattach `score` — one more
-        # shuffle join and a duplicate run of the retrieval UDF
-        out["score"] = pdf["score"].tolist()
-        for doc_id, pid, content in zip(pdf["doc_id"], pdf["param_id"],
-                                        pdf["content"]):
-            ans = extractive_answer(pid, content)
-            etype = _SPEC_BY_ID[pid].get("expected_type")
-            if ans == NOT_FOUND:
-                num = b = s = None
-                found = False
-            else:
+        rows = []
+        for doc_id, kind, tables, chunks, miss in zip(
+                pdf["doc_id"], pdf["doc_kind"], pdf["tables"],
+                pdf["chunks"], pdf["miss"]):
+            miss = set(miss)
+            content = {("table", t["id"]): t["raw"] for t in tables}
+            content.update({("text", c["chunk_idx"]): c["text"]
+                            for c in chunks})
+            for r in retrieve_rows(candidate_pool(kind, tables, chunks)):
+                pid = r["param_id"]
+                if r["score"] is None or pid not in miss:
+                    continue
+                ans = extractive_answer(
+                    pid, content.get((r["ctype"], r["ref_idx"])))
+                if ans == NOT_FOUND:
+                    continue
+                etype = _SPEC_BY_ID[pid].get("expected_type")
                 num, b, s = coerce(ans, etype)
-                num = float(num) if num is not None else None
-                found = True
-            out["doc_id"].append(doc_id)
-            out["param_id"].append(pid)
-            out["fb_num"].append(num)
-            out["fb_bool"].append(b)
-            out["fb_str"].append(s)
-            out["fb_type"].append(
-                "str" if s is not None else (etype or "str"))
-            out["fb_found"].append(found)
-        yield pd.DataFrame(out)
+                # the retrieval score rides through the answer stage,
+                # so the patch needs no second retrieval
+                rows.append((doc_id, pid,
+                             None if num is None else float(num), b, s,
+                             "str" if s is not None else (etype or "str"),
+                             r["score"]))
+        yield pd.DataFrame(rows, columns=_FB_COLUMNS)
 
 
 def with_rag_fallback(results: DataFrame, parsed: DataFrame,
@@ -164,43 +167,38 @@ def with_rag_fallback(results: DataFrame, parsed: DataFrame,
     original failed result) or when the flag is off.
 
     Plan shape: the eligible slice is typically tiny (a handful of
-    (doc, param) misses), so the answer stage is a narrow MapInPandas
-    over an exploded retr join keyed (doc_id, param_id); the patch is
-    a left join back to `results` — broadcastable whenever the miss
-    set is small."""
+    (doc, param) misses), so the full parse's tables and chunks are
+    joined to just the docs with a miss, one narrow MapInPandas
+    retrieves and answers per document, and the patch is a left join
+    back to `results` — broadcastable whenever the miss set is
+    small."""
     if enabled is None:
         enabled = rag_fallback_enabled()
     if not enabled:
         return results
-    from ..extract.retrieval import with_retrieval
     from ..extract import sqlexpr as X
 
-    retr = (with_retrieval(parsed)
-            .select("doc_id", "tables", "chunks",
-                    F.explode("retr").alias("r"))
-            .select("doc_id", "r.param_id", "r.ctype", "r.ref_idx",
-                    "r.score",
-                    F.expr("CASE WHEN r.ctype = 'table' THEN "
-                           "try_element_at(filter(tables, "
-                           "t -> t.id = r.ref_idx), 1).raw "
-                           "ELSE try_element_at(filter(chunks, "
-                           "c -> c.chunk_idx = r.ref_idx), 1).text END")
-                    .alias("content"))
-            .where("score IS NOT NULL"))
     policy_ids = ", ".join(
         f"'{s['param_id']}'" for s in PARAMETER_SPECS
         if s["category"] == "policy")
     # reference eligibility (crif.py:190-206): value is None AND a
-    # best chunk exists (the retr semi-join below); policy params
-    # never reach the fallback (handled before _extract_with_embeddings)
-    eligible = (results
-                .where("value_num IS NULL AND value_bool IS NULL "
-                       "AND value_str IS NULL")
-                .where(f"param_id NOT IN ({policy_ids})")
-                .select("doc_id", "param_id"))
-    answers = (retr.join(eligible, ["doc_id", "param_id"], "left_semi")
-               .mapInPandas(_answer_batches, schema=_FB_SCHEMA)
-               .where("fb_found"))
+    # best chunk exists (checked per parameter in the answer stage);
+    # policy params never reach the fallback (handled before
+    # _extract_with_embeddings)
+    misses = (results
+              .where("value_num IS NULL AND value_bool IS NULL "
+                     "AND value_str IS NULL")
+              .where(f"param_id NOT IN ({policy_ids})")
+              .groupBy("doc_id")
+              .agg(F.collect_set("param_id").alias("miss")))
+    # only the tables' candidate fields cross the Arrow boundary: their
+    # nested columns/rows are never read here, and shipping the full
+    # struct segfaulted the worker's Arrow→pandas conversion
+    answers = (parsed.select("doc_id", "doc_kind", F.expr(
+                   "transform(tables, t -> named_struct("
+                   "'id', t.id, 'raw', t.raw))").alias("tables"), "chunks")
+               .join(misses, "doc_id")
+               .mapInPandas(_answer_batches, schema=_FB_SCHEMA))
     patch = (answers
              .select("doc_id", "param_id", "fb_num", "fb_bool", "fb_str",
                      "fb_type",

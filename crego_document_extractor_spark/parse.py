@@ -8,10 +8,14 @@
 * ``tables``       ordered table structs, id=enumerate (parser.py:90-106)
 * ``chunks``       header-segmented chunks (parser.py:107-124)
 
-Implemented as ONE ``mapInPandas`` stage: Arrow-batched in and out, no
-per-row Python UDFs, no shuffle.  The Python body delegates to the
-shared pure-function core in :mod:`..semantics` so the parse semantics
-have a single definition.  All downstream extraction is JVM-side SQL.
+Two physical forms share the :mod:`..semantics` definitions:
+
+* ``parse_documents(docs)``: pure JVM SQL (``parse_documents_jvm``),
+  prunable per consumer, no Python boundary;
+* ``parse_documents(docs, fuse_retrieval=True)``: the flagship's ONE
+  ``mapInPandas`` stage — ``_fused_row`` maps each document to one row
+  of ``FUSED_SCHEMA`` (parse, retrieval, per-parameter scalars), no
+  per-row Python UDFs, no shuffle.
 """
 
 from __future__ import annotations
@@ -23,6 +27,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from . import semantics as S
+from .extract.crif import _SUMMARY_FIELDS
+from .extract.retrieval import candidate_pool, retrieve_rows
+from .specs import PARAMETER_SPECS
 
 SPAN_TYPE = T.StructType([
     T.StructField("kind", T.StringType()),
@@ -78,46 +85,24 @@ DOC_KIND_SQL = (
 )
 
 
+def _span_dicts(spans) -> list[dict]:
+    return [{"kind": s["kind"], "text": s["text"],
+             "media_ref": s["media_ref"], "offset": int(s["offset"])}
+            for s in spans]
+
+
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        out = {
-            "doc_id": [], "doc_kind": [], "n_spans": [],
-            "clean_spans": [], "text": [], "tables": [], "chunks": [],
-        }
+        rows = []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            span_dicts = [
-                {"kind": s["kind"], "text": s["text"],
-                 "media_ref": s["media_ref"], "offset": int(s["offset"])}
-                for s in spans
-            ]
-            cs = S.clean_spans(span_dicts)
-            tables = [
-                {"id": t["id"], "page": t["page"], "columns": t["columns"],
-                 "rows": t["rows"], "raw": t["raw"]}
-                for t in S.build_tables(cs)
-            ]
-            chunks = [
-                {"chunk_idx": c["chunk_idx"], "header": c["header"],
-                 "text": c["text"]}
-                for c in S.build_chunks(cs)
-            ]
-            out["doc_id"].append(doc_id)
-            out["doc_kind"].append(_doc_kind(doc_id))
-            out["n_spans"].append(len(span_dicts))
-            out["clean_spans"].append(cs)
-            out["text"].append(S.render_text(cs))
-            out["tables"].append(tables)
-            out["chunks"].append(chunks)
-        yield pd.DataFrame(out)
+            cs = S.clean_spans(_span_dicts(spans))
+            rows.append({"doc_id": doc_id, "doc_kind": _doc_kind(doc_id),
+                         "n_spans": len(spans), "clean_spans": cs,
+                         "text": S.render_text(cs),
+                         "tables": S.build_tables(cs),
+                         "chunks": S.build_chunks(cs)})
+        yield pd.DataFrame(rows, columns=PARSED_SCHEMA.fieldNames())
 
-
-#: per-doc account-aggregate columns pre-flattened by the fused stage
-#: (names/types mirror the relational engine's aggregation exactly,
-#: extract/retrieval_sql.py)
-_ACCT_AGG_COLS = ("n_accounts", "rep_dpd30", "rep_dpd60", "rep_dpd90",
-                  "rep_live_plbl", "rep_m_bureau_suit_filed",
-                  "rep_m_bureau_wilful_default",
-                  "rep_m_bureau_settlement_writeoff")
 
 #: chunk-aware flag parameters (crif_models.py:52-60 predicates — the
 #: same three the SQL engine's X.FLAG_PREDS encodes)
@@ -126,6 +111,40 @@ _FLAG_FNS = {
     "bureau_wilful_default": S.has_wilful_default,
     "bureau_settlement_writeoff": S.has_settlement_writeoff,
 }
+
+
+def _fused_fields() -> list[T.StructField]:
+    """The fused stage's output format, declared once and in column
+    order: the Spark schema of ``parse_documents(docs,
+    fuse_retrieval=True)`` and the column order of every batch the
+    stage yields.  Per doc: the report values and account aggregates
+    (types mirror the relational engine's, extract/retrieval_sql.py:
+    account counts int, money cells double), every per-parameter scalar
+    extract_all_udf's result builders consume (bscore_i, cv_i/bt_id_i,
+    nc_i/mc_i) and the four GSTR primitives."""
+    s, i32, f64, b = (T.StringType(), T.IntegerType(), T.DoubleType(),
+                      T.BooleanType())
+    cols = [("doc_id", s), ("doc_kind", s),
+            ("rep_score", i32), ("rep_inquiries", i32)]
+    cols += [(f"rep_sum_{f}", i32 if f.endswith("accounts") else f64)
+             for f in _SUMMARY_FIELDS]
+    cols += [("n_accounts", i32), ("rep_dpd30", i32), ("rep_dpd60", i32),
+             ("rep_dpd90", i32), ("rep_live_plbl", b)]
+    cols += [(f"rep_m_{pid}", i32) for pid in _FLAG_FNS]
+    for i, spec in enumerate(PARAMETER_SPECS):
+        if spec["category"] == "policy":
+            continue
+        cols.append((f"bscore_{i}", f64))
+        if spec["category"] == "direct":
+            cols += [(f"cv_{i}", f64), (f"bt_id_{i}", i32)]
+        elif spec["param_id"] in _FLAG_FNS:
+            cols += [(f"nc_{i}", i32), (f"mc_{i}", i32)]
+    cols += [("g_month", s), ("g_found", b), ("g_page", i32),
+             ("g_sales", f64)]
+    return [T.StructField(name, typ) for name, typ in cols]
+
+
+FUSED_SCHEMA = T.StructType(_fused_fields())
 
 
 def _direct_cv(pid: str, t: dict):
@@ -149,167 +168,91 @@ def _direct_cv(pid: str, t: dict):
     raise KeyError(pid)
 
 
-def _flat_fields() -> list:
-    """(name, sparktype) for every per-parameter scalar the fused
-    stage pre-flattens — exactly the columns extract_all_udf's result
-    builders consume (bscore_i, cv_i/bt_id_i, nc_i/mc_i) plus the four
-    GSTR primitives."""
-    from .specs import PARAMETER_SPECS
-    fields = []
+def _fused_row(doc_id: str, spans) -> dict:
+    """One document → its fused output row (``FUSED_SCHEMA``): kind,
+    clean spans, tables, chunks, report values, account aggregates,
+    retrieval, the per-parameter scalars and, for gstr docs, the GSTR
+    primitives.  Every value comes from the semantics functions the
+    oracle uses (retrieve_rows / semantics extractors), so
+    fused-vs-oracle parity is by shared definition; the relational
+    engine is the independent physical form, cross-checked by the A9b
+    agreement query and tests/test_paths.py."""
+    kind = _doc_kind(doc_id)
+    cs = S.clean_spans(_span_dicts(spans))
+    tables = S.build_tables(cs)
+    chunks = S.build_chunks(cs)
+    # report-level table-signature values (crif_parser.py:28-127)
+    summary = S.account_summary(tables)
+    row = {"doc_id": doc_id, "doc_kind": kind,
+           "rep_score": S.bureau_score(tables),
+           "rep_inquiries": S.credit_inquiries(tables),
+           **{f"rep_sum_{f}": summary[f] for f in _SUMMARY_FIELDS}}
+    # ACCOUNT aggregates (parse_crif_report, crif_parser.py:7-25): one
+    # Account-Information chunk = one account; parse_account returns
+    # None on an empty Account Type — the validity the SQL path
+    # filters on
+    accts = [a for c in chunks
+             if c["header"].startswith("Account Information")
+             for a in (S.parse_account(c["text"]),) if a]
+    row.update(n_accounts=len(accts),
+               rep_dpd30=sum(a["worst_dpd"] >= 30 for a in accts),
+               rep_dpd60=sum(a["worst_dpd"] >= 60 for a in accts),
+               rep_dpd90=sum(a["worst_dpd"] >= 90 for a in accts),
+               rep_live_plbl=any(S.is_live_pl_bl(a) for a in accts))
+    for pid, fn in _FLAG_FNS.items():
+        row[f"rep_m_{pid}"] = sum(fn(a["remarks"]) for a in accts)
+    # per-parameter scalars (crif.py:311-426 chunk-aware paths) from
+    # the winning candidate
+    retr = retrieve_rows(candidate_pool(kind, tables, chunks))
+    tab_by_id = {t["id"]: t for t in tables}
+    chunk_by_idx = {c["chunk_idx"]: c for c in chunks}
     for i, spec in enumerate(PARAMETER_SPECS):
-        if spec["category"] == "policy":
+        pid, cat = spec["param_id"], spec["category"]
+        if cat == "policy":
             continue
-        fields.append((f"bscore_{i}", T.DoubleType()))
-        if spec["category"] == "direct":
-            fields.append((f"cv_{i}", T.DoubleType()))
-            fields.append((f"bt_id_{i}", T.IntegerType()))
-        elif spec["category"] == "flag" and spec["param_id"] in _FLAG_FNS:
-            fields.append((f"nc_{i}", T.IntegerType()))
-            fields.append((f"mc_{i}", T.IntegerType()))
-    fields += [("g_month", T.StringType()), ("g_found", T.BooleanType()),
-               ("g_page", T.IntegerType()), ("g_sales", T.DoubleType())]
-    return fields
-
-
-def _gstr_primitives(text: str, tables: list[dict]) -> tuple:
-    """Python twin of gstr.with_gstr_columns's four primitives
-    (g_month, g_found, g_page, g_sales — gstr.py:39-155), built from
-    the same semantics helpers the oracle's ``gstr_sales`` uses, so the
-    fused plan and the SQL forms stay agreement-checked end-to-end."""
-    g_month = S.gstr_month(text)
-    tbl = next((t for t in tables if S.gstr_table_matches(t)), None)
-    if tbl is None:
-        return g_month, False, None, None
-    row = next((r for r in tbl["rows"]
-                if "(a)" in " ".join(str(x) for x in r).lower()
-                or "outward taxable supplies"
-                in " ".join(str(x) for x in r).lower()), None)
-    if row is None:
-        return g_month, False, tbl["page"], None
-    cols = tbl["columns"]
-    idx = next((i for i, c in enumerate(cols)
-                if "taxable" in str(c).lower() and "value" in str(c).lower()),
-               -1)
-    if idx == -1 and len(cols) > 1:
-        idx = 1  # idx stays -1 (last cell) for 0/1-column tables
-    cell = row[idx] if -len(row) <= idx < len(row) else None
-    return (g_month, True, tbl["page"],
-            S.clean_currency("" if cell is None else str(cell)))
+        r = retr[i]
+        row[f"bscore_{i}"] = r["score"]
+        won = r["score"] is not None
+        if cat == "direct":
+            t = (tab_by_id.get(r["ref_idx"])
+                 if won and r["ctype"] == "table" else None)
+            cv = None if t is None else _direct_cv(pid, t)
+            row[f"cv_{i}"] = None if cv is None else float(cv)
+            row[f"bt_id_{i}"] = None if t is None else t["id"]
+        elif pid in _FLAG_FNS:
+            c = (chunk_by_idx.get(r["ref_idx"])
+                 if won and r["ctype"] == "text" else None)
+            # crif.py:395-401 sub-block split
+            blocks = ([] if c is None
+                      else c["text"].split("Account Number:")[1:])
+            chunk_accts = [a for b in blocks
+                           for a in (S.parse_account("Account Number:" + b),)
+                           if a]
+            row[f"nc_{i}"] = len(chunk_accts)
+            row[f"mc_{i}"] = sum(1 for a in chunk_accts
+                                 if _FLAG_FNS[pid](a["remarks"]))
+    # GSTR primitives (gstr.with_gstr_columns), read only for gstr docs
+    # (crif.extract_all); gstr_month is the rendered text's only reader
+    gstr = kind == "gstr"
+    sales = (S.gstr_sales(tables) if gstr else None) or {}
+    row.update(g_month=S.gstr_month(S.render_text(cs)) if gstr else None,
+               g_found=bool(sales), g_page=sales.get("page"),
+               g_sales=sales.get("value"))
+    return row
 
 
 def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused parse + retrieval + FULL per-parameter pre-flatten.
-
-    One Python worker pass computes the parsed structure, the
-    per-parameter best chunk, AND every scalar the extraction result
-    builders consume — stage profiling showed the flagship
-    python-stage-bound with the nested tables/chunks/retr arrays'
-    pandas→Arrow conversion and the JVM-side interpreted-HOF lookups
-    (19 filter(tables/chunks) calls) as the residual cost after the r5
-    fusion, so the fused payload is now ~50 primitive columns and the
-    JVM side is pure codegen CASE/concat over them.  Semantics are
-    shared function-for-function with the oracle (retrieve_rows /
-    semantics extractors); the relational engine is the independent
-    physical form, cross-checked by the A9b agreement query and the
-    fused==relational parity test (tests/test_paths.py)."""
-    from .extract.retrieval import candidate_pool, retrieve_rows
-    from .specs import PARAMETER_SPECS
-
-    for pdf in _parse_batches(batches):
-        # report-level table-signature values (crif_parser.py:28-127)
-        summaries = [S.account_summary(t) for t in pdf["tables"]]
-        rep = {
-            "rep_score": [S.bureau_score(t) for t in pdf["tables"]],
-            "rep_inquiries": [S.credit_inquiries(t)
-                              for t in pdf["tables"]],
-        }
-        for fld in ("total_accounts", "active_accounts",
-                    "total_current_balance", "total_overdue_amount",
-                    "total_writeoff_amount"):
-            rep[f"rep_sum_{fld}"] = [s[fld] for s in summaries]
-        # ACCOUNT aggregates (parse_crif_report, crif_parser.py:7-25):
-        # one Account-Information chunk = one account, parse_account
-        # returns None on empty Account Type — the same validity the
-        # SQL path filters on.  Pre-flattening these keeps the shipped
-        # plan shuffle-free; the relational engine aggregates the same
-        # values JVM-side (extract/retrieval_sql.py).
-        for k in _ACCT_AGG_COLS:
-            rep[k] = []
-        for chunks in pdf["chunks"]:
-            accts = [a for c in chunks
-                     if c["header"].startswith("Account Information")
-                     for a in (S.parse_account(c["text"]),) if a]
-            rep["n_accounts"].append(len(accts))
-            rep["rep_dpd30"].append(
-                sum(a["worst_dpd"] >= 30 for a in accts))
-            rep["rep_dpd60"].append(
-                sum(a["worst_dpd"] >= 60 for a in accts))
-            rep["rep_dpd90"].append(
-                sum(a["worst_dpd"] >= 90 for a in accts))
-            rep["rep_live_plbl"].append(
-                any(S.is_live_pl_bl(a) for a in accts))
-            rep["rep_m_bureau_suit_filed"].append(
-                sum(S.has_suit_filed(a["remarks"]) for a in accts))
-            rep["rep_m_bureau_wilful_default"].append(
-                sum(S.has_wilful_default(a["remarks"]) for a in accts))
-            rep["rep_m_bureau_settlement_writeoff"].append(
-                sum(S.has_settlement_writeoff(a["remarks"]) for a in accts))
-        # per-parameter flat scalars (crif.py:311-426 chunk-aware paths)
-        flat = {name: [] for name, _ in _flat_fields()}
-        for kind, text, tables, chunks in zip(
-                pdf["doc_kind"], pdf["text"], pdf["tables"], pdf["chunks"]):
-            retr = retrieve_rows(candidate_pool(kind, tables, chunks))
-            tab_by_id = {t["id"]: t for t in tables}
-            chunk_by_idx = {c["chunk_idx"]: c for c in chunks}
-            for i, spec in enumerate(PARAMETER_SPECS):
-                if spec["category"] == "policy":
-                    continue
-                r = retr[i]
-                score = r["score"]
-                flat[f"bscore_{i}"].append(score)
-                if spec["category"] == "direct":
-                    cv = bt_id = None
-                    if score is not None and r["ctype"] == "table":
-                        t = tab_by_id.get(r["ref_idx"])
-                        if t is not None:
-                            bt_id = t["id"]
-                            cv = _direct_cv(spec["param_id"], t)
-                    flat[f"cv_{i}"].append(
-                        None if cv is None else float(cv))
-                    flat[f"bt_id_{i}"].append(bt_id)
-                elif (spec["category"] == "flag"
-                      and spec["param_id"] in _FLAG_FNS):
-                    nc = mc = 0
-                    if score is not None and r["ctype"] == "text":
-                        c = chunk_by_idx.get(r["ref_idx"])
-                        if c is not None:
-                            # crif.py:395-401 sub-block split
-                            blocks = c["text"].split("Account Number:")[1:]
-                            accts = [
-                                a for a in
-                                (S.parse_account("Account Number:" + b)
-                                 for b in blocks) if a]
-                            nc = len(accts)
-                            fn = _FLAG_FNS[spec["param_id"]]
-                            mc = sum(1 for a in accts if fn(a["remarks"]))
-                    flat[f"nc_{i}"].append(nc)
-                    flat[f"mc_{i}"].append(mc)
-            if kind == "gstr":
-                gm, gf, gp, gs = _gstr_primitives(text, tables)
-            else:  # consumed only under doc_kind='gstr' (crif.extract_all)
-                gm, gf, gp, gs = None, False, None, None
-            flat["g_month"].append(gm)
-            flat["g_found"].append(gf)
-            flat["g_page"].append(gp)
-            flat["g_sales"].append(gs)
-        # the fused payload is SLIM: the nested clean_spans/tables/
-        # chunks/retr arrays and the full text — the bulk of the
-        # pandas→Arrow conversion cost — never cross the boundary;
-        # plain parses keep the full schema for the span-equality
-        # deliverable
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"], "doc_kind": pdf["doc_kind"],
-            **rep, **flat})
+    """The fused stage: one ``_fused_row`` per document, one DataFrame
+    per Arrow batch.  The payload is ~50 primitive columns — the nested
+    clean spans, tables and chunks and the text never cross the Arrow
+    boundary back, and the JVM side is a pure codegen projection over
+    them (extract_all_udf)."""
+    names = FUSED_SCHEMA.fieldNames()
+    for pdf in batches:
+        yield pd.DataFrame(
+            [_fused_row(doc_id, spans)
+             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])],
+            columns=names)
 
 
 # ---------------------------------------------------------------------------
@@ -495,49 +438,39 @@ def parse_documents(docs: DataFrame, fuse_retrieval: bool = False) -> DataFrame:
     spark.sql.execution.arrow.maxRecordsPerBatch.
 
     ``fuse_retrieval=True`` emits the FULLY PRE-FLATTENED extraction
-    input from the SAME Python stage: per-parameter best-chunk scores
-    and chunk-aware values (bscore/cv/bt_id/nc/mc), report + account
-    aggregates, and the GSTR primitives — ~50 primitive columns, no
-    nested arrays, no text.  Use when the consumer is the udf-engine
-    extraction (extract_all_udf builds pure-codegen result structs over
-    these columns); plain parses (clean_spans-only consumers, the sql
-    engine) keep the default full parsed schema.
+    input from one Python stage (``FUSED_SCHEMA``): per-parameter
+    best-chunk scores and chunk-aware values (bscore/cv/bt_id/nc/mc),
+    report + account aggregates, and the GSTR primitives — ~50
+    primitive columns, no nested arrays, no text.  Use when the
+    consumer is the udf-engine extraction (extract_all_udf builds
+    pure-codegen result structs over these columns); plain parses
+    (clean_spans-only consumers, the sql engine) keep the default full
+    parsed schema.
+
+    NULL ``spans`` parse as no spans (``_no_null_spans``).
     """
     if fuse_retrieval:
-        schema = T.StructType(
-            [T.StructField("doc_id", T.StringType()),
-             T.StructField("doc_kind", T.StringType()),
-             # pre-flattened report values (types mirror the SQL
-             # forms: summary_struct casts accounts to int, money
-             # cells stay double)
-             T.StructField("rep_score", T.IntegerType()),
-             T.StructField("rep_inquiries", T.IntegerType()),
-             T.StructField("rep_sum_total_accounts", T.IntegerType()),
-             T.StructField("rep_sum_active_accounts", T.IntegerType()),
-             T.StructField("rep_sum_total_current_balance",
-                           T.DoubleType()),
-             T.StructField("rep_sum_total_overdue_amount",
-                           T.DoubleType()),
-             T.StructField("rep_sum_total_writeoff_amount",
-                           T.DoubleType())]
-            + [T.StructField(c, T.BooleanType() if c == "rep_live_plbl"
-                             else T.IntegerType())
-               for c in _ACCT_AGG_COLS]
-            + [T.StructField(name, typ) for name, typ in _flat_fields()])
-        return docs.mapInPandas(_parse_retr_batches, schema=schema)
+        return _no_null_spans(docs).mapInPandas(_parse_retr_batches,
+                                                schema=FUSED_SCHEMA)
     # r6: the full-schema parse is pure JVM SQL — no Python boundary,
     # and Catalyst prunes unused parse columns per consumer (the
     # mapInPandas form computed and Arrow-shipped every column for
-    # every consumer; `_parse_batches` remains the Python twin used by
-    # the fused stage above and the test oracle).  The raw input rides
-    # along as a Python-side tag: a consumer that references the wide
-    # parse columns MANY times (the relational engine) re-parses from
-    # the source with the Arrow stage instead, where one opaque
-    # materialization beats dozens of interpreted re-evaluations —
-    # see extract.crif.extract_all.
-    out = parse_documents_jvm(docs)
+    # every consumer).  The raw input rides along as a Python-side
+    # tag: a consumer that references the wide parse columns MANY
+    # times (the relational engine) re-parses from the source with the
+    # Arrow stage instead, where one opaque materialization beats
+    # dozens of interpreted re-evaluations — see
+    # extract.crif.extract_all.
+    out = parse_documents_jvm(_no_null_spans(docs))
     out._plain_parse_docs = docs
     return out
+
+
+def _no_null_spans(docs: DataFrame) -> DataFrame:
+    """NULL ``spans`` → no spans: every parse form starts here, so a
+    NULL is a document without spans, never a failed job."""
+    return docs.withColumn("spans", F.coalesce(
+        "spans", F.array().cast(docs.schema["spans"].dataType)))
 
 
 def parse_documents_arrow(docs: DataFrame) -> DataFrame:
@@ -547,7 +480,8 @@ def parse_documents_arrow(docs: DataFrame) -> DataFrame:
     wide columns many times over (e.g. the relational extraction
     engine); every other consumer wants `parse_documents` (prunable,
     no Python boundary)."""
-    return docs.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
+    return _no_null_spans(docs).mapInPandas(_parse_batches,
+                                            schema=PARSED_SCHEMA)
 
 
 def load_documents(spark, path: str) -> DataFrame:

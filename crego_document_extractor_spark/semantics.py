@@ -490,7 +490,8 @@ def gstr_table_matches(table: dict) -> bool:
 
 def gstr_sales(tables: list[dict]) -> Optional[dict]:
     """gstr.py:67-142 — first matching table; taxable-value column (or
-    index 1 / last); first '(a)'/'outward taxable supplies' row."""
+    index 1 / last); first '(a)'/'outward taxable supplies' row.  The
+    matched table's ``page`` rides along for the fused stage's g_page."""
     matches = [t for t in tables if gstr_table_matches(t)]
     if not matches:
         return None
@@ -511,6 +512,7 @@ def gstr_sales(tables: list[dict]) -> Optional[dict]:
                 "value": clean_currency(str(row[idx])),  # idx=-1 → last col
                 "source": f"GSTR-3B Table 3.1 (Page {best['page']})",
                 "confidence": 1.0,
+                "page": best["page"],
             }
     return None
 

@@ -190,7 +190,7 @@ def test_gstr_weak_signature_and_column_fallback(spark):
     assert idx == 1  # no 'taxable value' column → index 1 (gstr.py:115-116)
     exp = S.gstr_sales([weak])
     assert exp == {"value": 1000.50, "source": "GSTR-3B Table 3.1 (Page 7)",
-                   "confidence": 1.0}
+                   "confidence": 1.0, "page": 7}
 
 
 # --- chunker + boilerplate (parse stage) ------------------------------------

@@ -65,9 +65,7 @@ def _expected(docs):
     return out
 
 
-def test_chunk_aware_paths_match_oracle(spark):
-    docs = [DOC_TABLES_ONLY, DOC_FLAG_CHUNK]
-    got, exp = _run(spark, docs), _expected(docs)
+def _assert_rows_equal(got, exp):
     assert set(got) == set(exp)
     for k, e in exp.items():
         g = got[k]
@@ -76,6 +74,12 @@ def test_chunk_aware_paths_match_oracle(spark):
             ok = (math.isclose(ev, gv, abs_tol=1e-12)
                   if isinstance(ev, float) and isinstance(gv, float) else ev == gv)
             assert ok, (k, f, ev, gv)
+
+
+def test_chunk_aware_paths_match_oracle(spark):
+    docs = [DOC_TABLES_ONLY, DOC_FLAG_CHUNK]
+    exp = _expected(docs)
+    _assert_rows_equal(_run(spark, docs), exp)
 
     # the distinctive paths actually fired (guard against silently
     # regressing into report-level fallbacks)
@@ -154,3 +158,35 @@ def test_run_plan_ignores_engine_env(spark, raw_docs, monkeypatch):
     still ships the fused plan."""
     monkeypatch.setenv("SPARK_GRAFT_ENGINE", "sql")
     _assert_run_ships_fused_plan(spark, raw_docs)
+
+
+@pytest.mark.parametrize("form", sorted(FORMS))
+def test_null_spans_parse_as_no_spans(spark, form):
+    """A document whose spans are NULL is a document with no spans: its
+    clean spans are [] and its result rows are the oracle's for
+    ``spans: []``, in both forms — never a failed job."""
+    ids = ["crif-null-01", "gstr-null-01", "html-null-01"]
+    docs = spark.createDataFrame([(d, None) for d in ids], DOCUMENTS_SCHEMA)
+    spans = pipeline.clean_spans(pipeline.parse_documents(docs)).collect()
+    assert {r["doc_id"]: r["clean_spans"] for r in spans} == {
+        d: [] for d in ids}
+    got = {(r["doc_id"], r["param_id"]): r.asDict()
+           for r in FORMS[form](docs).collect()}
+    _assert_rows_equal(got, _expected([{"doc_id": d, "spans": []}
+                                       for d in ids]))
+
+
+def test_rag_fallback_plan_has_no_arrow_udf(spark, raw_docs):
+    """The RAG fallback retrieves with the fused stage's per-document
+    function inside its one answer MapInPandas: its executed plan has
+    no scalar pandas_udf (ArrowEvalPython) node."""
+    from crego_document_extractor_spark.ops.answer import with_rag_fallback
+
+    docs = spark.createDataFrame(
+        [(d["doc_id"], d["spans"]) for d in raw_docs[:40]], DOCUMENTS_SCHEMA)
+    out = with_rag_fallback(pipeline.extract_from_raw(docs),
+                            pipeline.parse_documents(docs), enabled=True)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
+    assert "MapInPandas" in plan, plan
