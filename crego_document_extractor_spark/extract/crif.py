@@ -9,9 +9,10 @@ one of two independent engines:
 * the fused parse (parse.py ``fuse_retrieval=True``): one Python stage
   computes them all, and ``extract_all_udf`` is a pure-codegen
   projection over its output — the shipped plan;
-* the relational engine (``extract_all(engine='sql')``): JVM-side
-  retrieval and account aggregation (retrieval_sql.py) over the full
-  parsed schema — the independent cross-check.
+* the relational engine (``extract_all(engine='sql')``): an Arrow
+  build of text, tables and chunks from a full parse's clean spans,
+  then JVM-side retrieval and account aggregation (retrieval_sql.py)
+  — the independent cross-check.
 
 Kind routing (main.py:66-69) is a CASE over per-kind result arrays in
 one projection (``_explode_by_kind``), so the parse stage executes
@@ -313,33 +314,29 @@ def extract_all(parsed: DataFrame, engine: str | None = None) -> DataFrame:
     """Embedding-mode extraction for both document kinds.
 
     engine=None or 'udf': ``extract_all_udf`` over a fused parse.
-    engine='sql': the relational engine over the full parsed schema —
-    retrieval and account aggregation run JVM-side (retrieval_sql.py),
-    an INDEPENDENT physical plan; the A9b agreement query
-    (test_accuracy.py:79-115 analogue) proves the two agree."""
+    engine='sql': the relational engine over any full parse — an
+    INDEPENDENT physical plan; the A9b agreement query
+    (test_accuracy.py:79-115 analogue) proves the two agree.  It reads
+    only ``doc_id``, ``doc_kind`` and ``clean_spans``: one Arrow stage
+    (parse._parse_batches) builds text, tables and chunks from the
+    clean spans, then retrieval and account aggregation run JVM-side
+    (retrieval_sql.py).  The plan references those wide columns many
+    times, and one opaque materialization beats re-evaluating the JVM
+    parse's interpreted expressions per reference."""
     if engine in (None, "udf"):
         return extract_all_udf(parsed)
     from .gstr import with_gstr_columns
     from .retrieval_sql import relational_extract_columns
+    from ..parse import BUILT_SCHEMA, _parse_batches
 
-    if "tables" not in parsed.columns:
+    if "clean_spans" not in parsed.columns:
         raise ValueError(
-            "engine='sql' needs the full parsed schema "
-            "(tables/chunks/text); got a pre-flattened fused parse — "
-            "use parse_documents(docs) without fuse_retrieval")
-    # r6: the relational plan references text/tables/chunks dozens
-    # of times; over the prunable JVM parse those are interpreted
-    # HOF expressions the optimizer may inline per reference
-    # (measured 25 s → 74 s at sf1.0/240k).  When the input is an
-    # unmodified parse_documents() output, rebuild from its source
-    # with the opaque Arrow parse — one materialization, attribute
-    # references downstream (the exact pre-r6 plan; parity between
-    # the two parse forms is pinned by the span-equality suite).
-    src = getattr(parsed, "_plain_parse_docs", None)
-    if src is not None:
-        from ..parse import parse_documents_arrow
-        parsed = parse_documents_arrow(src)
-    df = relational_extract_columns(with_gstr_columns(_with_tables(parsed)))
+            "engine='sql' needs a full parse (clean_spans); got a "
+            "pre-flattened fused parse — use parse_documents(docs) "
+            "without fuse_retrieval")
+    df = (parsed.select("doc_id", "doc_kind", "clean_spans")
+          .mapInPandas(_parse_batches, schema=BUILT_SCHEMA))
+    df = relational_extract_columns(with_gstr_columns(_with_tables(df)))
     return _explode_by_kind(df, _embedding_results())
 
 

@@ -18,14 +18,14 @@ type.  Everything downstream of the answer string — the NOT_FOUND
 sentinel, the int/float/bool coercion rules (crif.py:503-530), the
 0.6 confidence and boost multiply — mirrors the reference exactly.
 
-Flag-gated like the reference: ``SPARK_GRAFT_ENABLE_RAG=1`` (or
-``enabled=True``) activates it; the default engine ships with it off,
-matching ``ENABLE_RAG=False``.
+Off by default like the reference (``ENABLE_RAG=False``): only a
+caller passing ``enabled=True`` runs it.  No entry point or
+environment variable turns it on, so ``pipeline.run`` returns the
+same rows as every other entry point.
 """
 
 from __future__ import annotations
 
-import os
 import re
 from typing import Iterator
 
@@ -46,11 +46,6 @@ _BOOL_FALSE = re.compile(r"\b(no|false|none|absent)\b", re.I)
 
 _SPEC_BY_ID = {s["param_id"]: s for s in PARAMETER_SPECS}
 _QUERY_VECS = {s["param_id"]: S.embed(query_text(s)) for s in PARAMETER_SPECS}
-
-
-def rag_fallback_enabled() -> bool:
-    """Reference default: ENABLE_RAG=False (config.py:67)."""
-    return os.environ.get("SPARK_GRAFT_ENABLE_RAG", "0") == "1"
 
 
 def best_sentence(query_vec: np.ndarray, text: str,
@@ -157,14 +152,15 @@ def _answer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def with_rag_fallback(results: DataFrame, parsed: DataFrame,
-                      enabled: bool | None = None) -> DataFrame:
+                      enabled: bool = False) -> DataFrame:
     """Patch `results` rows whose programmatic extraction found a
     chunk but NO value (crif.py:190-206 eligibility: best chunk
     exists, value is None) with the deterministic extractive answer:
     value from the chunk's best sentence, confidence
     0.6 × similarity-boost(score), status 'extracted'.  Rows stay
     untouched when the answerer also fails (reference keeps the
-    original failed result) or when the flag is off.
+    original failed result) or when ``enabled`` is False (the
+    reference's ENABLE_RAG default, config.py:67).
 
     Plan shape: the eligible slice is typically tiny (a handful of
     (doc, param) misses), so the full parse's tables and chunks are
@@ -172,8 +168,6 @@ def with_rag_fallback(results: DataFrame, parsed: DataFrame,
     retrieves and answers per document, and the patch is a left join
     back to `results` — broadcastable whenever the miss set is
     small."""
-    if enabled is None:
-        enabled = rag_fallback_enabled()
     if not enabled:
         return results
     from ..extract import sqlexpr as X

@@ -1,4 +1,4 @@
-"""PARSE stage — the flagship vectorized Arrow UDF (north_star).
+"""PARSE stage — the JVM parse and the flagship vectorized Arrow stage.
 
 ``documents(doc_id, spans)`` → per-document parsed structure:
 
@@ -16,6 +16,10 @@ Two physical forms share the :mod:`..semantics` definitions:
   ``mapInPandas`` stage — ``_fused_row`` maps each document to one row
   of ``FUSED_SCHEMA`` (parse, retrieval, per-parameter scalars), no
   per-row Python UDFs, no shuffle.
+
+``_parse_batches`` is the relational engine's Arrow stage
+(extract.crif.extract_all): text, tables and chunks built from the
+clean spans of a JVM parse.
 """
 
 from __future__ import annotations
@@ -91,17 +95,24 @@ def _span_dicts(spans) -> list[dict]:
             for s in spans]
 
 
+#: the relational engine's Arrow stage output (``_parse_batches``)
+BUILT_SCHEMA = T.StructType([PARSED_SCHEMA[c] for c in (
+    "doc_id", "doc_kind", "text", "tables", "chunks")])
+
+
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The relational engine's one Python stage: ``(doc_id, doc_kind,
+    clean_spans)`` → ``BUILT_SCHEMA``.  Text, tables and chunks are
+    built from the clean spans as given (the JVM ones); nothing is
+    re-cleaned here."""
+    names = BUILT_SCHEMA.fieldNames()
     for pdf in batches:
-        rows = []
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            cs = S.clean_spans(_span_dicts(spans))
-            rows.append({"doc_id": doc_id, "doc_kind": _doc_kind(doc_id),
-                         "n_spans": len(spans), "clean_spans": cs,
-                         "text": S.render_text(cs),
-                         "tables": S.build_tables(cs),
-                         "chunks": S.build_chunks(cs)})
-        yield pd.DataFrame(rows, columns=PARSED_SCHEMA.fieldNames())
+        yield pd.DataFrame(
+            [(doc_id, kind, S.render_text(cs), S.build_tables(cs),
+              S.build_chunks(cs))
+             for doc_id, kind, cs in zip(pdf["doc_id"], pdf["doc_kind"],
+                                         pdf["clean_spans"])],
+            columns=names)
 
 
 #: chunk-aware flag parameters (crif_models.py:52-60 predicates — the
@@ -259,18 +270,14 @@ def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 # JVM (pure-SQL) parse — r6 optimization
 # ---------------------------------------------------------------------------
 #
-# The non-fused parse used to run `_parse_batches` in a mapInPandas
-# stage: every consumer paid the full JVM→Arrow→pandas→Arrow→JVM round
-# trip AND the Python compute for ALL output columns, because an opaque
-# Python stage defeats Catalyst column pruning (guide §4.1/§4.2).  The
-# same semantics are expressible as higher-order SQL over the spans
-# array, which (a) removes the Python boundary entirely for this path
-# and (b) lets Catalyst prune: a clean_spans-only consumer never
-# computes text/tables/chunks at all.  Every expression below mirrors a
+# The full-schema parse is higher-order SQL over the spans array: no
+# Python boundary, and Catalyst prunes per consumer — a
+# clean_spans-only consumer never computes text/tables/chunks (an
+# opaque Python stage would compute and ship every column for every
+# consumer, guide §4.1/§4.2).  Every expression below mirrors a
 # `semantics.py` function line by line (named in comments); the parity
-# suite (tests/test_spans, scripts/smoke.py span diff, A9b agreement)
-# pins JVM-vs-Python equality, which the Python oracle now genuinely
-# independently checks.
+# suite (tests/test_jvm_parse, scripts/smoke.py span diff, A9b
+# agreement) pins JVM-vs-Python equality.
 
 #: Java-regex char class of exactly CPython's str whitespace set
 #: (Py_UNICODE_ISSPACE) — `str.split()` / `str.strip()` parity needs
@@ -432,13 +439,14 @@ def parse_documents_jvm(docs: DataFrame) -> DataFrame:
 
 
 def parse_documents(docs: DataFrame, fuse_retrieval: bool = False) -> DataFrame:
-    """documents(doc_id, spans) → parsed-document DataFrame.
-
-    Narrow (no shuffle); Arrow-batched; heavy-tailed docs bounded by
-    spark.sql.execution.arrow.maxRecordsPerBatch.
+    """documents(doc_id, spans) → parsed-document DataFrame, narrow (no
+    shuffle).  The default is the full ``PARSED_SCHEMA`` from the
+    pure-JVM parse (``parse_documents_jvm``).
 
     ``fuse_retrieval=True`` emits the FULLY PRE-FLATTENED extraction
-    input from one Python stage (``FUSED_SCHEMA``): per-parameter
+    input from one Arrow-batched Python stage (``FUSED_SCHEMA``;
+    heavy-tailed docs bounded by
+    spark.sql.execution.arrow.maxRecordsPerBatch): per-parameter
     best-chunk scores and chunk-aware values (bscore/cv/bt_id/nc/mc),
     report + account aggregates, and the GSTR primitives — ~50
     primitive columns, no nested arrays, no text.  Use when the
@@ -452,18 +460,7 @@ def parse_documents(docs: DataFrame, fuse_retrieval: bool = False) -> DataFrame:
     if fuse_retrieval:
         return _no_null_spans(docs).mapInPandas(_parse_retr_batches,
                                                 schema=FUSED_SCHEMA)
-    # r6: the full-schema parse is pure JVM SQL — no Python boundary,
-    # and Catalyst prunes unused parse columns per consumer (the
-    # mapInPandas form computed and Arrow-shipped every column for
-    # every consumer).  The raw input rides along as a Python-side
-    # tag: a consumer that references the wide parse columns MANY
-    # times (the relational engine) re-parses from the source with the
-    # Arrow stage instead, where one opaque materialization beats
-    # dozens of interpreted re-evaluations — see
-    # extract.crif.extract_all.
-    out = parse_documents_jvm(_no_null_spans(docs))
-    out._plain_parse_docs = docs
-    return out
+    return parse_documents_jvm(_no_null_spans(docs))
 
 
 def _no_null_spans(docs: DataFrame) -> DataFrame:
@@ -471,17 +468,6 @@ def _no_null_spans(docs: DataFrame) -> DataFrame:
     NULL is a document without spans, never a failed job."""
     return docs.withColumn("spans", F.coalesce(
         "spans", F.array().cast(docs.schema["spans"].dataType)))
-
-
-def parse_documents_arrow(docs: DataFrame) -> DataFrame:
-    """The Arrow/Python full-schema parse (the pre-r6 physical form):
-    one opaque mapInPandas materializing every parse column.  Faster
-    than the JVM expressions ONLY for consumers that re-reference the
-    wide columns many times over (e.g. the relational extraction
-    engine); every other consumer wants `parse_documents` (prunable,
-    no Python boundary)."""
-    return _no_null_spans(docs).mapInPandas(_parse_batches,
-                                            schema=PARSED_SCHEMA)
 
 
 def load_documents(spark, path: str) -> DataFrame:

@@ -87,14 +87,7 @@ def run(docs: DataFrame, repartition: bool = True) -> tuple[DataFrame, DataFrame
     """Full pipeline: returns (clean_spans_df, results_df)."""
     if repartition:
         docs = ensure_parallelism(docs)
-    parsed = parse_documents(docs)
-    results = extract_from_raw(docs)
-    from .ops.answer import rag_fallback_enabled, with_rag_fallback
-    if rag_fallback_enabled():
-        # deterministic extractive RAG fallback (reference
-        # ENABLE_RAG path, default off — ops/answer.py)
-        results = with_rag_fallback(results, parsed)
-    return clean_spans(parsed), results
+    return clean_spans(parse_documents(docs)), extract_from_raw(docs)
 
 
 def extract_from_raw(docs: DataFrame, mode: str = "embedding",
@@ -115,12 +108,9 @@ def extract_from_raw(docs: DataFrame, mode: str = "embedding",
     # 240k docs); the per-doc result rows are identical either way
     # (parity suite).
     from .parse import DOC_KIND_SQL
-    empty = (f"CAST(array() AS "
-             f"ARRAY<STRUCT<kind: STRING, text: STRING, "
-             f"media_ref: STRING, offset: INT>>)")
-    docs = docs.withColumn("spans", F.expr(
-        f"CASE WHEN {DOC_KIND_SQL} IN ('crif', 'gstr') "
-        f"THEN spans ELSE {empty} END"))
+    docs = docs.withColumn("spans", F.when(
+        F.expr(f"{DOC_KIND_SQL} IN ('crif', 'gstr')"), F.col("spans"))
+        .otherwise(F.array().cast(docs.schema["spans"].dataType)))
     return extract_parameters(parse_documents(docs, fuse_retrieval=True),
                               mode=mode)
 

@@ -1,8 +1,9 @@
 """Shared pure-Python semantic core.
 
 Single source of truth for every piece of reference behavior that runs
-Python-side (the Arrow parse stage, the deterministic embedding UDF,
-and the test oracle).  The JVM-side Spark SQL re-implementations in
+Python-side (the fused extraction stage, the relational engine's Arrow
+build of text/tables/chunks, the RAG fallback's answer stage, and the
+test oracle).  The JVM-side Spark SQL re-implementations in
 ``extract/`` are written *independently* and unit-tested against these
 functions, so span/parameter equality between Spark and the oracle is a
 meaningful check, not a tautology.
@@ -205,14 +206,6 @@ def extract_field(text: str, field_name: str) -> str:
             if len(parts) > 1:
                 return parts[1].strip()
     return ""
-
-
-def extract_numeric_field(text: str, field_name: str) -> float:
-    """crif_parser.py:186-190."""
-    v = extract_field(text, field_name)
-    if v:
-        return clean_number(v)
-    return 0.0
 
 
 MONTHS_ABBR = [
@@ -584,24 +577,20 @@ def cosine(v1: np.ndarray, v2: np.ndarray) -> float:
 # (0.16-0.49 best-hit band on the same fixture), so the SAME selection
 # behavior requires a model-calibrated cutoff, not the literal 0.5.
 SIMILARITY_THRESHOLD = 0.15
-TOP_K_CHUNKS = 3  # config.py:25
-
-
-def best_candidate(query_vec: np.ndarray, cand_vecs: list[np.ndarray]) -> tuple[Optional[int], float]:
-    """Stable-argmax + threshold: the observable effect of
-    embeddings.py:73-136 (score all, stable sort desc, top-3, filter
-    >= 0.5, take [0]).  Returns (candidate_index | None, best_score)."""
-    return retrieve_best(query_vec.reshape(1, -1), cand_vecs)[0]
 
 
 def retrieve_best(query_mat: np.ndarray,
                   cand_vecs: list[np.ndarray],
                   query_norms: np.ndarray | None = None,
                   ) -> list[tuple[Optional[int], float]]:
-    """Vectorized best_candidate for a whole query matrix (p×d) —
-    shared verbatim by the retrieval pandas_udf and the oracle so both
-    compute bit-identical scores.  np.argmax keeps the FIRST maximum,
-    matching the reference's stable sort (embeddings.py:85).
+    """Stable-argmax + threshold for a whole query matrix (p×d): the
+    observable effect of embeddings.py:73-136 (score all, stable sort
+    desc, top-3, filter >= SIMILARITY_THRESHOLD, take [0]); returns
+    one (candidate_index | None, best_score) per query.  Shared
+    verbatim by the oracle and by extract.retrieval.retrieve_rows (the
+    fused stage's and the RAG fallback's retrieval), so all compute
+    bit-identical scores.  np.argmax keeps the FIRST maximum, matching
+    the reference's stable sort (embeddings.py:85).
 
     ``query_norms`` optionally passes the precomputed
     ``np.linalg.norm(query_mat, axis=1)`` — the fused parse stage calls

@@ -1,24 +1,23 @@
-"""Focused differential tests for the r6 pure-SQL parse
+"""Focused differential tests for the pure-SQL parse
 (`parse_documents_jvm`): every output column must equal the Python
-twin (`_parse_batches`, the mapInPandas body the fused stage and the
-test oracle still run) value-for-value — including the edge cases the
-SQL formulation had to reproduce deliberately (stable offset sort,
-CPython whitespace semantics, `strip('# ')` headers, blank table
-header lines, empty spans)."""
+twin (`oracle.parse_document` plus `parse._doc_kind`, the same
+semantics functions the fused stage runs) value-for-value — including
+the edge cases the SQL formulation had to reproduce deliberately
+(stable offset sort, CPython whitespace semantics, `strip('# ')`
+headers, blank table header lines, empty spans).  The relational
+engine builds its text, tables and chunks from these JVM clean spans
+(`test_sql_engine_reads_any_full_parse`)."""
 
-import pandas as pd
 import pytest
 
-from crego_document_extractor_spark import corpus, parse
+from crego_document_extractor_spark import corpus, oracle, parse
 
 
 def _py_rows(docs):
-    pdf = pd.DataFrame({"doc_id": [d["doc_id"] for d in docs],
-                        "spans": [d["spans"] for d in docs]})
-    rows = []
-    for out in parse._parse_batches(iter([pdf])):
-        rows.extend(out.to_dict("records"))
-    return {r["doc_id"]: r for r in rows}
+    return {d["doc_id"]: dict(oracle.parse_document(d),
+                              doc_kind=parse._doc_kind(d["doc_id"]),
+                              n_spans=len(d["spans"]))
+            for d in docs}
 
 
 def _jvm_rows(spark, docs):
@@ -110,24 +109,25 @@ def test_jvm_parse_matches_python_on_edge_docs(spark):
     _assert_equal(_jvm_rows(spark, EDGE_DOCS), _py_rows(EDGE_DOCS))
 
 
-def test_sql_engine_rebuilds_arrow_parse_from_tagged_source(spark):
-    """extract_all(engine='sql') swaps an unmodified parse_documents()
-    output for the opaque Arrow parse (one materialization instead of
-    repeated interpreted evaluation) — and both inputs produce the
-    identical result rows."""
+def test_sql_engine_reads_any_full_parse(spark):
+    """extract_all(engine='sql') reads only doc_id, doc_kind and
+    clean_spans: an untouched parse, a filtered one and the bare JVM
+    parse each execute with exactly one MapInPandas (the Arrow build of
+    text/tables/chunks) and give identical result rows."""
     from crego_document_extractor_spark.extract.crif import extract_all
 
     docs = list(corpus.gen_documents(40, seed=5))
     sdf = spark.createDataFrame([(d["doc_id"], d["spans"]) for d in docs],
                                 parse.DOCUMENTS_SCHEMA)
-    tagged = parse.parse_documents(sdf)
-    assert getattr(tagged, "_plain_parse_docs", None) is sdf
-    via_tag = extract_all(tagged, engine="sql")
-    assert "MapInPandas" in via_tag._jdf.queryExecution() \
-        .executedPlan().toString()
-    via_jvm = extract_all(parse.parse_documents_jvm(sdf), engine="sql")
-    assert sorted(map(tuple, via_tag.collect())) == \
-        sorted(map(tuple, via_jvm.collect()))
+    rows = []
+    for parsed in (parse.parse_documents(sdf),
+                   parse.parse_documents(sdf).where("doc_id IS NOT NULL"),
+                   parse.parse_documents_jvm(sdf)):
+        out = extract_all(parsed, engine="sql")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        rows.append(sorted(map(tuple, out.collect())))
+    assert rows[0] and rows[0] == rows[1] == rows[2]
 
 
 @pytest.mark.parametrize("n_parts", [1, 7])

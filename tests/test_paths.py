@@ -160,6 +160,14 @@ def test_run_plan_ignores_engine_env(spark, raw_docs, monkeypatch):
     _assert_run_ships_fused_plan(spark, raw_docs)
 
 
+def test_run_plan_ignores_rag_env(spark, raw_docs, monkeypatch):
+    """The RAG fallback is off unless a caller passes enabled=True: with
+    SPARK_GRAFT_ENABLE_RAG=1 set, pipeline.run still ships the fused
+    plan (no fallback groupBy, join or second MapInPandas)."""
+    monkeypatch.setenv("SPARK_GRAFT_ENABLE_RAG", "1")
+    _assert_run_ships_fused_plan(spark, raw_docs)
+
+
 @pytest.mark.parametrize("form", sorted(FORMS))
 def test_null_spans_parse_as_no_spans(spark, form):
     """A document whose spans are NULL is a document with no spans: its
