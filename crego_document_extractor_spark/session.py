@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory holding this package, for the Python workers' path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_mem() -> str:
     """min(32g, half of physical RAM), floor 2g."""
@@ -60,5 +63,12 @@ def get_spark(app_name: str = "crego-document-extractor-spark",
                 os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
                                "-XX:+UseParallelGC"))
         .config("spark.ui.enabled", "false")
+        # the Python worker daemon: stock pyspark.daemon, minus the
+        # per-task re-read of Spark's zip archives on CPython 3.11
+        # (pydaemon.py); the package root goes on the workers' path so
+        # it is found from any cwd
+        .config("spark.python.daemon.module",
+                "crego_document_extractor_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()

@@ -198,3 +198,42 @@ def test_rag_fallback_plan_has_no_arrow_udf(spark, raw_docs):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan, plan
     assert "MapInPandas" in plan, plan
+
+
+def test_50k_span_doc_in_one_arrow_batch(spark):
+    """A heavy-tailed crif document of 50,000 spans, sharing one
+    256-row Arrow batch with 255 ordinary documents, goes through the
+    fused plan whole: its clean spans and all 15 parameters equal the
+    oracle's, and so do its batch neighbours'."""
+    import random
+
+    from crego_document_extractor_spark import corpus
+
+    spans = []
+    seed = 0
+    while len(spans) < 50_000:  # ~47 mega-reports back to back
+        spans += corpus._gen_crif(random.Random(seed), big=True)
+        seed += 1
+    big = {"doc_id": "crif-950000",
+           "spans": [dict(s, offset=i) for i, s in enumerate(spans[:50_000])]}
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    assert batch == 256
+    docs = list(corpus.gen_documents(batch - 1, seed=5, big_doc_every=0))
+    docs.insert(batch // 2, big)
+
+    df = spark.createDataFrame(
+        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                        for s in d["spans"]]) for d in docs],
+        DOCUMENTS_SCHEMA).coalesce(1)
+    assert df.rdd.getNumPartitions() == 1  # one task, one Arrow batch
+
+    exp = {d["doc_id"]: oracle.extract_document(d) for d in docs}
+    got_spans = {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
+                 for r in pipeline.clean_spans(
+                     pipeline.parse_documents(df)).collect()}
+    assert got_spans == {k: e["clean_spans"] for k, e in exp.items()}
+    got = {(r["doc_id"], r["param_id"]): r.asDict()
+           for r in pipeline.extract_from_raw(df).collect()}
+    _assert_rows_equal(got, {(r["doc_id"], r["param_id"]): r
+                             for e in exp.values() for r in e["results"]})
+    assert sum(k[0] == big["doc_id"] for k in got) == 15
