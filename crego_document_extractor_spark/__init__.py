@@ -24,11 +24,12 @@ extraction (``pipeline.extract_from_raw``) is a single Arrow-batched
 deterministic embedding retrieval (replacing the reference's Ollama
 HTTP calls, ``app/services/embeddings.py:25-51``), account parsing and
 the per-parameter values — followed by a codegen projection that
-builds the typed result rows, shuffle-free per document.  The
-clean-span parse is pure JVM SQL, and an independent relational engine
-computes the same results with JVM-side retrieval and account
-aggregation; it is the cross-check, reached only by calling
-``extract_all(parse_documents(docs), engine="sql")``.
+builds the typed result rows, shuffle-free per document.  The full
+parse is JVM clean spans plus one build UDF for text, tables and
+chunks (pruned when only the clean spans are read), and an independent
+relational engine computes the same results from it with JVM-side
+retrieval and account aggregation; it is the cross-check, reached only
+by calling ``extract_all(parse_documents(docs), engine="sql")``.
 """
 
 __version__ = "0.1.0"

@@ -9,10 +9,10 @@ one of two independent engines:
 * the fused parse (parse.py ``fuse_retrieval=True``): one Python stage
   computes them all, and ``extract_all_udf`` is a pure-codegen
   projection over its output — the shipped plan;
-* the relational engine (``extract_all(engine='sql')``): an Arrow
-  build of text, tables and chunks from a full parse's clean spans,
-  then JVM-side retrieval and account aggregation (retrieval_sql.py)
-  — the independent cross-check.
+* the relational engine (``extract_all(engine='sql')``): the text,
+  tables and chunks of a full parse, then JVM-side retrieval and
+  account aggregation (retrieval_sql.py) — the independent
+  cross-check.
 
 Kind routing (main.py:66-69) is a CASE over per-kind result arrays in
 one projection (``_explode_by_kind``), so the parse stage executes
@@ -317,26 +317,20 @@ def extract_all(parsed: DataFrame, engine: str | None = None) -> DataFrame:
     engine='sql': the relational engine over any full parse — an
     INDEPENDENT physical plan; the A9b agreement query
     (test_accuracy.py:79-115 analogue) proves the two agree.  It reads
-    only ``doc_id``, ``doc_kind`` and ``clean_spans``: one Arrow stage
-    (parse._parse_batches) builds text, tables and chunks from the
-    clean spans, then retrieval and account aggregation run JVM-side
-    (retrieval_sql.py).  The plan references those wide columns many
-    times, and one opaque materialization beats re-evaluating the JVM
-    parse's interpreted expressions per reference."""
+    ``text``, ``tables`` and ``chunks`` straight from the full parse
+    (built there by its one pandas_udf), then retrieval and account
+    aggregation run JVM-side (retrieval_sql.py)."""
     if engine in (None, "udf"):
         return extract_all_udf(parsed)
     from .gstr import with_gstr_columns
     from .retrieval_sql import relational_extract_columns
-    from ..parse import BUILT_SCHEMA, _parse_batches
 
-    if "clean_spans" not in parsed.columns:
+    if is_fused(parsed):
         raise ValueError(
-            "engine='sql' needs a full parse (clean_spans); got a "
-            "pre-flattened fused parse — use parse_documents(docs) "
+            "engine='sql' needs a full parse (text, tables, chunks); got "
+            "a pre-flattened fused parse — use parse_documents(docs) "
             "without fuse_retrieval")
-    df = (parsed.select("doc_id", "doc_kind", "clean_spans")
-          .mapInPandas(_parse_batches, schema=BUILT_SCHEMA))
-    df = relational_extract_columns(with_gstr_columns(_with_tables(df)))
+    df = relational_extract_columns(with_gstr_columns(_with_tables(parsed)))
     return _explode_by_kind(df, _embedding_results())
 
 

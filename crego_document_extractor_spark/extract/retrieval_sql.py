@@ -26,8 +26,9 @@ order — and the final ``dot / (qnorm * cnorm)`` is written with the
 same operation order as the oracle's ``(q @ m.T) / (qn * cn)``.
 Spark's ``crc32`` is the same CRC-32 (IEEE 802.3) as ``zlib.crc32``,
 and ``sqrt`` is IEEE-correctly-rounded in both runtimes, so scores —
-and therefore ties — match bit-for-bit (proven for the foundational
-expression in tests/test_ops.py::test_embed_expr_matches_python).
+and therefore ties — match bit-for-bit (pinned end to end by the
+relational-vs-oracle tests, tests/test_params.py::test_rows_equal[sql]
+and tests/test_paths.py, which compare ``similarity_score`` to 1e-12).
 
 Tie-breaking: ``np.argmax`` keeps the FIRST maximum (embeddings.py:85
 stable sort); here the ``max_by`` ordering is the struct

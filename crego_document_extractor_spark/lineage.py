@@ -82,11 +82,7 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
     # per-bucket metrics for the manifest (lineage + extraction metrics)
-    stats = (bucketed
-             .where(~F.col("bucket").isin(list(done)) if done else F.lit(True))
-             .where(F.col("bucket").isin(buckets_subset)
-                    if buckets_subset is not None else F.lit(True))
-             .groupBy("bucket").agg(F.count("*").alias("n_docs")))
+    stats = pending.groupBy("bucket").agg(F.count("*").alias("n_docs"))
     # read back with the written schema: when nothing was pending the
     # write leaves no data file to infer a schema from
     rows = (spark.read.schema(out.schema).parquet(f"{out_dir}/{RESULTS}")

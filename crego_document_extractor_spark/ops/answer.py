@@ -120,15 +120,17 @@ _FB_COLUMNS = [c.split()[0] for c in _FB_SCHEMA.split(", ")]
 
 
 def _answer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per document with an eligible miss: retrieve exactly as the fused
-    stage does, then answer each missed parameter that has a best chunk
-    from that chunk's full text; only found answers are emitted."""
+    """Per document with an eligible miss: build tables and chunks from
+    the clean spans and retrieve exactly as the fused stage does, then
+    answer each missed parameter that has a best chunk from that
+    chunk's full text; only found answers are emitted."""
     for pdf in batches:
         rows = []
-        for doc_id, kind, tables, chunks, miss in zip(
-                pdf["doc_id"], pdf["doc_kind"], pdf["tables"],
-                pdf["chunks"], pdf["miss"]):
+        for doc_id, kind, cs, miss in zip(
+                pdf["doc_id"], pdf["doc_kind"], pdf["clean_spans"],
+                pdf["miss"]):
             miss = set(miss)
+            tables, chunks = S.build_tables(cs), S.build_chunks(cs)
             content = {("table", t["id"]): t["raw"] for t in tables}
             content.update({("text", c["chunk_idx"]): c["text"]
                             for c in chunks})
@@ -163,11 +165,11 @@ def with_rag_fallback(results: DataFrame, parsed: DataFrame,
     reference's ENABLE_RAG default, config.py:67).
 
     Plan shape: the eligible slice is typically tiny (a handful of
-    (doc, param) misses), so the full parse's tables and chunks are
-    joined to just the docs with a miss, one narrow MapInPandas
-    retrieves and answers per document, and the patch is a left join
-    back to `results` — broadcastable whenever the miss set is
-    small."""
+    (doc, param) misses), so the full parse's clean spans are joined
+    to just the docs with a miss, one narrow MapInPandas builds tables
+    and chunks, retrieves and answers per document (the parse's build
+    UDF is pruned from the plan), and the patch is a left join back to
+    `results` — broadcastable whenever the miss set is small."""
     if not enabled:
         return results
     from ..extract import sqlexpr as X
@@ -185,12 +187,7 @@ def with_rag_fallback(results: DataFrame, parsed: DataFrame,
               .where(f"param_id NOT IN ({policy_ids})")
               .groupBy("doc_id")
               .agg(F.collect_set("param_id").alias("miss")))
-    # only the tables' candidate fields cross the Arrow boundary: their
-    # nested columns/rows are never read here, and shipping the full
-    # struct segfaulted the worker's Arrow→pandas conversion
-    answers = (parsed.select("doc_id", "doc_kind", F.expr(
-                   "transform(tables, t -> named_struct("
-                   "'id', t.id, 'raw', t.raw))").alias("tables"), "chunks")
+    answers = (parsed.select("doc_id", "doc_kind", "clean_spans")
                .join(misses, "doc_id")
                .mapInPandas(_answer_batches, schema=_FB_SCHEMA))
     patch = (answers

@@ -230,37 +230,3 @@ def ivf_topk(items: DataFrame, queries: DataFrame, k: int = 10,
             .select("query_id", "cand_id", "rank",
                     F.round("sim", 6).alias("sim")))
 
-
-# ---------------------------------------------------------------------------
-# JVM-side hashed bag-of-words embedding (foundation for moving the
-# retrieval stage out of Python entirely — docs/PLAN_NEXT.md item 1)
-# ---------------------------------------------------------------------------
-#
-# Bit-exact twin of semantics.embed: every vector component is a ± sum
-# of small integers, so float64 arithmetic is EXACT regardless of
-# evaluation order, and Spark's crc32() is the same CRC-32 (IEEE) as
-# zlib.crc32 — the SQL form therefore matches the numpy oracle
-# bit-for-bit (asserted in test_ops).
-
-EMBED_DIM = 64
-EMBED_MAX_CHARS = 1600
-
-
-def embed_expr(content: str) -> str:
-    """SQL expression: `content` (string) → array<double> of length 64,
-    equal to semantics.embed(content).
-
-    Tokenization parity: Python re.findall('[a-z0-9]+', s.lower()) ==
-    split on the complement with empties dropped.  Dimension/sign:
-    h = crc32(utf-8 bytes); dim = h % 64; sign = +1 if bit 8 else -1.
-    One interpreted aggregate pass per string — fine for dimension
-    tables / tests; the scale path is the exploded relational form
-    sketched in docs/PLAN_NEXT.md."""
-    toks = (f"filter(split(lower(substring({content}, 1, {EMBED_MAX_CHARS})), "
-            f"'[^a-z0-9]+'), t -> t != '')")
-    step = ("transform(acc, (v, i) -> CASE WHEN i = cast(crc32(encode(t, 'utf-8')) % "
-            f"{EMBED_DIM} AS int) "
-            "THEN v + (CASE WHEN (crc32(encode(t, 'utf-8')) >> 8) % 2 = 1 "
-            "THEN 1.0d ELSE -1.0d END) ELSE v END)")
-    return (f"aggregate({toks}, array_repeat(0.0d, {EMBED_DIM}), "
-            f"(acc, t) -> {step})")

@@ -1,4 +1,4 @@
-"""PARSE stage — the JVM parse and the flagship vectorized Arrow stage.
+"""PARSE stage — the full parse and the flagship vectorized Arrow stage.
 
 ``documents(doc_id, spans)`` → per-document parsed structure:
 
@@ -10,16 +10,14 @@
 
 Two physical forms share the :mod:`..semantics` definitions:
 
-* ``parse_documents(docs)``: pure JVM SQL (``parse_documents_jvm``),
-  prunable per consumer, no Python boundary;
+* ``parse_documents(docs)``: JVM clean spans (``_clean_spans_sql``)
+  plus one scalar ``pandas_udf`` (``_build``) that builds text, tables
+  and chunks from them; a consumer that reads only the clean spans
+  never runs the UDF (Catalyst prunes it);
 * ``parse_documents(docs, fuse_retrieval=True)``: the flagship's ONE
   ``mapInPandas`` stage — ``_fused_row`` maps each document to one row
   of ``FUSED_SCHEMA`` (parse, retrieval, per-parameter scalars), no
   per-row Python UDFs, no shuffle.
-
-``_parse_batches`` is the relational engine's Arrow stage
-(extract.crif.extract_all): text, tables and chunks built from the
-clean spans of a JVM parse.
 """
 
 from __future__ import annotations
@@ -93,26 +91,6 @@ def _span_dicts(spans) -> list[dict]:
     return [{"kind": s["kind"], "text": s["text"],
              "media_ref": s["media_ref"], "offset": int(s["offset"])}
             for s in spans]
-
-
-#: the relational engine's Arrow stage output (``_parse_batches``)
-BUILT_SCHEMA = T.StructType([PARSED_SCHEMA[c] for c in (
-    "doc_id", "doc_kind", "text", "tables", "chunks")])
-
-
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The relational engine's one Python stage: ``(doc_id, doc_kind,
-    clean_spans)`` → ``BUILT_SCHEMA``.  Text, tables and chunks are
-    built from the clean spans as given (the JVM ones); nothing is
-    re-cleaned here."""
-    names = BUILT_SCHEMA.fieldNames()
-    for pdf in batches:
-        yield pd.DataFrame(
-            [(doc_id, kind, S.render_text(cs), S.build_tables(cs),
-              S.build_chunks(cs))
-             for doc_id, kind, cs in zip(pdf["doc_id"], pdf["doc_kind"],
-                                         pdf["clean_spans"])],
-            columns=names)
 
 
 #: chunk-aware flag parameters (crif_models.py:52-60 predicates — the
@@ -267,28 +245,25 @@ def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 
 
 # ---------------------------------------------------------------------------
-# JVM (pure-SQL) parse — r6 optimization
+# Full parse: JVM clean spans + one build UDF
 # ---------------------------------------------------------------------------
 #
-# The full-schema parse is higher-order SQL over the spans array: no
-# Python boundary, and Catalyst prunes per consumer — a
-# clean_spans-only consumer never computes text/tables/chunks (an
-# opaque Python stage would compute and ship every column for every
-# consumer, guide §4.1/§4.2).  Every expression below mirrors a
-# `semantics.py` function line by line (named in comments); the parity
-# suite (tests/test_jvm_parse, scripts/smoke.py span diff, A9b
-# agreement) pins JVM-vs-Python equality.
+# The clean spans are higher-order SQL over the spans array, so a
+# clean_spans-only consumer (pipeline.run's spans, extract_job
+# --spans-output) has no Python boundary.  Text, tables and chunks come
+# from the semantics functions the oracle and the fused stage run,
+# through one scalar pandas_udf over the clean spans: an expression, so
+# Catalyst drops it when nothing reads those three columns (an opaque
+# mapInPandas would compute and ship every column for every consumer,
+# guide §4.1/§4.2).  The clean-spans expression mirrors
+# semantics.clean_spans line by line; tests/test_jvm_parse and the
+# scripts/smoke.py span diff pin the full parse against the oracle.
 
 #: Java-regex char class of exactly CPython's str whitespace set
 #: (Py_UNICODE_ISSPACE) — `str.split()` / `str.strip()` parity needs
 #: the full set, not regex \s (which lacks \xa0 etc.)
 _PY_WS_CLASS = "[" + "".join(
     f"\\\\u{o:04x}" for o in range(0x10000) if chr(o).isspace()) + "]"
-
-#: python str.strip() as SQL: drop leading/trailing python-whitespace
-def _pystrip(e: str) -> str:
-    return (f"regexp_replace({e}, "
-            f"'^{_PY_WS_CLASS}+|{_PY_WS_CLASS}+$', '')")
 
 
 def _clean_spans_sql() -> str:
@@ -315,133 +290,28 @@ def _clean_spans_sql() -> str:
             f"'media_ref', s.media_ref, 'offset', cast(i AS int)))")
 
 
-#: semantics.render_line for a table span: '| <line> |' per grid line
-def _table_md(raw: str) -> str:
-    return (f"array_join(transform(split({raw}, '\\\\n'), "
-            f"ln -> concat('| ', ln, ' |')), '\\n')")
+#: the build UDF's output: the three built columns of ``PARSED_SCHEMA``
+BUILD_TYPE = T.StructType([PARSED_SCHEMA[c]
+                           for c in ("text", "tables", "chunks")])
 
 
-def _render_text_sql(clean: str) -> str:
-    """semantics.render_text over the clean spans: heading → '# ' +
-    text, text → raw, table → markdown pipe rows, others skipped."""
-    return (f"array_join(transform("
-            f"filter({clean}, s -> s.kind IN ('heading', 'text', 'table')), "
-            f"s -> CASE WHEN s.kind = 'heading' THEN concat('# ', s.text) "
-            f"WHEN s.kind = 'text' THEN s.text "
-            f"ELSE {_table_md('s.text')} END), '\\n')")
-
-
-def _chunks_sql(clean: str) -> str:
-    """semantics.build_chunks: the renderable spans stream into
-    header-delimited chunks — a heading closes the current chunk (kept
-    when its text is non-blank by python-strip) and opens
-    header=line.strip('# '), text=line+'\\n'; text/table lines append;
-    the final partial chunk is flushed; chunk_idx = enumerate.
-
-    Formulated SEGMENT-wise, not as an aggregate() fold: segment k
-    spans the rendered lines [bounds[k], bounds[k+1]) where bounds =
-    1 ++ heading positions ++ n+1, its text is the '\\n'-join of those
-    lines plus a trailing newline, and its header is 'Start' for the
-    pre-heading prefix or the heading line stripped of '# '.  The
-    obvious fold re-concats the accumulated text at every span —
-    O(chunk_chars × spans) per document; it alone was 13.9 s of the
-    16.7 s full-parse noop at 240k docs — while the segment form copies
-    every line exactly once."""
-    lines = (f"transform(filter({clean}, "
-             f"s -> s.kind IN ('heading', 'text', 'table')), "
-             f"s -> named_struct('h', s.kind = 'heading', "
-             f"'line', CASE WHEN s.kind = 'heading' "
-             f"THEN concat('# ', s.text) "
-             f"WHEN s.kind = 'text' THEN s.text "
-             f"ELSE {_table_md('s.text')} END))")
-    # positions (1-based) of heading lines; segment bounds around them
-    # (CASE guard: sequence(1, 0) is DESCENDING [1, 0] in Spark, so the
-    # un-guarded form probes element_at(rl, 1) on an empty array)
-    bounds = ("CASE WHEN size(rl) = 0 THEN array(1, 1) "
-              "ELSE concat(array(1), "
-              "filter(sequence(1, size(rl)), "
-              "i -> element_at(rl, i).h), "
-              "array(size(rl) + 1)) END")
-    seg = ("transform(sequence(1, size(bs) - 1), k -> named_struct("
-           "'header', CASE WHEN k = 1 THEN 'Start' "
-           "ELSE trim(BOTH '# ' FROM "
-           "element_at(rl, element_at(bs, k)).line) END, "
-           "'text', CASE WHEN element_at(bs, k + 1) > element_at(bs, k) "
-           "THEN concat(array_join(transform("
-           "slice(rl, element_at(bs, k), "
-           "element_at(bs, k + 1) - element_at(bs, k)), x -> x.line), "
-           "'\\n'), '\\n') ELSE '' END))")
-    nonblank = _pystrip("c.text") + " != ''"
-    # bind rl then bs via single-element transform shells (a spliced
-    # subexpression inside a lambda would re-evaluate per element)
-    segs = (f"element_at(transform(array({lines}), rl -> "
-            f"element_at(transform(array({bounds}), bs -> {seg}), 1)), 1)")
-    return (f"transform(filter({segs}, c -> {nonblank}), "
-            f"(c, i) -> named_struct("
-            f"'chunk_idx', cast(i AS int), 'header', c.header, "
-            f"'text', c.text))")
-
-
-def _with_tables_cols(df: DataFrame) -> DataFrame:
-    """semantics.build_tables + parse_table as staged array columns
-    (each intermediate bound ONCE — a spliced subexpression inside a
-    lambda is re-evaluated per element, the q_minhash_bands disease).
-
-    parse_table semantics: line 0 = '|'-separated column names
-    (python-stripped); blank line 0 → ([], []); following non-blank
-    lines = rows, cells python-stripped then padded/truncated to the
-    column count; page = 'page:(\\d+)$' match on media_ref else -1."""
-    from .extract.sqlexpr import SLICE_REST
-    df = df.withColumn("_tsp", F.expr(
-        "filter(_clean, s -> s.kind = 'table')"))
-    df = df.withColumn("_tlines", F.expr(
-        "transform(_tsp, s -> split(s.text, '\\\\n'))"))
-    df = df.withColumn("_tcols", F.expr(
-        f"transform(_tlines, lines -> "
-        f"CASE WHEN {_pystrip('element_at(lines, 1)')} = '' "
-        f"THEN cast(array() AS ARRAY<STRING>) "
-        f"ELSE transform(split(element_at(lines, 1), '\\\\|'), "
-        f"c -> {_pystrip('c')}) END)"))
-    cells = _pystrip("try_element_at(cs, j)")
-    df = df.withColumn("_trows", F.expr(
-        f"zip_with(_tlines, _tcols, (lines, cols) -> "
-        f"CASE WHEN size(cols) = 0 "
-        f"THEN cast(array() AS ARRAY<ARRAY<STRING>>) "
-        f"ELSE transform("
-        f"transform(filter(slice(lines, 2, {SLICE_REST}), "
-        f"ln -> {_pystrip('ln')} != ''), ln -> split(ln, '\\\\|')), "
-        f"cs -> transform(sequence(1, size(cols)), "
-        f"j -> coalesce({cells}, ''))) END)"))
-    return df.withColumn("_tables", F.expr(
-        "transform(_tsp, (s, i) -> named_struct("
-        "'id', cast(i AS int), "
-        "'page', coalesce(try_cast(regexp_extract("
-        "coalesce(s.media_ref, ''), '^page:([0-9]+)$', 1) AS int), -1), "
-        "'columns', element_at(_tcols, i + 1), "
-        "'rows', element_at(_trows, i + 1), "
-        "'raw', s.text))"))
-
-
-def parse_documents_jvm(docs: DataFrame) -> DataFrame:
-    """Pure-JVM parse: documents(doc_id, spans) → PARSED_SCHEMA, no
-    Python stage (see the section comment above)."""
-    df = docs.withColumn("_clean", F.expr(_clean_spans_sql()))
-    df = _with_tables_cols(df)
-    return df.select(
-        "doc_id",
-        F.expr(DOC_KIND_SQL).alias("doc_kind"),
-        F.expr("cast(size(spans) AS int)").alias("n_spans"),
-        F.col("_clean").alias("clean_spans"),
-        F.expr(_render_text_sql("_clean")).alias("text"),
-        F.col("_tables").alias("tables"),
-        F.expr(_chunks_sql("_clean")).alias("chunks"),
-    )
+@F.pandas_udf(BUILD_TYPE)
+def _build(clean_spans: pd.Series) -> pd.DataFrame:
+    """Clean spans → (text, tables, chunks), per document, with the
+    semantics functions; the clean spans are used as given (the JVM
+    ones), nothing is re-cleaned here."""
+    return pd.DataFrame(
+        [(S.render_text(cs), S.build_tables(cs), S.build_chunks(cs))
+         for cs in clean_spans],
+        columns=BUILD_TYPE.fieldNames())
 
 
 def parse_documents(docs: DataFrame, fuse_retrieval: bool = False) -> DataFrame:
     """documents(doc_id, spans) → parsed-document DataFrame, narrow (no
-    shuffle).  The default is the full ``PARSED_SCHEMA`` from the
-    pure-JVM parse (``parse_documents_jvm``).
+    shuffle).  The default is the full ``PARSED_SCHEMA``: kind, span
+    count and clean spans JVM-side, then text, tables and chunks from
+    the one ``_build`` UDF, evaluated once per document and only when
+    one of them is read.
 
     ``fuse_retrieval=True`` emits the FULLY PRE-FLATTENED extraction
     input from one Arrow-batched Python stage (``FUSED_SCHEMA``;
@@ -457,10 +327,17 @@ def parse_documents(docs: DataFrame, fuse_retrieval: bool = False) -> DataFrame:
 
     NULL ``spans`` parse as no spans (``_no_null_spans``).
     """
+    docs = _no_null_spans(docs)
     if fuse_retrieval:
-        return _no_null_spans(docs).mapInPandas(_parse_retr_batches,
-                                                schema=FUSED_SCHEMA)
-    return parse_documents_jvm(_no_null_spans(docs))
+        return docs.mapInPandas(_parse_retr_batches, schema=FUSED_SCHEMA)
+    return (docs.select(
+                "doc_id",
+                F.expr(DOC_KIND_SQL).alias("doc_kind"),
+                F.expr("cast(size(spans) AS int)").alias("n_spans"),
+                F.expr(_clean_spans_sql()).alias("clean_spans"))
+            .withColumn("_built", _build("clean_spans"))
+            .select("doc_id", "doc_kind", "n_spans", "clean_spans",
+                    "_built.*"))
 
 
 def _no_null_spans(docs: DataFrame) -> DataFrame:

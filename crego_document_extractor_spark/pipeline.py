@@ -10,7 +10,9 @@ lineage job, streaming, the benchmarks) builds its results with
   report aggregates, per-parameter scalars (narrow, no shuffle)
 * a codegen projection building the result structs, explode
 
-Clean spans come from the prunable pure-JVM parse of the same input.
+Clean spans come from the full parse of the same input: JVM clean
+spans plus one build UDF for text, tables and chunks, which Catalyst
+prunes when only the clean spans are read.
 The only wide operation is the optional per-document output assembly
 groupBy (S8).
 

@@ -10,7 +10,8 @@ Ship the package with --py-files and run:
 
 Results come from the fused production plan
 (``pipeline.extract_from_raw``, through ``lineage.run_with_lineage``);
---spans-output comes from the prunable JVM parse of the same input.
+--spans-output comes from the full parse of the same input, which for
+clean spans alone is JVM-only (its build UDF is pruned).
 The job is resumable: re-submitting with the same --output continues
 from the lineage manifest (only buckets not yet marked done run).
 """

@@ -1,12 +1,12 @@
-"""Focused differential tests for the pure-SQL parse
-(`parse_documents_jvm`): every output column must equal the Python
-twin (`oracle.parse_document` plus `parse._doc_kind`, the same
-semantics functions the fused stage runs) value-for-value — including
-the edge cases the SQL formulation had to reproduce deliberately
-(stable offset sort, CPython whitespace semantics, `strip('# ')`
-headers, blank table header lines, empty spans).  The relational
-engine builds its text, tables and chunks from these JVM clean spans
-(`test_sql_engine_reads_any_full_parse`)."""
+"""Focused differential tests for the full parse (`parse_documents`:
+JVM clean spans plus the one build UDF): every output column must equal
+the Python twin (`oracle.parse_document` plus `parse._doc_kind`, the
+same semantics functions the fused stage runs) value-for-value —
+including the edge cases the SQL clean-spans expression had to
+reproduce deliberately (stable offset sort, CPython whitespace
+semantics) and those of the build (`strip('# ')` headers, blank table
+header lines, empty spans).  The relational engine reads its text,
+tables and chunks from this parse (`test_sql_engine_reads_any_full_parse`)."""
 
 import pytest
 
@@ -20,10 +20,10 @@ def _py_rows(docs):
             for d in docs}
 
 
-def _jvm_rows(spark, docs):
+def _spark_rows(spark, docs):
     sdf = spark.createDataFrame([(d["doc_id"], d["spans"]) for d in docs],
                                 parse.DOCUMENTS_SCHEMA)
-    return {r["doc_id"]: r for r in parse.parse_documents_jvm(sdf).collect()}
+    return {r["doc_id"]: r for r in parse.parse_documents(sdf).collect()}
 
 
 def _assert_equal(got, exp):
@@ -50,7 +50,7 @@ def _assert_equal(got, exp):
 def test_jvm_parse_matches_python_on_generated_corpus(spark):
     """300 generator docs incl. the heavy-tail class (big_doc_every)."""
     docs = list(corpus.gen_documents(300, seed=23, big_doc_every=29))
-    _assert_equal(_jvm_rows(spark, docs), _py_rows(docs))
+    _assert_equal(_spark_rows(spark, docs), _py_rows(docs))
 
 
 def _sp(kind, text="", media_ref="", offset=0):
@@ -106,14 +106,15 @@ EDGE_DOCS = [
 
 
 def test_jvm_parse_matches_python_on_edge_docs(spark):
-    _assert_equal(_jvm_rows(spark, EDGE_DOCS), _py_rows(EDGE_DOCS))
+    _assert_equal(_spark_rows(spark, EDGE_DOCS), _py_rows(EDGE_DOCS))
 
 
 def test_sql_engine_reads_any_full_parse(spark):
-    """extract_all(engine='sql') reads only doc_id, doc_kind and
-    clean_spans: an untouched parse, a filtered one and the bare JVM
-    parse each execute with exactly one MapInPandas (the Arrow build of
-    text/tables/chunks) and give identical result rows."""
+    """extract_all(engine='sql') reads text, tables and chunks straight
+    from the full parse: an untouched parse and a filtered one each
+    execute with exactly one Python stage (one ArrowEvalPython, the
+    build UDF evaluated once; no MapInPandas) and give identical result
+    rows.  A fused parse has no text, tables or chunks: it is refused."""
     from crego_document_extractor_spark.extract.crif import extract_all
 
     docs = list(corpus.gen_documents(40, seed=5))
@@ -121,13 +122,16 @@ def test_sql_engine_reads_any_full_parse(spark):
                                 parse.DOCUMENTS_SCHEMA)
     rows = []
     for parsed in (parse.parse_documents(sdf),
-                   parse.parse_documents(sdf).where("doc_id IS NOT NULL"),
-                   parse.parse_documents_jvm(sdf)):
+                   parse.parse_documents(sdf).where("doc_id IS NOT NULL")):
         out = extract_all(parsed, engine="sql")
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "MapInPandas" not in plan, plan
         rows.append(sorted(map(tuple, out.collect())))
-    assert rows[0] and rows[0] == rows[1] == rows[2]
+    assert rows[0] and rows[0] == rows[1]
+    with pytest.raises(ValueError):
+        extract_all(parse.parse_documents(sdf, fuse_retrieval=True),
+                    engine="sql")
 
 
 @pytest.mark.parametrize("n_parts", [1, 7])
@@ -136,5 +140,5 @@ def test_jvm_parse_partition_invariant(spark, n_parts):
     sdf = spark.createDataFrame([(d["doc_id"], d["spans"]) for d in docs],
                                 parse.DOCUMENTS_SCHEMA).repartition(n_parts)
     _assert_equal({r["doc_id"]: r
-                   for r in parse.parse_documents_jvm(sdf).collect()},
+                   for r in parse.parse_documents(sdf).collect()},
                   _py_rows(docs))

@@ -167,30 +167,6 @@ def test_minhash_signature_matches_hof_formulation(text_df):
     assert got == exp
 
 
-def test_jvm_embed_matches_python_oracle(spark):
-    """ops/similarity.embed_expr must equal semantics.embed
-    bit-for-bit: exact small-integer float64 arithmetic + identical
-    CRC-32 make the SQL and numpy formulations interchangeable (the
-    foundation for a Python-free retrieval stage)."""
-    from crego_document_extractor_spark import semantics as S
-    from crego_document_extractor_spark.ops.similarity import embed_expr
-    from pyspark.sql import functions as F
-
-    texts = [
-        "Account Type: Personal Loan, Current Balance: 1,23,456",
-        "the quick brown fox JUMPED over 42 lazy dogs " * 80,  # >1600 chars
-        "",
-        "punctuation!!! only??? ---",
-        "MixedCASE tokens 007 e2e x" + "y" * 2000,
-        "unicode ₹500 naïve café øre",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "content string")
-    got = [list(r[0]) for r in
-           df.select(F.expr(embed_expr("content"))).collect()]
-    exp = [list(S.embed(t)) for t in texts]
-    assert got == exp
-
-
 def test_embedding_near_duplicates_finds_planted_dups(spark):
     """LSH-bucketed embedding near-dup: planted near-identical vectors
     must be found; verified pairs must equal the exact cosine filter

@@ -168,6 +168,20 @@ def test_run_plan_ignores_rag_env(spark, raw_docs, monkeypatch):
     _assert_run_ships_fused_plan(spark, raw_docs)
 
 
+def test_clean_spans_plans_have_no_python_stage(spark, raw_docs):
+    """Clean-span consumers stay JVM-only: nothing reads the full
+    parse's text, tables or chunks, so Catalyst prunes its build UDF
+    and neither plan has a Python node."""
+    docs = spark.createDataFrame(
+        [(d["doc_id"], d["spans"]) for d in raw_docs[:40]], DOCUMENTS_SCHEMA)
+    for spans in (pipeline.clean_spans(pipeline.parse_documents(docs)),
+                  pipeline.run(docs)[0]):
+        spans.collect()
+        plan = spans._jdf.queryExecution().executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+            assert node not in plan, plan
+
+
 @pytest.mark.parametrize("form", sorted(FORMS))
 def test_null_spans_parse_as_no_spans(spark, form):
     """A document whose spans are NULL is a document with no spans: its
