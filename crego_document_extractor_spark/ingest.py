@@ -8,10 +8,11 @@ Two from-scratch ingestion fronts produce the engine's canonical
   boilerplate kinds, <h1>-<h6> to heading spans, <img> to media spans,
   and anchors render as markdown links so the downstream link-density
   rule (semantics.is_boilerplate) sees them.  No external parser.
-* ``pdf_runs_to_spans`` — PDF text-run merging: runs carrying
-  (page, x, y) coordinates are grouped into y-coordinate bands and
-  sorted into reading order (page, band, x) — pure relational Spark
-  (groupBy + sort_array + window), no UDF.
+* ``ingest_pdf`` — a from-scratch PDF byte extractor
+  (``pdf_text_runs``) yields text runs carrying (page, x, y, width,
+  font size); ``pdf_runs_to_documents`` gap-clusters them into lines in
+  reading order (page, line, x) and reconstructs heading, table and
+  media spans — pure relational Spark (windows + one groupBy), no UDF.
 
 Both run Arrow-batched / JVM-side; nothing is per-row Python.
 """
@@ -153,11 +154,18 @@ def tokenize_html(html: str) -> list[dict]:
     return spans
 
 
+def _payloads(pdf: pd.DataFrame) -> Iterator[tuple[str, bytes]]:
+    """(doc_id, payload bytes) of one raw batch.  A NULL payload is an
+    empty one: its document ingests with no spans, never a failed job."""
+    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+        yield doc_id, b"" if payload is None else bytes(payload)
+
+
 def _html_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out = {"doc_id": [], "spans": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            html = bytes(payload).decode("utf-8", errors="replace")
+        for doc_id, payload in _payloads(pdf):
+            html = payload.decode("utf-8", errors="replace")
             out["doc_id"].append(doc_id)
             out["spans"].append(tokenize_html(html))
         yield pd.DataFrame(out)
@@ -479,8 +487,8 @@ def _est_width(text: str, size: float) -> float:
 
 def pdf_text_runs(data: bytes) -> list[dict]:
     """PDF bytes → [{page, x, y, w, size, text}] runs.  y is emitted
-    FLIPPED (PDF user space grows upward; the banding in
-    pdf_runs_to_spans reads top-down), so ascending y is reading
+    FLIPPED (PDF user space grows upward; the line clustering in
+    pdf_runs_to_documents reads top-down), so ascending y is reading
     order.  w is the estimated advance width and size the device-space
     font size (Tf size × text/graphics matrix vertical scale) — the
     relational table reconstruction uses both for adaptive cell
@@ -499,9 +507,7 @@ def pdf_text_runs(data: bytes) -> list[dict]:
 
 def _content_runs(page_no: int, content: bytes, fonts: dict,
                   images: dict) -> list[dict]:
-    """Token-loop interpretation of ONE page's content stream — the
-    per-page unit ingest_pdf's split_pages path fans out across tasks
-    (a 10k-page PDF is otherwise a single straggler task)."""
+    """Token-loop interpretation of ONE page's content stream."""
     runs: list[dict] = []
     stack: list = []
     x = y = 0.0
@@ -597,6 +603,12 @@ _RUNS_SCHEMA = ("doc_id string, page int, x double, y double, "
                 "w double, sz double, msize double, text string, "
                 "media string")
 
+#: the one run of a document whose bytes yield none (junk, empty or
+#: NULL payload): no page and no text, so pdf_runs_to_documents gives
+#: the document a row with no spans instead of dropping it
+_NO_RUNS = [{"page": None, "x": None, "y": None, "w": None, "size": None,
+             "text": "", "media": None}]
+
 
 def _pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # msize = the document's modal (body) font size, weighted by text
@@ -605,14 +617,14 @@ def _pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         out = {k: [] for k in
                ("doc_id", "page", "x", "y", "w", "sz", "msize", "text",
                 "media")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rs = pdf_text_runs(bytes(payload))
+        for doc_id, payload in _payloads(pdf):
+            rs = pdf_text_runs(payload)
             weights: dict[float, int] = {}
             for r in rs:
                 k = round(r["size"], 1)
                 weights[k] = weights.get(k, 0) + len(r["text"])
             msize = max(weights, key=lambda k: (weights[k], k)) if weights else 12.0
-            for r in rs:
+            for r in rs or _NO_RUNS:
                 out["doc_id"].append(doc_id)
                 out["page"].append(r["page"])
                 out["x"].append(r["x"])
@@ -625,167 +637,16 @@ def _pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-_PAGES_SCHEMA = ("doc_id string, page int, content binary, "
-                 "fonts binary, images binary")
-
-
-def _pdf_split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Document bytes → one row PER PAGE (content stream + pickled
-    font CMaps / image XObject maps).  Cheap relative to the token
-    loop: object scan + stream inflate only — the expensive
-    interpretation fans out across tasks in `_pdf_page_batches`."""
-    import pickle
-
-    for pdf in batches:
-        out = {k: [] for k in
-               ("doc_id", "page", "content", "fonts", "images")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            for page_no, (content, fonts, images) in enumerate(
-                    _page_contents(bytes(payload)), start=1):
-                out["doc_id"].append(doc_id)
-                out["page"].append(page_no)
-                out["content"].append(content)
-                out["fonts"].append(pickle.dumps(fonts))
-                out["images"].append(pickle.dumps(images))
-        yield pd.DataFrame(out)
-
-
-_PAGE_RUNS_SCHEMA = ("doc_id string, page int, x double, y double, "
-                     "w double, sz double, szk double, text string, "
-                     "media string")
-
-
-def _pdf_page_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """One page-content row → its text runs.  `szk` is the PYTHON
-    round(size, 1) so the relational modal-size aggregation downstream
-    reproduces `_pdf_batches`'s weights dict exactly (Spark's round()
-    is HALF_UP; Python's is banker's — they differ on .x5 sizes)."""
-    import pickle
-
-    for pdf in batches:
-        out = {k: [] for k in
-               ("doc_id", "page", "x", "y", "w", "sz", "szk", "text",
-                "media")}
-        for doc_id, page, content, fonts, images in zip(
-                pdf["doc_id"], pdf["page"], pdf["content"],
-                pdf["fonts"], pdf["images"]):
-            for r in _content_runs(int(page), bytes(content),
-                                   pickle.loads(bytes(fonts)),
-                                   pickle.loads(bytes(images))):
-                out["doc_id"].append(doc_id)
-                out["page"].append(r["page"])
-                out["x"].append(r["x"])
-                out["y"].append(r["y"])
-                out["w"].append(r["w"])
-                out["sz"].append(r["size"])
-                out["szk"].append(round(r["size"], 1))
-                out["text"].append(r["text"])
-                out["media"].append(r["media"])
-        yield pd.DataFrame(out)
-
-
-def pdf_runs_with_modal_size(runs: DataFrame) -> DataFrame:
-    """Attach the per-DOCUMENT modal font size (text-length weighted,
-    ties → larger size) to per-page runs — the relational twin of the
-    Python weights dict in `_pdf_batches`.  Media runs participate
-    with weight 0, matching the Python path."""
-    wsz = Window.partitionBy("doc_id", "szk")
-    wdoc = Window.partitionBy("doc_id")
-    return (runs
-            .withColumn("_wt", F.sum(F.length("text")).over(wsz))
-            .withColumn("msize", F.max(
-                F.struct(F.col("_wt"), F.col("szk"))).over(wdoc)["szk"])
-            .drop("_wt", "szk"))
-
-
-def ingest_pdf(raw: DataFrame, band_height: float = 12.0,
-               tables: bool = True, split_pages: bool | str = False,
-               page_partitions: int | None = None,
-               split_threshold_bytes: int = 4 << 20) -> DataFrame:
+def ingest_pdf(raw: DataFrame) -> DataFrame:
     """raw(doc_id string, payload binary) → documents(doc_id, spans):
-    byte-level text extraction (Arrow-batched) + the relational y-band
-    reading-order merge — the S1→S2 loop on real PDF bytes.  With
-    ``tables`` (default) x-position column banding additionally
-    reconstructs table spans (pdf_runs_to_documents), which is what
-    lets the GSTR/CRIF signature extractors run on real fixture PDFs.
-
-    ``split_pages=True`` routes through a two-stage plan: a cheap
-    per-document page-splitting MapInPandas, a repartition on
-    (doc_id, page), then the expensive token-loop MapInPandas on
-    per-PAGE rows — so one 10k-page PDF fans out across the cluster
-    instead of serializing a single straggler task (r4 VERDICT #3).
-    The modal-font-size column is recovered relationally
-    (`pdf_runs_with_modal_size`), and the reconstruction is already
-    partitioning-invariant (tests/test_ingest.py), so the output is
-    byte-identical to the default path.  Use for few-huge-documents
-    inputs; the default single-stage path avoids the extra shuffle
-    for ordinary many-document corpora.
-
-    ``split_pages='auto'`` routes only payloads larger than
-    ``split_threshold_bytes`` (default 4 MiB) through the per-page
-    plan and everything else through the single-stage plan, unioned
-    into ONE reconstruction — mixed corpora get mega-PDF fan-out
-    without paying the page shuffle for ordinary documents."""
-    if split_pages == "auto":
-        big = raw.where(F.length("payload") > split_threshold_bytes)
-        small = raw.where(F.length("payload") <= split_threshold_bytes)
-        pages = big.select("doc_id", "payload").mapInPandas(
-            _pdf_split_batches, schema=_PAGES_SCHEMA)
-        n_parts = page_partitions or raw.sparkSession.sparkContext.defaultParallelism * 2
-        big_runs = pdf_runs_with_modal_size(
-            pages.repartition(n_parts, "doc_id", "page")
-            .mapInPandas(_pdf_page_batches, schema=_PAGE_RUNS_SCHEMA))
-        runs = (small.select("doc_id", "payload")
-                .mapInPandas(_pdf_batches, schema=_RUNS_SCHEMA)
-                .unionByName(big_runs))
-        if tables:
-            return pdf_runs_to_documents(runs)
-        return pdf_runs_to_spans(runs, band_height=band_height)
-    if split_pages:
-        pages = raw.select("doc_id", "payload").mapInPandas(
-            _pdf_split_batches, schema=_PAGES_SCHEMA)
-        n_parts = page_partitions or raw.sparkSession.sparkContext.defaultParallelism * 2
-        page_runs = (pages.repartition(n_parts, "doc_id", "page")
-                     .mapInPandas(_pdf_page_batches,
-                                  schema=_PAGE_RUNS_SCHEMA))
-        runs = pdf_runs_with_modal_size(page_runs)
-    else:
-        runs = raw.select("doc_id", "payload").mapInPandas(
-            _pdf_batches, schema=_RUNS_SCHEMA)
-    if tables:
-        # gap-clustered lines + anchor-aware cells (the defaults)
-        return pdf_runs_to_documents(runs)
-    return pdf_runs_to_spans(runs, band_height=band_height)
-
-
-# ---------------------------------------------------------------------------
-# PDF text runs → spans (pure relational, no UDF)
-# ---------------------------------------------------------------------------
-
-def pdf_runs_to_spans(runs: DataFrame, band_height: float = 12.0) -> DataFrame:
-    """runs(doc_id, page int, x double, y double, text string) →
-    documents(doc_id, spans): y-coordinate banding + reading-order sort
-    (page asc, band asc, x asc), one text span per band, page
-    provenance as the media_ref of a leading media span per page."""
-    if "media" in runs.columns:   # media runs: table-free variant drops them
-        runs = runs.where("media IS NULL")
-    banded = runs.withColumn(
-        "band", F.floor(F.col("y") / F.lit(band_height)).cast("int"))
-    lines = (banded.groupBy("doc_id", "page", "band")
-             .agg(F.array_join(
-                 F.expr("transform(array_sort(collect_list("
-                        "named_struct('x', x, 't', text))), r -> r.t)"),
-                 " ").alias("line_text")))
-    w = Window.partitionBy("doc_id").orderBy("page", "band")
-    ordered = lines.withColumn("pos", F.row_number().over(w) - 1)
-    return (ordered.groupBy("doc_id")
-            .agg(F.expr(
-                "transform(array_sort(collect_list(named_struct("
-                "'pos', pos, 'page', page, 'line_text', line_text))), "
-                "(r, i) -> named_struct("
-                "'kind', 'text', 'text', r.line_text, "
-                "'media_ref', concat('page:', cast(r.page AS string)), "
-                "'offset', i))").alias("spans")))
+    byte-level text extraction (one Arrow-batched MapInPandas) + the
+    relational reconstruction of ``pdf_runs_to_documents`` — the S1→S2
+    loop on real PDF bytes.  Its table spans are what let the GSTR/CRIF
+    signature extractors run on real fixture PDFs.  Every distinct
+    input doc_id gets one row; a document whose bytes yield no text
+    runs (junk, empty or NULL payload) has ``spans = []``."""
+    return pdf_runs_to_documents(raw.select("doc_id", "payload").mapInPandas(
+        _pdf_batches, schema=_RUNS_SCHEMA))
 
 
 # ---------------------------------------------------------------------------
@@ -798,7 +659,7 @@ def pdf_runs_to_spans(runs: DataFrame, band_height: float = 12.0) -> DataFrame:
 #   y-band lines → per-line CELLS (x-gap split; a run's end is
 #   estimated as x + len(text)·char_width since PDF run widths are not
 #   carried) → ≥2-cell lines, 1-line gap closing (wrapped row labels)
-#   → ≥min_table_lines consecutive = a table block → block line 0 is
+#   → ≥_MIN_TABLE_LINES consecutive = a table block → block line 0 is
 #   the column header; later lines map cells into column slots by x →
 #   one 'table' span per block carrying the serialized grid
 #   (FIXTURES.md §1) that semantics.parse_table / the SQL signature
@@ -809,20 +670,20 @@ def pdf_runs_to_spans(runs: DataFrame, band_height: float = 12.0) -> DataFrame:
 # taxable columns) and yield the golden month + taxable value
 # (tests/test_reference_parity.py).
 
+#: a new line starts where the y-gap to the previous run exceeds this
+#: (points); fixed-height banding merges the ~3pt line spacing of dense
+#: reports (the reference's CRIF fixtures) into mangled rows
+_BAND_GAP = 4.0
+#: a new cell starts where the x-gap exceeds this many font sizes
+_GAP_EM = 1.2
+#: gap-cluster rows a table block needs without stronger evidence
+_MIN_TABLE_LINES = 3
+#: a heading's runs are all at least this many modal font sizes
+_HEADING_EM = 1.25
+
 _CELL_TYPE = ("array<struct<x:double,e:double,"
               "ms:array<struct<y:double,x:double,t:string>>>>")
 _NORM = "regexp_replace(trim({0}), '\\\\s+', ' ')"
-
-#: phase-2 per-block column anchors: x-starts (rounded to 0.1) shared
-#: by >= 3 distinct lines WITHIN the table block — left-aligned table
-#: columns.  Scoped per block, not per page: repeated section headers
-#: ("Nature of Supplies" across GSTR tables) would otherwise turn
-#: mid-phrase word positions into page-wide anchors and shred headers.
-_BLOCK_ANCHORS = (
-    "filter(array_distinct(transform(flatten(transform(tl, ln -> ln.rs)), "
-    "r -> round(r.x, 1))), v -> "
-    "size(filter(tl, ln -> exists(ln.rs, r -> round(r.x, 1) = v))) >= 3)"
-)
 
 
 def _cell_text(cell_expr: str) -> str:
@@ -832,12 +693,11 @@ def _cell_text(cell_expr: str) -> str:
     return f"array_join(transform(array_sort({cell_expr}.ms), m -> m.t), ' ')"
 
 
-def _cells_fold(runs_expr: str, gap_em: float,
-                anchors: str | None = None) -> str:
+def _cells_fold(runs_expr: str, anchors: str | None = None) -> str:
     """Fold x-sorted (x, y, w, sz, t) runs into cells: split when the
     gap from the previous cell's estimated end (x + w, w from the
     per-character width model in ``_est_width``) exceeds
-    ``gap_em × font_size`` — the inter-column whitespace of a table
+    ``_GAP_EM × font_size`` — the inter-column whitespace of a table
     scales with its face — or (phase 2) when the run starts at a block
     column anchor.  Each cell carries its member runs so text can be
     re-ordered (y, x) after the x-major fold."""
@@ -850,26 +710,20 @@ def _cells_fold(runs_expr: str, gap_em: float,
               f"'ms', concat(element_at(acc, -1).ms, array({member})))")
     return (f"aggregate({runs_expr}, cast(array() AS {_CELL_TYPE}), (acc, r) -> "
             f"CASE WHEN size(acc) > 0 AND NOT ({brk}false) "
-            f"AND r.x - element_at(acc, -1).e <= {gap_em}d * r.sz "
+            f"AND r.x - element_at(acc, -1).e <= {_GAP_EM}d * r.sz "
             f"THEN concat(slice(acc, 1, size(acc) - 1), array({merged})) "
             f"ELSE concat(acc, array({new_cell})) END)")
 
 
-def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
-                          gap_em: float = 1.2,
-                          min_table_lines: int = 3,
-                          heading_em: float = 1.25,
-                          band_height: float | None = None) -> DataFrame:
+def pdf_runs_to_documents(runs: DataFrame) -> DataFrame:
     """runs(doc_id, page, x, y, w, sz, msize, text) →
     documents(doc_id, spans) with 'text' line spans, font-size-detected
     'heading' spans AND reconstructed 'table' spans (see module comment
-    above).  Narrow until the per-document assembly groupBy — the same
-    shuffle shape as pdf_runs_to_spans.
+    above).  Two exchanges: hash(doc_id, page) for the line windows and
+    hash(doc_id) for the per-document assembly groupBy.
 
     Lines are GAP-CLUSTERED on y (a new line starts where the y-gap
-    exceeds ``band_gap``) — fixed-height banding merges the ~3pt line
-    spacing of dense reports (the reference's CRIF fixtures) into
-    mangled rows; pass ``band_height`` to use fixed banding instead.
+    exceeds ``_BAND_GAP``).
     Cells are computed twice: a width-model phase detects table
     blocks, then in-block column anchors re-split each block line.
 
@@ -879,22 +733,16 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
     slots come from the second line's cells with header words assigned
     to the nearest slot center — validated on the reference CRIF
     fixture's Account Summary table ('Number of Accounts' = 54).
-    Headings are lines whose every run is ≥ ``heading_em`` × the
+    Headings are lines whose every run is ≥ ``_HEADING_EM`` × the
     document's modal font size (Docling-style section detection, e.g.
     the 7pt-vs-5pt 'Account Information' headers of the CRIF
     fixtures)."""
-    from pyspark.sql.window import Window as W
-
-    if band_height is not None:
-        banded = runs.withColumn(
-            "band", F.floor(F.col("y") / F.lit(band_height)).cast("int"))
-    else:
-        w0 = W.partitionBy("doc_id", "page").orderBy("y")
-        banded = (runs.withColumn("_gap", F.col("y") - F.lag("y").over(w0))
-                  .withColumn("band", F.sum(
-                      F.when(F.col("_gap") > band_gap, 1).otherwise(0))
-                      .over(w0))
-                  .drop("_gap"))
+    w0 = Window.partitionBy("doc_id", "page").orderBy("y")
+    banded = (runs.withColumn("_gap", F.col("y") - F.lag("y").over(w0))
+              .withColumn("band", F.sum(
+                  F.when(F.col("_gap") > _BAND_GAP, 1).otherwise(0))
+                  .over(w0))
+              .drop("_gap"))
     lines = (banded.groupBy("doc_id", "page", "band", "media")
              .agg(F.expr("array_sort(collect_list(named_struct("
                          "'x', x, 'y', y, 'w', w, 'sz', sz, 't', text)))")
@@ -905,7 +753,7 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
     # — real tables in these reports all carry >= 3 columns.  2-cell
     # rows INSIDE a table block still join it via the tabish closure.
     lines = (lines.withColumn(
-                 "cells", F.expr(_cells_fold("rs", gap_em)))
+                 "cells", F.expr(_cells_fold("rs")))
              .withColumn("is_tab", F.expr("size(cells) >= 3"))
              .withColumn("n_sub", F.expr(
                  "size(array_distinct(transform(rs, r -> r.y)))")))
@@ -914,11 +762,11 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
     # only by a section header (one 'Account Information' per account
     # grid in the CRIF fixtures) stay distinct blocks
     lines = lines.withColumn("is_head", F.expr(
-        f"n_sub = 1 AND forall(rs, r -> r.sz >= msize * {heading_em}d) "
+        f"n_sub = 1 AND forall(rs, r -> r.sz >= msize * {_HEADING_EM}d) "
         "AND aggregate(rs, 0, (a, r) -> a + length(r.t)) <= 80"))
     # media rows can share a band with a text line (their own group
     # rows): order ties deterministically, media-last
-    w = W.partitionBy("doc_id", "page").orderBy(
+    w = Window.partitionBy("doc_id", "page").orderBy(
         "band", F.col("media").asc_nulls_first())
     lines = lines.withColumn(
         "tabish",
@@ -941,12 +789,12 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
     # stays SMALL (scalars, one line's runs, per-line x-start sets):
     # collecting each block's full run array per row was measured 2x
     # slower than even the triple-execution plan.
-    wb = (W.partitionBy("doc_id", "page", "block")
+    wb = (Window.partitionBy("doc_id", "page", "block")
           .orderBy("band", F.col("media").asc_nulls_first())
-          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-    wbo = (W.partitionBy("doc_id", "page", "block")
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    wbo = (Window.partitionBy("doc_id", "page", "block")
            .orderBy("band", F.col("media").asc_nulls_first())
-           .rowsBetween(W.unboundedPreceding, W.currentRow))
+           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     lines = (lines
              # block partitions include the leading NON-tabish line
              # that opened the block id, so every block statistic and
@@ -960,15 +808,15 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
                  F.col("tabish"), F.expr("size(cells)"))).over(wb))
              .withColumn("rn", F.when(F.col("tabish"), F.sum(
                  F.when(F.col("tabish"), 1).otherwise(0)).over(wbo))))
-    # a block qualifies as a table with >= min_table_lines gap-cluster
+    # a block qualifies as a table with >= _MIN_TABLE_LINES gap-cluster
     # rows, OR with 2 rows when the visual evidence is strong: a
     # wrapped multi-sub-line header (the Account Summary shape) or a
     # wide grid (months × statuses payment strips)
     lines = lines.withColumn(
         "qual",
-        (F.col("n_tab") >= min_table_lines) |
+        (F.col("n_tab") >= _MIN_TABLE_LINES) |
         ((F.col("n_tab") >= 2) &
-         ((F.col("blk_sub") >= min_table_lines + 1) |
+         ((F.col("blk_sub") >= _MIN_TABLE_LINES + 1) |
           (F.col("blk_cells") >= 8))))
 
     # phase-2 cells with in-block anchors; header = first tabish line.
@@ -995,10 +843,15 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
                  "collect_list(CASE WHEN tabish THEN array_distinct("
                  "transform(rs, r -> round(r.x, 1))) END) OVER "
                  "(PARTITION BY doc_id, page, block)")))
+    # phase-2 per-block column anchors: x-starts (rounded to 0.1) shared
+    # by >= 3 distinct lines WITHIN the table block — left-aligned table
+    # columns.  Scoped per block, not per page: repeated section headers
+    # ("Nature of Supplies" across GSTR tables) would otherwise turn
+    # mid-phrase word positions into page-wide anchors and shred headers.
     anchors = ("filter(array_distinct(flatten(tlx)), v -> "
                "size(filter(tlx, l -> array_contains(l, v))) >= 3)")
-    hdr1 = _cells_fold("hdr_rs", gap_em, "ax")
-    slots = _cells_fold("slots_rs", gap_em, "ax")
+    hdr1 = _cells_fold("hdr_rs", "ax")
+    slots = _cells_fold("slots_rs", "ax")
     dists = ("transform(slots, s -> abs((s.x + s.e) / 2d "
              "- (r.x + r.w / 2d)))")
     hdr_multi = (
@@ -1028,7 +881,7 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
     lines = (lines
              .withColumn("cx", F.first("cx1", ignorenulls=True).over(wb))
              .withColumn("axp", F.first("ax", ignorenulls=True).over(wb)))
-    ln_cells = _cells_fold("rs", gap_em, "axp")
+    ln_cells = _cells_fold("rs", "axp")
     slot = "greatest(size(filter(cx, v -> v <= c.x + 2.0d)) - 1, 0)"
     row_e = ("transform(sequence(0, size(cx) - 1), j -> "
              + _NORM.format("array_join(transform(filter(" + ln_cells
@@ -1055,7 +908,11 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
                                f"WHEN kind = 'trow' "
                                f"THEN array_join({row_e}, ' | ') "
                                f"ELSE {line_text} END").alias("text"))
-                .where("kind IN ('thdr', 'trow', 'media') OR text != ''"))
+                # page IS NULL: the run of a document without runs
+                # (_NO_RUNS) — the fold drops its empty span and keeps
+                # the document's row
+                .where("kind IN ('thdr', 'trow', 'media') OR text != '' "
+                       "OR page IS NULL"))
     # scanned-page detection (r4 VERDICT #4): a page with media but NO
     # text runs is image-only — the reference OCRs these (Docling,
     # parser.py:31-58); with no OCR in the sandbox the media span is
@@ -1063,7 +920,7 @@ def pdf_runs_to_documents(runs: DataFrame, band_gap: float = 4.0,
     # yielding an empty page, so downstream curation can route.  The
     # (doc_id, page) window reuses the banding shuffle's partitioning
     # — no extra exchange.
-    wpage = W.partitionBy("doc_id", "page")
+    wpage = Window.partitionBy("doc_id", "page")
     allspans = (allspans
                 .withColumn("_pg_text", F.max(
                     F.when(F.col("kind") != "media", 1).otherwise(0))

@@ -23,19 +23,18 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench_scaling import warm_runs  # noqa: E402  (scripts/ is on sys.path)
+
 CORES_PER_EXEC = 4
-RUNS = 3
 
 
 def child(files_csv: str) -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     from crego_document_extractor_spark.session import get_spark
-    from crego_document_extractor_spark.parse import parse_documents
     from crego_document_extractor_spark import pipeline
 
     files = files_csv.split(",")
@@ -45,21 +44,13 @@ def child(files_csv: str) -> None:
         spark.read.parquet(*files),
         min_partitions=CORES_PER_EXEC * 4).persist()
     n_docs = docs.count()
-    # warm JVM/JIT + python workers with a FULL pass (a real executor
-    # pool is long-lived; the giant codegen methods take a full pass
-    # to JIT — see scripts/bench_scaling.py)
-    pipeline.extract_from_raw(docs.limit(64)).count()
-    pipeline.extract_from_raw(docs).count()
 
-    print("READY", flush=True)
-    sys.stdin.readline()  # GO barrier
+    def barrier() -> None:  # all executors warmed before GO
+        print("READY", flush=True)
+        sys.stdin.readline()
 
-    best, rows = float("inf"), 0
-    for _ in range(RUNS):
-        t0 = time.perf_counter()
-        rows = pipeline.extract_from_raw(docs).count()
-        best = min(best, time.perf_counter() - t0)
-    print(json.dumps({"docs": n_docs, "sec": round(best, 3), "rows": rows}),
+    walls, rows = warm_runs(docs, on_warm=barrier)
+    print(json.dumps({"docs": n_docs, "sec": min(walls), "rows": rows}),
           flush=True)
     spark.stop()
 

@@ -25,30 +25,37 @@ PAIRS = [(2, 8), (8, 32)]
 RUNS = 3
 
 
+def warm_runs(docs, on_warm=None) -> tuple[list[float], int]:
+    """(walls, result rows) of RUNS timed ``extract_from_raw`` passes.
+    The python workers warm on 64 docs, then ONE FULL run lets the
+    giant codegen methods JIT (until they compile, at 32 threads the
+    interpreted JVM contends with the python workers: ~3x CPU/doc); a
+    production executor pool is long-lived, so the timed runs measure
+    the warm steady state.  ``on_warm`` runs just before them."""
+    from crego_document_extractor_spark import pipeline
+
+    pipeline.extract_from_raw(docs.limit(64)).count()
+    pipeline.extract_from_raw(docs).count()
+    if on_warm is not None:
+        on_warm()
+    walls, n_rows = [], 0
+    for _ in range(RUNS):
+        t0 = time.perf_counter()
+        n_rows = pipeline.extract_from_raw(docs).count()
+        walls.append(round(time.perf_counter() - t0, 3))
+    return walls, n_rows
+
+
 def child(cpus: int, corpus: str) -> None:
     from crego_document_extractor_spark.session import get_spark
-    from crego_document_extractor_spark.parse import parse_documents
     from crego_document_extractor_spark import pipeline
 
     spark = get_spark(master=f"local[{cpus}]")
     docs = pipeline.ensure_parallelism(spark.read.parquet(corpus),
                                        min_partitions=cpus * 4).persist()
     docs.count()  # pin the raw input; the job under test is parse+extract
-    # warm python workers, then ONE FULL run: at 32 threads the giant
-    # codegen methods take a full pass to JIT, and until they compile
-    # the interpreted JVM contends with the python workers (~3x CPU/doc
-    # inflation).  A production executor pool is long-lived, so timed
-    # runs measure the warm steady state.
-    pipeline.extract_from_raw(docs.limit(64)).count()
-    pipeline.extract_from_raw(docs).count()
-
-    best, n_rows, walls = float("inf"), 0, []
-    for _ in range(RUNS):
-        t0 = time.perf_counter()
-        n_rows = pipeline.extract_from_raw(docs).count()
-        walls.append(round(time.perf_counter() - t0, 3))
-        best = min(best, walls[-1])
-    print(json.dumps({"cpus": cpus, "sec": round(best, 3), "rows": n_rows,
+    walls, n_rows = warm_runs(docs)
+    print(json.dumps({"cpus": cpus, "sec": min(walls), "rows": n_rows,
                       "walls": walls, "loadavg": list(os.getloadavg())}))
     spark.stop()
 

@@ -55,14 +55,15 @@ def test_ingest_html_end_to_end(spark):
 def test_pdf_runs_reading_order(spark):
     rows = [
         # page 2 line (should come after all of page 1)
-        Row(doc_id="d1", page=2, x=10.0, y=15.0, text="page2"),
-        # page 1, band 1 (y≈14) — two runs out of x order
-        Row(doc_id="d1", page=1, x=200.0, y=14.0, text="world"),
-        Row(doc_id="d1", page=1, x=10.0, y=15.5, text="hello"),
-        # page 1, band 0 (header line)
-        Row(doc_id="d1", page=1, x=50.0, y=2.0, text="Title"),
+        ("d1", 2, 10.0, 15.0, 30.0, 12.0, 12.0, "page2", None),
+        # page 1, line 1 (y≈14) — two runs out of x order
+        ("d1", 1, 200.0, 14.0, 30.0, 12.0, 12.0, "world", None),
+        ("d1", 1, 10.0, 15.5, 30.0, 12.0, 12.0, "hello", None),
+        # page 1, line 0 (header line)
+        ("d1", 1, 50.0, 2.0, 30.0, 12.0, 12.0, "Title", None),
     ]
-    docs = ingest.pdf_runs_to_spans(spark.createDataFrame(rows), band_height=12.0)
+    docs = ingest.pdf_runs_to_documents(
+        spark.createDataFrame(rows, ingest._RUNS_SCHEMA))
     spans = [s.asDict() for s in docs.collect()[0]["spans"]]
     assert [s["text"] for s in spans] == ["Title", "hello world", "page2"]
     assert [s["media_ref"] for s in spans] == ["page:1", "page:1", "page:2"]
@@ -333,12 +334,10 @@ def test_bt_resets_text_matrix_scale():
     assert runs["plain body line"]["size"] == 12.0
 
 
-def test_split_pages_parity_and_fanout(spark):
-    """r4 VERDICT #3: a giant PDF ingested via split_pages=True must
-    fan out across many tasks AND produce byte-identical spans vs the
-    single-task per-document path."""
-    import pyspark.sql.functions as F
-
+def test_ingest_pdf_300_pages(spark):
+    """A 300-page PDF next to a one-page one: every page's heading
+    comes out in page order, and the small document's spans are the
+    same as when it is ingested alone."""
     pages = []
     for p in range(300):
         rows = "\n".join(
@@ -350,29 +349,25 @@ def test_split_pages_parity_and_fanout(spark):
             f"BT /F1 12 Tf 2 0 0 2 10 380 Tm (Heading {p}) Tj ET\n"
             f"BT 1 0 0 1 10 730 Tm (Body line on page {p}) Tj ET\n"
             + rows)
-    pdf = _mini_pdf(pages)
+    tiny = ("crif-tiny", bytearray(_mini_pdf(
+        ["BT 1 0 0 1 10 700 Tm (small doc) Tj ET"])))
     raw = spark.createDataFrame(
-        [("crif-giant", bytearray(pdf)),
-         ("crif-tiny", bytearray(_mini_pdf(["BT 1 0 0 1 10 700 Tm (small doc) Tj ET"])))],
+        [("crif-giant", bytearray(_mini_pdf(pages))), tiny],
         "doc_id string, payload binary")
 
     def spans_of(df):
         return {r["doc_id"]: [tuple(s) for s in r["spans"]]
                 for r in df.collect()}
 
-    base = spans_of(ingest.ingest_pdf(raw))
-    split = spans_of(ingest.ingest_pdf(raw, split_pages=True))
-    assert split == base
-    assert len(base["crif-giant"]) > 300
-
-    # fan-out: the 300 per-page rows spread across >= 8 tasks
-    page_rows = raw.mapInPandas(ingest._pdf_split_batches,
-                                schema=ingest._PAGES_SCHEMA)
-    n_parts = (page_rows.repartition(64, "doc_id", "page")
-               .select(F.spark_partition_id().alias("p"))
-               .distinct().count())
-    assert page_rows.count() == 301
-    assert n_parts >= 8
+    got = spans_of(ingest.ingest_pdf(raw))
+    giant = got["crif-giant"]
+    assert len(giant) > 300
+    assert [s[1] for s in giant if s[1].startswith("Heading ")] == [
+        f"Heading {p}" for p in range(300)]
+    alone = spans_of(ingest.ingest_pdf(spark.createDataFrame(
+        [tiny], "doc_id string, payload binary")))
+    assert got["crif-tiny"] == alone["crif-tiny"] == [
+        ("text", "small doc", "page:1", 0)]
 
 
 def _scanned_pdf() -> bytes:
@@ -420,29 +415,38 @@ def test_scanned_page_needs_ocr_marker(spark):
     assert [s["media_ref"] for s in spans2 if s["kind"] == "media"] == ["img:5"]
 
 
-def test_split_pages_auto_routes_by_size(spark):
-    """split_pages='auto': only oversized payloads take the per-page
-    plan; the unioned output equals both pure paths."""
-    big_pdf = _mini_pdf([f"BT 1 0 0 1 10 {700 - 10 * (r % 60)} Tm "
-                         f"(auto page {p} row {r}) Tj ET"
-                         for p in range(40) for r in range(1)])
-    small_pdf = _mini_pdf(["BT 1 0 0 1 10 700 Tm (small auto doc) Tj ET"])
+def test_ingest_pdf_keeps_documents_without_runs(spark):
+    """A valid, a junk and an empty payload give three rows: the two
+    with no text runs come out with no spans."""
     raw = spark.createDataFrame(
-        [("crif-big", bytearray(big_pdf)), ("crif-small", bytearray(small_pdf))],
+        [("crif-ok", bytearray(_mini_pdf(
+            ["BT 1 0 0 1 10 700 Tm (kept) Tj ET"]))),
+         ("crif-junk", bytearray(b"not a pdf at all \x00\xff")),
+         ("crif-empty", bytearray())],
         "doc_id string, payload binary")
+    got = {r["doc_id"]: [s["text"] for s in r["spans"]]
+           for r in ingest.ingest_pdf(raw).collect()}
+    assert got == {"crif-ok": ["kept"], "crif-junk": [], "crif-empty": []}
 
-    def spans_of(df):
-        return {r["doc_id"]: [tuple(s) for s in r["spans"]]
-                for r in df.collect()}
 
-    base = spans_of(ingest.ingest_pdf(raw))
-    # threshold between the two payload sizes -> big goes paged
-    thresh = len(small_pdf) + 1
-    assert len(big_pdf) > thresh
-    auto = spans_of(ingest.ingest_pdf(raw, split_pages="auto",
-                                      split_threshold_bytes=thresh))
-    assert auto == base
-    # threshold above both -> pure single-stage path, same output
-    auto_none = spans_of(ingest.ingest_pdf(raw, split_pages="auto",
-                                           split_threshold_bytes=10**9))
-    assert auto_none == base
+def test_ingest_pdf_null_payload(spark):
+    """A NULL payload next to a valid one is a document with no spans,
+    never a failed job."""
+    raw = spark.createDataFrame(
+        [("crif-ok", bytearray(_mini_pdf(
+            ["BT 1 0 0 1 10 700 Tm (kept) Tj ET"]))),
+         ("crif-null", None)],
+        "doc_id string, payload binary")
+    got = {r["doc_id"]: [s["text"] for s in r["spans"]]
+           for r in ingest.ingest_pdf(raw).collect()}
+    assert got == {"crif-ok": ["kept"], "crif-null": []}
+
+
+def test_ingest_html_null_payload(spark):
+    """The HTML front treats a NULL payload the same way."""
+    raw = spark.createDataFrame(
+        [("html-ok", bytearray(b"<p>kept</p>")), ("html-null", None)],
+        "doc_id string, payload binary")
+    got = {r["doc_id"]: [s["text"] for s in r["spans"]]
+           for r in ingest.ingest_html(raw).collect()}
+    assert got == {"html-ok": ["kept"], "html-null": []}

@@ -42,13 +42,15 @@ DOC_FLAG_CHUNK = _doc("crif-900002", [
 ])
 
 
+def _df(spark, docs):
+    return spark.createDataFrame(
+        [(d["doc_id"], [(x["kind"], x["text"], x["media_ref"], x["offset"])
+                        for x in d["spans"]]) for d in docs],
+        schema=DOCUMENTS_SCHEMA)
+
+
 def _run(spark, docs):
-    df = spark.createDataFrame([(d["doc_id"], [tuple(s.values()) for s in
-                                               [{"kind": x["kind"], "text": x["text"],
-                                                 "media_ref": x["media_ref"],
-                                                 "offset": x["offset"]}
-                                                for x in d["spans"]]])
-                                for d in docs], schema=DOCUMENTS_SCHEMA)
+    df = _df(spark, docs)
     # the RELATIONAL form: these path tests target the independent SQL
     # implementations (the fused plan shares the oracle's python
     # semantics by construction and is covered by the parametrized
@@ -196,6 +198,42 @@ def test_null_spans_parse_as_no_spans(spark, form):
            for r in FORMS[form](docs).collect()}
     _assert_rows_equal(got, _expected([{"doc_id": d, "spans": []}
                                        for d in ids]))
+
+
+_BOILERPLATE_ONLY = [
+    {"kind": "nav", "text": "[home](/) [about](/a)"},
+    {"kind": "footer", "text": "contact | legal"},
+    {"kind": "ad", "text": "Buy stuff now!"},
+    # link-dense text: 3 links in 3 words
+    {"kind": "text", "text": "[one](/1) [two](/2) [three](/3)"},
+]
+
+BAD_INPUT_DOCS = [
+    _doc("crif-empty-01", []),
+    _doc("gstr-empty-01", []),
+    _doc("crif-boiler-01", _BOILERPLATE_ONLY),
+    _doc("gstr-boiler-01", _BOILERPLATE_ONLY),
+    # an unknown prefix: parsed like any document, extracted by neither
+    _doc("misc-000001", DOC_FLAG_CHUNK["spans"]),
+]
+
+
+@pytest.mark.parametrize("form", sorted(FORMS))
+def test_bad_input_spans_match_oracle(spark, form):
+    """Empty spans, all-boilerplate spans (stoplisted kinds and
+    link-dense text) and an unknown doc_id prefix: the clean spans and
+    the result rows equal the oracle's, and the unknown prefix has no
+    result rows."""
+    docs = _df(spark, BAD_INPUT_DOCS)
+    spans = pipeline.clean_spans(pipeline.parse_documents(docs)).collect()
+    assert {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
+            for r in spans} == {
+        d["doc_id"]: oracle.extract_document(d)["clean_spans"]
+        for d in BAD_INPUT_DOCS}
+    got = {(r["doc_id"], r["param_id"]): r.asDict()
+           for r in FORMS[form](docs).collect()}
+    _assert_rows_equal(got, _expected(BAD_INPUT_DOCS))
+    assert not any(d == "misc-000001" for d, _ in got)
 
 
 def test_rag_fallback_plan_has_no_arrow_udf(spark, raw_docs):
