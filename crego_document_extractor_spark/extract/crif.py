@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import sqlexpr as X
+from .gstr import gstr_results
 from ..specs import PARAMETER_SPECS
 
 _NULLS = ("CAST(NULL AS double)", "CAST(NULL AS boolean)",
@@ -210,16 +211,27 @@ def _embedding_results() -> list[str]:
     return results
 
 
+def _by_kind(kind: str, crif: str, gstr: str, other: str) -> str:
+    return (f"CASE {kind} WHEN 'crif' THEN {crif} WHEN 'gstr' THEN {gstr} "
+            f"ELSE {other} END")
+
+
 def _explode_by_kind(df: DataFrame, crif_results: list[str]) -> DataFrame:
     """One result row per (document, parameter): the crif structs for
     crif docs, the two GSTR structs for gstr docs, nothing otherwise."""
-    from .gstr import gstr_result_structs
-
-    arr = (f"CASE WHEN doc_kind = 'crif' THEN array({', '.join(crif_results)}) "
-           f"WHEN doc_kind = 'gstr' THEN {gstr_result_structs()} "
-           f"ELSE array() END")
+    arr = _by_kind("doc_kind", f"array({', '.join(crif_results)})",
+                   f"array({', '.join(gstr_results())})", "array()")
     return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
             .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
+
+
+def result_rows(doc_kind: str) -> str:
+    """SQL: the number of rows ``_explode_by_kind`` emits for a document
+    of kind ``doc_kind`` (a SQL expression) — one per parameter spec for
+    crif (both modes build one struct per spec), one per GSTR struct
+    for gstr, none otherwise."""
+    return _by_kind(f"({doc_kind})", str(len(PARAMETER_SPECS)),
+                    str(len(gstr_results())), "0")
 
 
 def _with_tables(df: DataFrame) -> DataFrame:

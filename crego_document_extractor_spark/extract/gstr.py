@@ -4,7 +4,7 @@ Emits two rows per document: ``gst_sales`` (Table-3.1 taxable value)
 and ``gst_month`` (filing period), sharing source/confidence/status
 like the reference's single sales record (gstr.py:31-37).
 
-``with_gstr_columns`` / ``gstr_result_structs`` are split so the
+``with_gstr_columns`` / ``gstr_results`` are split so the
 relational engine (crif.extract_all) can compute the primitive g_*
 columns BEFORE its account aggregation and build the result structs
 after it; the fused parse builds the same primitives in Python from
@@ -45,16 +45,15 @@ def with_gstr_columns(df: DataFrame) -> DataFrame:
     return df.drop("g_tbl", "g_row", "g_idx")
 
 
-def gstr_result_structs() -> str:
-    """The two result structs over the carried g_* columns — SQL array
-    expression matching crif.RESULT_FIELDS."""
+def gstr_results() -> list[str]:
+    """The two result structs over the carried g_* columns — SQL
+    expressions matching crif.RESULT_FIELDS."""
     source = ("(CASE WHEN g_found THEN concat('GSTR-3B Table 3.1 (Page ', "
               "cast(g_page AS string), ')') "
               "ELSE 'GSTR-3B Table 3.1 not found' END)")
     conf = "(CASE WHEN g_found THEN 1.0d ELSE 0.0d END)"
     status = "(CASE WHEN g_found THEN 'extracted' ELSE 'not_found' END)"
-    return (
-        "array("
+    return [
         "named_struct("
         "  'param_id', 'gst_sales', "
         "  'value_num', g_sales, "
@@ -62,7 +61,7 @@ def gstr_result_structs() -> str:
         "  'value_str', CAST(NULL AS string), "
         "  'value_type', CASE WHEN g_sales IS NULL THEN 'null' ELSE 'float' END, "
         f"  'source', {source}, 'confidence', {conf}, 'status', {status}, "
-        "  'similarity_score', CAST(NULL AS double)), "
+        "  'similarity_score', CAST(NULL AS double))",
         "named_struct("
         "  'param_id', 'gst_month', "
         "  'value_num', CAST(NULL AS double), "
@@ -70,7 +69,5 @@ def gstr_result_structs() -> str:
         "  'value_str', g_month, "
         "  'value_type', 'string', "
         f"  'source', {source}, 'confidence', {conf}, 'status', {status}, "
-        "  'similarity_score', CAST(NULL AS double))"
-        ")"
-    )
-
+        "  'similarity_score', CAST(NULL AS double))",
+    ]

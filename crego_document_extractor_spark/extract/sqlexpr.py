@@ -11,6 +11,10 @@ Python in the hot path.
 
 from __future__ import annotations
 
+import functools
+import sys
+import unicodedata
+
 # "rest of the array" length for slice(); NOT Int.MaxValue — Spark's
 # slice overflows start+length in int32 and returns [] silently.
 SLICE_REST = 1_000_000_000
@@ -32,20 +36,30 @@ def strip_ws(v: str) -> str:
 # scalar helpers (crif_parser.py:177-216)
 # ---------------------------------------------------------------------------
 
+@functools.cache
+def _decimal_digits() -> tuple[str, str]:
+    """Every non-ASCII code point with a Unicode decimal value, and its
+    ASCII digit: the ``translate`` pair for Python float()'s own
+    transliteration (650 code points in Unicode 14)."""
+    src = [c for c in map(chr, range(128, sys.maxunicode + 1))
+           if unicodedata.decimal(c, None) is not None]
+    return "".join(src), "".join(str(unicodedata.decimal(c)) for c in src)
+
+
 def clean_number(v: str) -> str:
     """clean_number (crif_parser.py:207-216): strip ','/'₹'/'Rs',
     float() else 0.0.  Python-parity details: unicode-whitespace strip
-    (str.strip), float()'s single-underscore-between-digits rule, and
+    (str.strip), float()'s transliteration of unicode decimal digits
+    ('١٢٣' → 123.0), its single-underscore-between-digits rule, and
     a float-grammar gate before the cast — Spark's string→double cast
     additionally accepts Java-isms Python float() rejects (trailing
     'd'/'f' suffixes, hex-float '0x1p3', and it trims ASCII control
     chars <= 0x20 like '1\\x1b' — the r6 hypothesis counterexample),
     so a value outside Python's grammar must be 0.0 even when the
-    cast would succeed.  Known remaining one-way gap (documented, as
-    with the inf/nan spellings): Python float() transliterates
-    non-ASCII unicode decimal digits; the SQL form returns 0.0 for
-    those."""
-    cleaned = strip_ws(f"regexp_replace({v}, ',|₹|Rs', '')")
+    cast would succeed."""
+    src, dst = _decimal_digits()
+    stripped = strip_ws(f"regexp_replace({v}, ',|₹|Rs', '')")
+    cleaned = f"translate({stripped}, '{src}', '{dst}')"
     no_us = f"regexp_replace({cleaned}, '(?<=[0-9])_(?=[0-9])', '')"
     grammar = ("'^[+-]?([0-9]+(\\\\.[0-9]*)?|\\\\.[0-9]+)"
                "([eE][+-]?[0-9]+)?$|^[+-]?(?i:inf(inity)?|nan)$'")

@@ -7,22 +7,29 @@ completed_at)``.  Resuming is an anti-join of pending buckets against
 the manifest (the Spark form of the reference's SHA256 parse cache,
 cache.py:36-125: only misses recompute).
 
+A run reads the manifest once (done buckets, next attempt), writes
+the pending buckets' results, then appends their manifest rows from
+one aggregation over the pending docs; ``n_rows`` needs no read-back,
+as the result projection fixes the rows per document by its kind
+(``extract.crif.result_rows``).
+
 Results come from the production extraction path
-(``pipeline.extract_from_raw``).  Output is repartitioned by bucket
-(one file per bucket per run) and written ``partitionBy(bucket)`` with
-a per-write dynamic partition overwrite (the session's
-``partitionOverwriteMode`` is left alone), so a re-run of an
-interrupted bucket atomically replaces any partial files — the
-plain-parquet stand-in for an Iceberg MERGE/commit at production
-scale.
+(``pipeline.extract_from_raw``), repartitioned by bucket (one file
+per bucket per run) and written ``partitionBy(bucket)`` with a
+per-write dynamic partition overwrite, so a re-run of an interrupted
+bucket atomically replaces any partial files — the plain-parquet
+stand-in for an Iceberg MERGE/commit at production scale.
 """
 
 from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from .extract.crif import result_rows
+from .parse import DOC_KIND_SQL
 from .pipeline import extract_from_raw
 
 MANIFEST = "_manifest"
@@ -34,21 +41,17 @@ def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+def _manifest_state(spark: SparkSession, out_dir: str) -> tuple[set[int], int]:
+    """One read of the manifest: the buckets marked done and the next
+    attempt number (1 when there is no manifest or it has no rows, as
+    after a run with nothing pending)."""
     try:
-        m = spark.read.parquet(f"{out_dir}/{MANIFEST}")
-    except Exception:
-        return set()
-    return {r["bucket"] for r in
-            m.where("status = 'done'").select("bucket").distinct().collect()}
-
-
-def _attempt_no(spark: SparkSession, out_dir: str) -> int:
-    try:
-        m = spark.read.parquet(f"{out_dir}/{MANIFEST}")
-        return m.agg(F.max("attempt")).collect()[0][0] + 1
-    except Exception:
-        return 1
+        rows = (spark.read.schema("bucket int, status string, attempt int")
+                .parquet(f"{out_dir}/{MANIFEST}").collect())
+    except AnalysisException:  # no manifest yet
+        return set(), 1
+    return ({r["bucket"] for r in rows if r["status"] == "done"},
+            max((r["attempt"] for r in rows), default=0) + 1)
 
 
 def run_with_lineage(docs: DataFrame, out_dir: str,
@@ -58,8 +61,7 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
     (optionally restricted to ``buckets_subset`` — used by tests to
     simulate an interrupted run).  Returns run metrics."""
     spark = docs.sparkSession
-    done = completed_buckets(spark, out_dir)
-    attempt = _attempt_no(spark, out_dir)
+    done, attempt = _manifest_state(spark, out_dir)
     run_id = f"run-{attempt}"
 
     bucketed = with_bucket(docs, n_buckets)
@@ -81,24 +83,20 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
         .partitionBy("bucket").parquet(f"{out_dir}/{RESULTS}"))
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
-    # per-bucket metrics for the manifest (lineage + extraction metrics)
-    stats = pending.groupBy("bucket").agg(F.count("*").alias("n_docs"))
-    # read back with the written schema: when nothing was pending the
-    # write leaves no data file to infer a schema from
-    rows = (spark.read.schema(out.schema).parquet(f"{out_dir}/{RESULTS}")
-            .groupBy("bucket").agg(F.count("*").alias("n_rows")))
-    manifest = (stats.join(rows, "bucket", "left")
+    # per-bucket metrics, appended only after the results are written:
+    # a kill in between leaves the buckets pending for the next run
+    manifest = (pending.groupBy("bucket")
+                .agg(F.count("*").alias("n_docs"),
+                     F.sum(F.expr(result_rows(DOC_KIND_SQL))).alias("n_rows"))
                 .select("bucket",
                         F.lit("done").alias("status"),
-                        "n_docs",
-                        F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
+                        "n_docs", "n_rows",
                         F.lit(wall_ms).alias("wall_ms"),
                         F.lit(attempt).alias("attempt"),
                         F.lit(run_id).alias("run_id"),
                         F.current_timestamp().alias("completed_at")))
     # the bucket count is observed on the manifest write itself: a
-    # count() afterwards would re-run the input re-scan, the read-back
-    # and the join
+    # count() afterwards would re-run the aggregation
     written = Observation("manifest")
     (manifest.observe(written, F.count(F.lit(1)).alias("n"))
         .write.mode("append").parquet(f"{out_dir}/{MANIFEST}"))

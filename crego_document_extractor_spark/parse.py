@@ -72,8 +72,9 @@ DOCUMENTS_SCHEMA = T.StructType([
 _KINDS = ("crif", "gstr", "html")
 
 
-def _doc_kind(doc_id: str) -> str:
-    head = doc_id.split("-", 1)[0]
+def _doc_kind(doc_id: str | None) -> str:
+    # a NULL doc_id is 'other', as in DOC_KIND_SQL
+    head = (doc_id or "").split("-", 1)[0]
     return head if head in _KINDS else "other"
 
 

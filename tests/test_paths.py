@@ -217,23 +217,28 @@ BAD_INPUT_DOCS = [
     _doc("misc-000001", DOC_FLAG_CHUNK["spans"]),
 ]
 
+# a NULL doc_id: kind 'other', so parsed but not extracted (the oracle's
+# extract_document needs a doc_id, its parse_document does not)
+DOC_NULL_ID = _doc(None, DOC_FLAG_CHUNK["spans"])
+
 
 @pytest.mark.parametrize("form", sorted(FORMS))
 def test_bad_input_spans_match_oracle(spark, form):
     """Empty spans, all-boilerplate spans (stoplisted kinds and
-    link-dense text) and an unknown doc_id prefix: the clean spans and
-    the result rows equal the oracle's, and the unknown prefix has no
-    result rows."""
-    docs = _df(spark, BAD_INPUT_DOCS)
+    link-dense text), an unknown doc_id prefix and a NULL doc_id: the
+    clean spans and the result rows equal the oracle's, and the
+    unknown prefix and the NULL doc_id have no result rows."""
+    docs = _df(spark, BAD_INPUT_DOCS + [DOC_NULL_ID])
     spans = pipeline.clean_spans(pipeline.parse_documents(docs)).collect()
     assert {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
             for r in spans} == {
-        d["doc_id"]: oracle.extract_document(d)["clean_spans"]
-        for d in BAD_INPUT_DOCS}
+        **{d["doc_id"]: oracle.extract_document(d)["clean_spans"]
+           for d in BAD_INPUT_DOCS},
+        None: oracle.parse_document(DOC_NULL_ID)["clean_spans"]}
     got = {(r["doc_id"], r["param_id"]): r.asDict()
            for r in FORMS[form](docs).collect()}
     _assert_rows_equal(got, _expected(BAD_INPUT_DOCS))
-    assert not any(d == "misc-000001" for d, _ in got)
+    assert not any(d in ("misc-000001", None) for d, _ in got)
 
 
 def test_rag_fallback_plan_has_no_arrow_udf(spark, raw_docs):

@@ -2,7 +2,7 @@
 the pure-Python semantics on adversarial inputs, not just the
 generator's vocabulary."""
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from crego_document_extractor_spark import semantics as S
@@ -40,6 +40,12 @@ def test_dpd_property(spark, statuses):
 
 @settings(max_examples=6, deadline=None)
 @given(st.lists(_amount, min_size=1, max_size=40))
+# unicode decimal digits, which Python float() transliterates
+@example(["౧"])
+@example(["١٢٣"])
+@example(["1౧"])
+@example(["٣.٥"])
+@example(["𝟙"])
 def test_clean_number_property(spark, values):
     got = _batch_eval(spark, X.clean_number("s"), values)
     exp = [S.clean_number(v) for v in values]

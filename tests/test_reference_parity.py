@@ -82,7 +82,7 @@ def test_crif_fixture_bureau_score_ground_truth(spark):
     ground-truth bureau score 627 (reference tests/test_accuracy.py:40,
     GROUND_TRUTH_CRIF for JEET ARORA_PARK251217CR671901414.pdf) and
     credit inquiries 0.  (The Account Summary totals are not yet
-    signature-matched from this fixture — docs/PLAN_NEXT.md #1.)"""
+    signature-matched from this fixture — docs/EXPLAIN.md, Known limits.)"""
     import glob
 
     from pyspark.sql import functions as F

@@ -86,12 +86,64 @@ def test_run_with_nothing_pending(spark, docs_path, tmp_path, nothing_pending):
             == _collect(lineage.read_results(spark, fresh)))
 
 
+def test_kill_before_manifest_append_redoes_buckets(spark, docs_path,
+                                                   tmp_path, monkeypatch):
+    """A run killed after its results write but before its manifest
+    append leaves its buckets pending: the next run redoes them (over
+    the results already written) and converges to a fresh run."""
+    from pyspark.sql import DataFrameWriter
+
+    docs = pipeline.load_documents(spark, docs_path)
+    fresh, out = str(tmp_path / "fresh"), str(tmp_path / "out")
+    n_buckets = 16
+    lineage.run_with_lineage(docs, fresh, n_buckets)
+    m1 = lineage.run_with_lineage(docs, out, n_buckets,
+                                  buckets_subset=list(range(6)))
+
+    parquet = DataFrameWriter.parquet
+
+    def killed_at_manifest(self, path, *args, **kwargs):
+        if path.endswith(lineage.MANIFEST):
+            monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+            raise RuntimeError("killed before the manifest append")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", killed_at_manifest)
+    with pytest.raises(RuntimeError, match="killed"):
+        lineage.run_with_lineage(docs, out, n_buckets)
+    assert DataFrameWriter.parquet is parquet
+
+    m3 = lineage.run_with_lineage(docs, out, n_buckets)
+    assert m3["attempt"] == 2
+    assert m3["buckets_previously_done"] == m1["buckets_processed"]
+    assert m3["buckets_processed"] + m1["buckets_processed"] == n_buckets
+    assert (_collect(lineage.read_results(spark, out))
+            == _collect(lineage.read_results(spark, fresh)))
+
+
 def test_manifest_metrics(spark, docs_path, tmp_path):
+    """Per bucket, ``n_docs`` counts the bucketed input and ``n_rows``
+    the result rows written; attempts number from 1, also after a run
+    with nothing pending."""
     docs = pipeline.load_documents(spark, docs_path)
     out = str(tmp_path / "m")
-    lineage.run_with_lineage(docs, out, 8)
-    m = spark.read.parquet(f"{out}/_manifest")
-    rows = m.collect()
-    assert {r["status"] for r in rows} == {"done"}
-    assert sum(r["n_docs"] for r in rows) == docs.count()
+    n_buckets = 8
+    # a run with nothing pending appends a manifest without rows, so
+    # the full run after it is attempt 1 too
+    m0 = lineage.run_with_lineage(docs, out, n_buckets, buckets_subset=[])
+    assert (m0["attempt"], m0["buckets_processed"]) == (1, 0)
+    assert lineage.run_with_lineage(docs, out, n_buckets)["attempt"] == 1
+    rows = spark.read.parquet(f"{out}/_manifest").collect()
+    assert {(r["status"], r["attempt"], r["run_id"]) for r in rows} == {
+        ("done", 1, "run-1")}
     assert all(r["wall_ms"] >= 0 for r in rows)
+    n_docs = dict(lineage.with_bucket(docs, n_buckets)
+                  .groupBy("bucket").count().collect())
+    assert {r["bucket"]: r["n_docs"] for r in rows} == n_docs
+    n_rows = dict(lineage.read_results(spark, out)
+                  .groupBy("bucket").count().collect())
+    assert {r["bucket"]: r["n_rows"] for r in rows} == {
+        b: n_rows.get(b, 0) for b in n_docs}
+    # everything is done: the next run processes nothing, as attempt 2
+    m2 = lineage.run_with_lineage(docs, out, n_buckets)
+    assert (m2["attempt"], m2["buckets_processed"]) == (2, 0)
