@@ -10,23 +10,27 @@ Two from-scratch ingestion fronts produce the engine's canonical
   rule (semantics.is_boilerplate) sees them.  No external parser.
 * ``ingest_pdf`` — a from-scratch PDF byte extractor
   (``pdf_text_runs``) yields text runs carrying (page, x, y, width,
-  font size); ``pdf_runs_to_documents`` gap-clusters them into lines in
+  font size); ``pdf_runs_to_spans`` gap-clusters them into lines in
   reading order (page, line, x) and reconstructs heading, table and
-  media spans — pure relational Spark (windows + one groupBy), no UDF.
+  media spans.
 
-Both run Arrow-batched / JVM-side; nothing is per-row Python.
+Each front is one Arrow-batched ``mapInPandas`` that maps every input
+row's payload to its spans: one Python stage, no exchange (beyond the
+round-robin spread of a narrow input, ``pipeline.ensure_parallelism``).
 """
 
 from __future__ import annotations
 
+import math
 import re
-from typing import Iterator
+from decimal import ROUND_HALF_UP, Context, Decimal
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import DataFrame
 
 from .parse import DOCUMENTS_SCHEMA
+from .pipeline import ensure_parallelism
 
 # ---------------------------------------------------------------------------
 # HTML tokenizer (pure function, shared with tests/oracle use)
@@ -154,27 +158,23 @@ def tokenize_html(html: str) -> list[dict]:
     return spans
 
 
-def _payloads(pdf: pd.DataFrame) -> Iterator[tuple[str, bytes]]:
-    """(doc_id, payload bytes) of one raw batch.  A NULL payload is an
-    empty one: its document ingests with no spans, never a failed job."""
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        yield doc_id, b"" if payload is None else bytes(payload)
-
-
-def _html_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"doc_id": [], "spans": []}
-        for doc_id, payload in _payloads(pdf):
-            html = payload.decode("utf-8", errors="replace")
-            out["doc_id"].append(doc_id)
-            out["spans"].append(tokenize_html(html))
-        yield pd.DataFrame(out)
+def _ingest(raw: DataFrame, to_spans: Callable[[bytes], list]) -> DataFrame:
+    """raw(doc_id, payload) → documents(doc_id, spans): one row per
+    input row.  A NULL payload is an empty one: its document ingests
+    with no spans, never a failed job."""
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "spans": [
+                to_spans(b"" if p is None else bytes(p))
+                for p in pdf["payload"]]})
+    return ensure_parallelism(raw.select("doc_id", "payload")).mapInPandas(
+        batches, schema=DOCUMENTS_SCHEMA)
 
 
 def ingest_html(raw: DataFrame) -> DataFrame:
     """raw(doc_id string, payload binary) → documents(doc_id, spans)."""
-    return raw.select("doc_id", "payload").mapInPandas(
-        _html_batches, schema=DOCUMENTS_SCHEMA)
+    return _ingest(raw, lambda b: tokenize_html(
+        b.decode("utf-8", errors="replace")))
 
 
 # ---------------------------------------------------------------------------
@@ -486,13 +486,14 @@ def _est_width(text: str, size: float) -> float:
 
 
 def pdf_text_runs(data: bytes) -> list[dict]:
-    """PDF bytes → [{page, x, y, w, size, text}] runs.  y is emitted
-    FLIPPED (PDF user space grows upward; the line clustering in
-    pdf_runs_to_documents reads top-down), so ascending y is reading
+    """PDF bytes → [{page, x, y, w, size, text, media}] runs.  y is
+    emitted FLIPPED (PDF user space grows upward; the line clustering in
+    pdf_runs_to_spans reads top-down), so ascending y is reading
     order.  w is the estimated advance width and size the device-space
     font size (Tf size × text/graphics matrix vertical scale) — the
-    relational table reconstruction uses both for adaptive cell
-    splitting and font-size heading detection.
+    table reconstruction uses both for adaptive cell splitting and
+    font-size heading detection.  An image placement is a run with
+    ``media = 'img:N'``, empty text and zero width and size.
 
     Tracks the graphics transformation matrix (q/Q/cm) and maps text
     positions through it — generators that place each block with a
@@ -599,80 +600,34 @@ def _content_runs(page_no: int, content: bytes, fonts: dict,
     return runs
 
 
-_RUNS_SCHEMA = ("doc_id string, page int, x double, y double, "
-                "w double, sz double, msize double, text string, "
-                "media string")
-
-#: the one run of a document whose bytes yield none (junk, empty or
-#: NULL payload): no page and no text, so pdf_runs_to_documents gives
-#: the document a row with no spans instead of dropping it
-_NO_RUNS = [{"page": None, "x": None, "y": None, "w": None, "size": None,
-             "text": "", "media": None}]
-
-
-def _pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # msize = the document's modal (body) font size, weighted by text
-    # length — the heading rule compares each line against it
-    for pdf in batches:
-        out = {k: [] for k in
-               ("doc_id", "page", "x", "y", "w", "sz", "msize", "text",
-                "media")}
-        for doc_id, payload in _payloads(pdf):
-            rs = pdf_text_runs(payload)
-            weights: dict[float, int] = {}
-            for r in rs:
-                k = round(r["size"], 1)
-                weights[k] = weights.get(k, 0) + len(r["text"])
-            msize = max(weights, key=lambda k: (weights[k], k)) if weights else 12.0
-            for r in rs or _NO_RUNS:
-                out["doc_id"].append(doc_id)
-                out["page"].append(r["page"])
-                out["x"].append(r["x"])
-                out["y"].append(r["y"])
-                out["w"].append(r["w"])
-                out["sz"].append(r["size"])
-                out["msize"].append(msize)
-                out["text"].append(r["text"])
-                out["media"].append(r["media"])
-        yield pd.DataFrame(out)
-
-
-def ingest_pdf(raw: DataFrame) -> DataFrame:
-    """raw(doc_id string, payload binary) → documents(doc_id, spans):
-    byte-level text extraction (one Arrow-batched MapInPandas) + the
-    relational reconstruction of ``pdf_runs_to_documents`` — the S1→S2
-    loop on real PDF bytes.  Its table spans are what let the GSTR/CRIF
-    signature extractors run on real fixture PDFs.  Every distinct
-    input doc_id gets one row; a document whose bytes yield no text
-    runs (junk, empty or NULL payload) has ``spans = []``."""
-    return pdf_runs_to_documents(raw.select("doc_id", "payload").mapInPandas(
-        _pdf_batches, schema=_RUNS_SCHEMA))
-
-
 # ---------------------------------------------------------------------------
-# PDF text runs → spans WITH table reconstruction (pure relational)
+# PDF text runs → spans WITH table reconstruction (pure Python, per document)
 # ---------------------------------------------------------------------------
 #
 # The reference obtains table structure from Docling (parser.py:90-106);
 # this is the from-scratch equivalent over raw (x, y) runs:
 #
 #   y-band lines → per-line CELLS (x-gap split; a run's end is
-#   estimated as x + len(text)·char_width since PDF run widths are not
-#   carried) → ≥2-cell lines, 1-line gap closing (wrapped row labels)
-#   → ≥_MIN_TABLE_LINES consecutive = a table block → block line 0 is
-#   the column header; later lines map cells into column slots by x →
-#   one 'table' span per block carrying the serialized grid
-#   (FIXTURES.md §1) that semantics.parse_table / the SQL signature
-#   extractors consume.  Everything else stays a 'text' line span.
+#   estimated as x + w, w from the per-character width model) → ≥3-cell
+#   lines, 1-line gap closing (wrapped row labels) → ≥_MIN_TABLE_LINES
+#   consecutive = a table block → block line 0 is the column header;
+#   later lines map cells into column slots by x → one 'table' span per
+#   block carrying the serialized grid (FIXTURES.md §1) that
+#   semantics.parse_table / the SQL signature extractors consume.
+#   Everything else stays a 'text' line span.
 #
 # Validated against the reference's own GSTR-3B fixtures: all six
 # reconstruct the Table-3.1 strong signature (integrated & central &
 # taxable columns) and yield the golden month + taxable value
-# (tests/test_reference_parity.py).
+# (tests/test_reference_parity.py).  No document's layout reads
+# another's, so the whole reconstruction runs inside the byte
+# extraction's Arrow stage.  Its text rules are Spark SQL's (the form
+# it was first written in), kept so spans stay stable: see ``_norm``
+# and ``_round1``.
 
-#: a new line starts where the y-gap to the previous run exceeds this
-#: (points); fixed-height banding merges the ~3pt line spacing of dense
-#: reports (the reference's CRIF fixtures) into mangled rows
+#: a new line starts where the y-gap to the previous distinct y exceeds
+#: this (points); fixed-height banding merges the ~3pt line spacing of
+#: dense reports (the reference's CRIF fixtures) into mangled rows
 _BAND_GAP = 4.0
 #: a new cell starts where the x-gap exceeds this many font sizes
 _GAP_EM = 1.2
@@ -681,288 +636,174 @@ _MIN_TABLE_LINES = 3
 #: a heading's runs are all at least this many modal font sizes
 _HEADING_EM = 1.25
 
-_CELL_TYPE = ("array<struct<x:double,e:double,"
-              "ms:array<struct<y:double,x:double,t:string>>>>")
-_NORM = "regexp_replace(trim({0}), '\\\\s+', ' ')"
+#: Java's \s: Python's \s (and str.strip) also match NBSP and U+2003
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+_TENTH = Decimal("0.1")
+_WIDE = Context(prec=400)  # any finite double, quantized to 0.1
 
 
-def _cell_text(cell_expr: str) -> str:
-    """Cell text: members sorted (y, x) — a wrapped cell (words
-    stacked over several sub-lines, e.g. the column header 'Number' /
-    'of Accounts') reads top-down, then left-right."""
-    return f"array_join(transform(array_sort({cell_expr}.ms), m -> m.t), ' ')"
+def _norm(s: str) -> str:
+    """Trim ASCII spaces only, then collapse Java-\\s runs to one space."""
+    return _JAVA_WS.sub(" ", s.strip(" "))
 
 
-def _cells_fold(runs_expr: str, anchors: str | None = None) -> str:
-    """Fold x-sorted (x, y, w, sz, t) runs into cells: split when the
-    gap from the previous cell's estimated end (x + w, w from the
-    per-character width model in ``_est_width``) exceeds
+def _round1(x: float) -> float:
+    """round(x, 1) HALF_UP on the decimal repr (2.25 → 2.3, where
+    Python's round gives 2.2)."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_TENTH, ROUND_HALF_UP, _WIDE))
+
+
+def _cells(rs: list[tuple], anchors: set | None = None) -> list[list]:
+    """Fold x-sorted (x, y, w, sz, t) runs into cells [x, end, members]:
+    split when the gap from the previous cell's end exceeds
     ``_GAP_EM × font_size`` — the inter-column whitespace of a table
-    scales with its face — or (phase 2) when the run starts at a block
-    column anchor.  Each cell carries its member runs so text can be
-    re-ordered (y, x) after the x-major fold."""
-    brk = (f"array_contains({anchors}, round(r.x, 1)) OR " if anchors else "")
-    member = "named_struct('y', r.y, 'x', r.x, 't', r.t)"
-    new_cell = (f"named_struct('x', r.x, 'e', r.x + r.w, "
-                f"'ms', array({member}))")
-    merged = ("named_struct('x', element_at(acc, -1).x, "
-              "'e', greatest(element_at(acc, -1).e, r.x + r.w), "
-              f"'ms', concat(element_at(acc, -1).ms, array({member})))")
-    return (f"aggregate({runs_expr}, cast(array() AS {_CELL_TYPE}), (acc, r) -> "
-            f"CASE WHEN size(acc) > 0 AND NOT ({brk}false) "
-            f"AND r.x - element_at(acc, -1).e <= {_GAP_EM}d * r.sz "
-            f"THEN concat(slice(acc, 1, size(acc) - 1), array({merged})) "
-            f"ELSE concat(acc, array({new_cell})) END)")
+    scales with its face — or, with ``anchors``, when the run starts at
+    a block column anchor.  Members are (y, x, t), so a wrapped cell
+    reads top-down, then left-right."""
+    cells: list[list] = []
+    for x, y, w, sz, t in rs:
+        if (cells and (anchors is None or _round1(x) not in anchors)
+                and x - cells[-1][1] <= _GAP_EM * sz):
+            cells[-1][1] = max(cells[-1][1], x + w)
+            cells[-1][2].append((y, x, t))
+        else:
+            cells.append([x, x + w, [(y, x, t)]])
+    return cells
 
 
-def pdf_runs_to_documents(runs: DataFrame) -> DataFrame:
-    """runs(doc_id, page, x, y, w, sz, msize, text) →
-    documents(doc_id, spans) with 'text' line spans, font-size-detected
-    'heading' spans AND reconstructed 'table' spans (see module comment
-    above).  Two exchanges: hash(doc_id, page) for the line windows and
-    hash(doc_id) for the per-document assembly groupBy.
+def _cell_str(cell: list) -> str:
+    return " ".join(t for _, _, t in sorted(cell[2]))
 
-    Lines are GAP-CLUSTERED on y (a new line starts where the y-gap
-    exceeds ``_BAND_GAP``).
-    Cells are computed twice: a width-model phase detects table
-    blocks, then in-block column anchors re-split each block line.
 
-    A gap-cluster can hold several exact-y sub-lines (a wrapped table
-    header stacks each column's words); cell text reads its members in
-    (y, x) order, and when the block's FIRST line wraps, its column
-    slots come from the second line's cells with header words assigned
-    to the nearest slot center — validated on the reference CRIF
-    fixture's Account Summary table ('Number of Accounts' = 54).
-    Headings are lines whose every run is ≥ ``_HEADING_EM`` × the
-    document's modal font size (Docling-style section detection, e.g.
-    the 7pt-vs-5pt 'Account Information' headers of the CRIF
+def _table_rows(tab: list[dict]) -> list[str]:
+    """A table block's tabish lines → [header text, row texts...].
+    Column anchors are x-starts (rounded to 0.1) shared by >= 3 lines
+    of the block — left-aligned columns, scoped per block so repeated
+    section headers never shred each other.  A WRAPPED header (>= 2
+    distinct member y) takes its column slots from the second line's
+    cells and pools its words per slot by nearest centre — validated
+    on the reference CRIF fixture's Account Summary table ('Number of
+    Accounts' = 54)."""
+    xs = [{_round1(r[0]) for r in ln["rs"]} for ln in tab]
+    anchors = {v for v in set().union(*xs) if sum(v in s for s in xs) >= 3}
+    hdr = tab[0]["rs"]
+    if len(tab) > 1 and len({r[1] for r in hdr}) >= 2:
+        cols = [[s[0], s[1], []] for s in _cells(tab[1]["rs"], anchors)]
+        for x, y, w, _, t in hdr:
+            d = [abs((c[0] + c[1]) / 2.0 - (x + w / 2.0)) for c in cols]
+            cols[d.index(min(d))][2].append((y, x, t))
+    else:
+        cols = _cells(hdr, anchors)
+    cx = [c[0] for c in cols]
+    out = [" | ".join(_norm(_cell_str(c)) for c in cols)]
+    for ln in tab[1:]:
+        slots: list[list[str]] = [[] for _ in cx]
+        for c in _cells(ln["rs"], anchors):
+            slots[max(sum(v <= c[0] + 2.0 for v in cx) - 1, 0)].append(
+                _cell_str(c))
+        out.append(" | ".join(_norm(" ".join(s)) for s in slots))
+    return out
+
+
+def _page_spans(page: int, runs: list[dict], msize: float) -> list[list]:
+    """One page's runs → [kind, text, media_ref] in reading order: a
+    text line, a heading, a media line, or one 'table' per table block
+    (header and rows stitched with newlines) at its header line."""
+    ys = sorted({r["y"] for r in runs})
+    band = {ys[0]: 0}
+    for a, b in zip(ys, ys[1:]):
+        band[b] = band[a] + (b - a > _BAND_GAP)
+    groups: dict[tuple, list] = {}
+    for r in runs:
+        groups.setdefault((band[r["y"]], r["media"]), []).append(
+            (r["x"], r["y"], r["w"], r["size"], r["text"]))
+    # media lines can share a band with a text line: text first
+    lines = [{"media": m, "rs": sorted(groups[b, m])}
+             for b, m in sorted(groups, key=lambda k: (k[0], k[1] is not None,
+                                                       k[1] or ""))]
+    for ln in lines:
+        ln["cells"] = _cells(ln["rs"])
+        # >= 3 cells: a 2-cell line is a key-value pair ("Name:  JEET"),
+        # body text; 2-cell rows INSIDE a block join it via the closure
+        ln["is_tab"] = len(ln["cells"]) >= 3
+        # heading-sized lines break the closure, so table blocks split
+        # by a section header alone stay distinct
+        ln["is_head"] = (len({r[1] for r in ln["rs"]}) == 1
+                         and all(r[3] >= msize * _HEADING_EM for r in ln["rs"])
+                         and sum(len(r[4]) for r in ln["rs"]) <= 80)
+    # a block opens at each line that is not tabish (a media line too)
+    blocks: list[list[dict]] = [[]]
+    for i, ln in enumerate(lines):
+        near = (0 < i < len(lines) - 1 and lines[i - 1]["is_tab"]
+                and lines[i + 1]["is_tab"])
+        ln["tabish"] = ((ln["is_tab"] or near) and not ln["is_head"]
+                        and ln["media"] is None)
+        if not ln["tabish"]:
+            blocks.append([])
+        blocks[-1].append(ln)
+    spans = []
+    for blk in blocks:
+        tab = [ln for ln in blk if ln["tabish"]]
+        # >= _MIN_TABLE_LINES rows, or 2 with strong visual evidence: a
+        # wrapped multi-sub-line header or a wide grid
+        n_tab = sum(ln["is_tab"] for ln in tab)
+        qual = n_tab >= _MIN_TABLE_LINES or n_tab >= 2 and (
+            sum(len({r[1] for r in ln["rs"]}) for ln in tab)
+            >= _MIN_TABLE_LINES + 1
+            or sum(len(ln["cells"]) for ln in tab) >= 8)
+        for ln in blk:
+            if qual and ln["tabish"]:
+                if ln is tab[0]:
+                    spans.append(["table", "\n".join(_table_rows(tab)),
+                                  f"page:{page}"])
+            elif ln["media"] is not None:
+                spans.append(["media", "", ln["media"]])
+            elif text := _norm(" ".join(map(_cell_str, ln["cells"]))):
+                spans.append(["heading" if ln["is_head"] else "text", text,
+                              f"page:{page}"])
+    # a page with media but no text is image-only (scanned): the
+    # reference OCRs it (Docling, parser.py:31-58); with no OCR here
+    # its media refs are marked so downstream curation can route
+    if all(s[0] == "media" for s in spans):
+        for s in spans:
+            s[2] = "needs_ocr:" + s[2]
+    return spans
+
+
+def pdf_runs_to_spans(runs: list[dict]) -> list[dict]:
+    """One document's runs [{page, x, y, w, size, text, media}] →
+    spans: reading-order 'text' lines, font-size-detected 'heading's,
+    reconstructed 'table's and 'media' (see the comment above).
+
+    Lines are gap-clustered on y per page.  Cells are computed twice:
+    a width-model pass detects table blocks, then in-block column
+    anchors re-split each block line.  Headings are lines of one y
+    whose every run is >= ``_HEADING_EM`` × the document's modal font
+    size (weighted by text length; Docling-style section detection,
+    e.g. the 7pt-vs-5pt 'Account Information' headers of the CRIF
     fixtures)."""
-    w0 = Window.partitionBy("doc_id", "page").orderBy("y")
-    banded = (runs.withColumn("_gap", F.col("y") - F.lag("y").over(w0))
-              .withColumn("band", F.sum(
-                  F.when(F.col("_gap") > _BAND_GAP, 1).otherwise(0))
-                  .over(w0))
-              .drop("_gap"))
-    lines = (banded.groupBy("doc_id", "page", "band", "media")
-             .agg(F.expr("array_sort(collect_list(named_struct("
-                         "'x', x, 'y', y, 'w', w, 'sz', sz, 't', text)))")
-                  .alias("rs"),
-                  F.first("msize").alias("msize")))
-    # >= 3 cells: a 2-cell line is a key-value pair ("Period  January",
-    # "Name:  JEET"), which document-layout models render as body text
-    # — real tables in these reports all carry >= 3 columns.  2-cell
-    # rows INSIDE a table block still join it via the tabish closure.
-    lines = (lines.withColumn(
-                 "cells", F.expr(_cells_fold("rs")))
-             .withColumn("is_tab", F.expr("size(cells) >= 3"))
-             .withColumn("n_sub", F.expr(
-                 "size(array_distinct(transform(rs, r -> r.y)))")))
-    # heading-sized lines (section labels) are never table filler: they
-    # break the tabish closure so consecutive table blocks separated
-    # only by a section header (one 'Account Information' per account
-    # grid in the CRIF fixtures) stay distinct blocks
-    lines = lines.withColumn("is_head", F.expr(
-        f"n_sub = 1 AND forall(rs, r -> r.sz >= msize * {_HEADING_EM}d) "
-        "AND aggregate(rs, 0, (a, r) -> a + length(r.t)) <= 80"))
-    # media rows can share a band with a text line (their own group
-    # rows): order ties deterministically, media-last
-    w = Window.partitionBy("doc_id", "page").orderBy(
-        "band", F.col("media").asc_nulls_first())
-    lines = lines.withColumn(
-        "tabish",
-        (F.col("is_tab") |
-         (F.coalesce(F.lag("is_tab").over(w), F.lit(False)) &
-          F.coalesce(F.lead("is_tab").over(w), F.lit(False)))) &
-        ~F.col("is_head") & F.col("media").isNull())
-    lines = lines.withColumn(
-        "block", F.sum(F.when(~F.col("tabish"), 1).otherwise(0)).over(w))
+    weights: dict[float, int] = {}
+    for r in runs:
+        k = round(r["size"], 1)
+        weights[k] = weights.get(k, 0) + len(r["text"])
+    msize = max(weights, key=lambda k: (weights[k], k)) if weights else 12.0
+    pages: dict[int, list[dict]] = {}
+    for r in runs:
+        pages.setdefault(r["page"], []).append(r)
+    spans = [s for p in sorted(pages) for s in _page_spans(p, pages[p], msize)
+             if s[0] == "media" or s[1]]
+    return [{"kind": k, "text": t, "media_ref": m, "offset": i}
+            for i, (k, t, m) in enumerate(spans)]
 
-    # ---- SINGLE-LINEAGE block analysis.  Everything below runs over
-    # window partitions (doc_id, page, block) — the same hash(doc_id,
-    # page) clustering the banding shuffle already established — so the
-    # whole reconstruction is ONE pass over ONE execution of the Python
-    # byte-extraction stage.  (The previous formulation unioned a
-    # table-span branch with a text-span branch and anti-joined a
-    # swallowed-block set: three independent subtrees, and because
-    # column pruning makes them non-identical, no exchange reuse — the
-    # PDF parse executed three times per ingest.)  Per-row window state
-    # stays SMALL (scalars, one line's runs, per-line x-start sets):
-    # collecting each block's full run array per row was measured 2x
-    # slower than even the triple-execution plan.
-    wb = (Window.partitionBy("doc_id", "page", "block")
-          .orderBy("band", F.col("media").asc_nulls_first())
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    wbo = (Window.partitionBy("doc_id", "page", "block")
-           .orderBy("band", F.col("media").asc_nulls_first())
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    lines = (lines
-             # block partitions include the leading NON-tabish line
-             # that opened the block id, so every block statistic and
-             # the rank must restrict to tabish rows explicitly
-             .withColumn("n_tab", F.sum(F.when(
-                 F.col("is_tab") & F.col("tabish"), 1)
-                 .otherwise(0)).over(wb))
-             .withColumn("blk_sub", F.sum(F.when(F.col("tabish"),
-                                                 F.col("n_sub"))).over(wb))
-             .withColumn("blk_cells", F.sum(F.when(
-                 F.col("tabish"), F.expr("size(cells)"))).over(wb))
-             .withColumn("rn", F.when(F.col("tabish"), F.sum(
-                 F.when(F.col("tabish"), 1).otherwise(0)).over(wbo))))
-    # a block qualifies as a table with >= _MIN_TABLE_LINES gap-cluster
-    # rows, OR with 2 rows when the visual evidence is strong: a
-    # wrapped multi-sub-line header (the Account Summary shape) or a
-    # wide grid (months × statuses payment strips)
-    lines = lines.withColumn(
-        "qual",
-        (F.col("n_tab") >= _MIN_TABLE_LINES) |
-        ((F.col("n_tab") >= 2) &
-         ((F.col("blk_sub") >= _MIN_TABLE_LINES + 1) |
-          (F.col("blk_cells") >= 8))))
 
-    # phase-2 cells with in-block anchors; header = first tabish line.
-    # A WRAPPED header (>= 2 distinct member y) takes its column slots
-    # from the second line's cells and pools its words per slot by
-    # nearest center.  hdr/cx/hdr_txt EVALUATE only on the rn=1 row
-    # (CASE guard) and PROPAGATE to the block's other rows through
-    # first_value windows — window output is materialized, so the per-
-    # line cell lambdas below reference plain attributes instead of
-    # re-evaluating the header fold per cell (interpreted higher-order
-    # functions have no common-subexpression elimination; measured:
-    # minutes for one dense report without this).
-    lines = (lines
-             .withColumn("hdr_rs", F.first(
-                 F.expr("CASE WHEN tabish THEN rs END"),
-                 ignorenulls=True).over(wb))
-             .withColumn("slots_rs", F.first(
-                 F.expr("CASE WHEN rn = 2 THEN rs END"),
-                 ignorenulls=True).over(wb))
-             # per-line distinct rounded x-starts; the block anchor
-             # rule (x shared by >= 3 lines) folds over these small
-             # sets instead of the full per-block run arrays
-             .withColumn("tlx", F.expr(
-                 "collect_list(CASE WHEN tabish THEN array_distinct("
-                 "transform(rs, r -> round(r.x, 1))) END) OVER "
-                 "(PARTITION BY doc_id, page, block)")))
-    # phase-2 per-block column anchors: x-starts (rounded to 0.1) shared
-    # by >= 3 distinct lines WITHIN the table block — left-aligned table
-    # columns.  Scoped per block, not per page: repeated section headers
-    # ("Nature of Supplies" across GSTR tables) would otherwise turn
-    # mid-phrase word positions into page-wide anchors and shred headers.
-    anchors = ("filter(array_distinct(flatten(tlx)), v -> "
-               "size(filter(tlx, l -> array_contains(l, v))) >= 3)")
-    hdr1 = _cells_fold("hdr_rs", "ax")
-    slots = _cells_fold("slots_rs", "ax")
-    dists = ("transform(slots, s -> abs((s.x + s.e) / 2d "
-             "- (r.x + r.w / 2d)))")
-    hdr_multi = (
-        "transform(sequence(1, size(slots)), j -> named_struct("
-        "'x', element_at(slots, j).x, 'e', element_at(slots, j).e, "
-        "'ms', transform(filter(hdr_rs, "
-        f"r -> array_position({dists}, array_min({dists})) = j), "
-        "r -> named_struct('y', r.y, 'x', r.x, 't', r.t))))")
-    lines = (lines
-             .withColumn("ax", F.expr(
-                 f"CASE WHEN qual AND rn = 1 THEN {anchors} END"))
-             .withColumn("multi", F.expr(
-                 "qual AND rn = 1 AND slots_rs IS NOT NULL AND "
-                 "size(array_distinct(transform(hdr_rs, r -> r.y))) >= 2"))
-             .withColumn("slots", F.expr(
-                 f"CASE WHEN multi THEN {slots} END")))
-    cols_e = ("transform(CASE WHEN multi THEN " + hdr_multi +
-              f" ELSE {hdr1} END, c -> " + _NORM.format(_cell_text("c")) + ")")
-    lines = (lines
-             .withColumn("cx1", F.expr(
-                 "CASE WHEN qual AND rn = 1 THEN CASE WHEN multi "
-                 f"THEN transform(slots, s -> s.x) "
-                 f"ELSE transform({hdr1}, c -> c.x) END END"))
-             .withColumn("hdr_txt", F.expr(
-                 "CASE WHEN qual AND rn = 1 THEN "
-                 f"array_join({cols_e}, ' | ') END")))
-    lines = (lines
-             .withColumn("cx", F.first("cx1", ignorenulls=True).over(wb))
-             .withColumn("axp", F.first("ax", ignorenulls=True).over(wb)))
-    ln_cells = _cells_fold("rs", "axp")
-    slot = "greatest(size(filter(cx, v -> v <= c.x + 2.0d)) - 1, 0)"
-    row_e = ("transform(sequence(0, size(cx) - 1), j -> "
-             + _NORM.format("array_join(transform(filter(" + ln_cells
-             + ", c -> " + slot + " = j), c -> " + _cell_text("c")
-             + "), ' ')") + ")")
-    line_text = _NORM.format(
-        "array_join(transform(cells, c -> " + _cell_text("c") + "), ' ')")
-    # each line becomes ONE output row: a table header row ('thdr',
-    # the joined column names), a table data row ('trow'), a heading,
-    # or a text line; the per-document fold below stitches thdr+trow
-    # runs into single 'table' spans — no per-block collect window and
-    # no second subtree over the parse
-    allspans = (lines
-                .withColumn("kind", F.expr(
-                    "CASE WHEN media IS NOT NULL THEN 'media' "
-                    "WHEN qual AND tabish THEN "
-                    "  CASE WHEN rn = 1 THEN 'thdr' ELSE 'trow' END "
-                    "WHEN is_head THEN 'heading' ELSE 'text' END"))
-                .select("doc_id", "page", "band",
-                        F.col("block").alias("blk"), "kind", "media",
-                        F.expr("CASE WHEN kind = 'media' THEN '' "
-                               "WHEN kind = 'thdr' "
-                               "THEN coalesce(hdr_txt, '') "
-                               f"WHEN kind = 'trow' "
-                               f"THEN array_join({row_e}, ' | ') "
-                               f"ELSE {line_text} END").alias("text"))
-                # page IS NULL: the run of a document without runs
-                # (_NO_RUNS) — the fold drops its empty span and keeps
-                # the document's row
-                .where("kind IN ('thdr', 'trow', 'media') OR text != '' "
-                       "OR page IS NULL"))
-    # scanned-page detection (r4 VERDICT #4): a page with media but NO
-    # text runs is image-only — the reference OCRs these (Docling,
-    # parser.py:31-58); with no OCR in the sandbox the media span is
-    # MARKED (media_ref 'needs_ocr:img:N') instead of silently
-    # yielding an empty page, so downstream curation can route.  The
-    # (doc_id, page) window reuses the banding shuffle's partitioning
-    # — no extra exchange.
-    wpage = Window.partitionBy("doc_id", "page")
-    allspans = (allspans
-                .withColumn("_pg_text", F.max(
-                    F.when(F.col("kind") != "media", 1).otherwise(0))
-                    .over(wpage))
-                .withColumn("media", F.when(
-                    (F.col("kind") == "media") & (F.col("_pg_text") == 0),
-                    F.concat(F.lit("needs_ocr:"), F.col("media")))
-                    .otherwise(F.col("media")))
-                .drop("_pg_text"))
-    span_t = "struct<kind:string,text:string,media_ref:string,offset:int>"
-    state_t = f"struct<acc:array<{span_t}>,tpage:int,ttext:string>"
-    tspan = ("named_struct('kind', 'table', 'text', s.ttext, "
-             "'media_ref', concat('page:', cast(s.tpage AS string)), "
-             "'offset', 0)")
-    flushed = (f"CASE WHEN s.ttext IS NOT NULL "
-               f"THEN concat(s.acc, array({tspan})) ELSE s.acc END")
-    fold = f"""
-        aggregate(
-          array_sort(collect_list(named_struct(
-            'page', page, 'band', band, 'blk', blk,
-            'kind', kind, 'text', text,
-            'mref', coalesce(media, concat('page:', cast(page AS string)))))),
-          cast(named_struct('acc', array(), 'tpage', NULL, 'ttext', NULL)
-               AS {state_t}),
-          (s, r) -> CASE
-            WHEN r.kind = 'thdr' THEN named_struct(
-              'acc', {flushed}, 'tpage', r.page, 'ttext', r.text)
-            WHEN r.kind = 'trow' THEN named_struct(
-              'acc', s.acc, 'tpage', s.tpage,
-              'ttext', concat_ws('\\n', s.ttext, r.text))
-            ELSE named_struct(
-              'acc', concat({flushed}, array(named_struct(
-                'kind', r.kind, 'text', r.text,
-                'media_ref', r.mref,
-                'offset', 0))),
-              'tpage', CAST(NULL AS int), 'ttext', CAST(NULL AS string))
-          END,
-          s -> transform(
-            filter({flushed}, r -> r.kind = 'media' OR r.text != ''),
-            (r, i) -> named_struct('kind', r.kind, 'text', r.text,
-                                   'media_ref', r.media_ref,
-                                   'offset', i)))
-    """
-    return (allspans.groupBy("doc_id")
-            .agg(F.expr(fold).alias("spans")))
+def ingest_pdf(raw: DataFrame) -> DataFrame:
+    """raw(doc_id string, payload binary) → documents(doc_id, spans):
+    per document, byte-level text extraction (``pdf_text_runs``) and
+    the layout reconstruction (``pdf_runs_to_spans``) in one
+    Arrow-batched stage — the S1→S2 loop on real PDF bytes.  Its table
+    spans are what let the GSTR/CRIF signature extractors run on real
+    fixture PDFs.  Every input row gets one row; a document whose bytes
+    yield no text runs (junk, empty or NULL payload) has ``spans = []``."""
+    return _ingest(raw, lambda b: pdf_runs_to_spans(pdf_text_runs(b)))

@@ -25,11 +25,10 @@ from __future__ import annotations
 
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .extract.crif import result_rows
-from .parse import DOC_KIND_SQL
+from .parse import DOC_KIND_SQL, DOCUMENTS_SCHEMA
 from .pipeline import extract_from_raw
 
 MANIFEST = "_manifest"
@@ -45,13 +44,18 @@ def _manifest_state(spark: SparkSession, out_dir: str) -> tuple[set[int], int]:
     """One read of the manifest: the buckets marked done and the next
     attempt number (1 when there is no manifest or it has no rows, as
     after a run with nothing pending)."""
-    try:
-        rows = (spark.read.schema("bucket int, status string, attempt int")
-                .parquet(f"{out_dir}/{MANIFEST}").collect())
-    except AnalysisException:  # no manifest yet
+    path = spark._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/{MANIFEST}")
+    # asked of the FileSystem: a read of a missing path logs a stack trace
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return set(), 1
+    rows = (spark.read.schema("bucket int, status string, attempt int")
+            .parquet(str(path)).collect())
     return ({r["bucket"] for r in rows if r["status"] == "done"},
             max((r["attempt"] for r in rows), default=0) + 1)
+
+
+def _bucketed_results(docs: DataFrame, n_buckets: int) -> DataFrame:
+    return with_bucket(extract_from_raw(docs), n_buckets)
 
 
 def run_with_lineage(docs: DataFrame, out_dir: str,
@@ -70,11 +74,11 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
         pending = pending.where(F.col("bucket").isin(buckets_subset))
 
     t0 = time.perf_counter()
-    results = extract_from_raw(pending.select("doc_id", "spans"))
     # one writer task per bucket: without the exchange every input
     # partition writes a file into every bucket (partitions × buckets
     # small files); only the slim result rows cross it, no span data
-    out = with_bucket(results, n_buckets).repartition("bucket")
+    out = _bucketed_results(pending.select("doc_id", "spans"),
+                            n_buckets).repartition("bucket")
     # per-write option, not a session-conf flip: a session-wide
     # setting would leak into the caller's other writes and race with
     # concurrent writers (same fix as ops/pack.py)
@@ -106,4 +110,8 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
 
 
 def read_results(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/{RESULTS}")
+    """Every result row written into ``out_dir``, read with the schema
+    of the plan that writes them, so nothing is inferred and a
+    directory whose runs wrote no row reads as an empty frame."""
+    written = _bucketed_results(spark.createDataFrame([], DOCUMENTS_SCHEMA), 1)
+    return spark.read.schema(written.schema).parquet(f"{out_dir}/{RESULTS}")

@@ -51,7 +51,11 @@ def ensure_parallelism(docs: DataFrame, min_partitions: int | None = None) -> Da
                         .stats().sizeInBytes())
         max_part = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
                                       "134217728").rstrip("b"))
-        if est_bytes >= target * max_part:
+        # an unknown size (an RDD-backed frame, a coalesce of one) reads
+        # as spark.sql.defaultSizeInBytes, Long.MaxValue by default
+        unknown = int(spark.conf.get("spark.sql.defaultSizeInBytes",
+                                     str(2 ** 63 - 1)).rstrip("b"))
+        if unknown > est_bytes >= target * max_part:
             return docs
     except Exception:
         pass  # non-scan inputs: fall through to the exact probe

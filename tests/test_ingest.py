@@ -1,6 +1,7 @@
 """Raw byte-stream ingestion: HTML tokenizer + PDF text-run merging
 (north_star S2 front-ends producing the canonical span model)."""
 
+import pytest
 from pyspark.sql import Row
 
 from crego_document_extractor_spark import ingest, pipeline
@@ -52,22 +53,123 @@ def test_ingest_html_end_to_end(spark):
     assert clean == exp
 
 
-def test_pdf_runs_reading_order(spark):
-    rows = [
+def _run(page, x, y, text, size=12.0, media=None):
+    return {"page": page, "x": x, "y": y, "text": text, "media": media,
+            "w": 0.0 if media else len(text) * 0.5 * size,
+            "size": 0.0 if media else size}
+
+
+def test_pdf_runs_reading_order():
+    runs = [
         # page 2 line (should come after all of page 1)
-        ("d1", 2, 10.0, 15.0, 30.0, 12.0, 12.0, "page2", None),
+        _run(2, 10.0, 15.0, "page2"),
         # page 1, line 1 (y≈14) — two runs out of x order
-        ("d1", 1, 200.0, 14.0, 30.0, 12.0, 12.0, "world", None),
-        ("d1", 1, 10.0, 15.5, 30.0, 12.0, 12.0, "hello", None),
+        _run(1, 200.0, 14.0, "world"),
+        _run(1, 10.0, 15.5, "hello"),
         # page 1, line 0 (header line)
-        ("d1", 1, 50.0, 2.0, 30.0, 12.0, 12.0, "Title", None),
+        _run(1, 50.0, 2.0, "Title"),
     ]
-    docs = ingest.pdf_runs_to_documents(
-        spark.createDataFrame(rows, ingest._RUNS_SCHEMA))
-    spans = [s.asDict() for s in docs.collect()[0]["spans"]]
+    spans = ingest.pdf_runs_to_spans(runs)
     assert [s["text"] for s in spans] == ["Title", "hello world", "page2"]
     assert [s["media_ref"] for s in spans] == ["page:1", "page:1", "page:2"]
     assert [s["offset"] for s in spans] == [0, 1, 2]
+
+
+#: words for the seeded layouts: a tab, NBSP and EM SPACE inside words
+#: (whitespace to Python, not to the Java \s rule), a word that
+#: rounds differently under HALF_UP, and wrapped-header words
+_WORDS = ["alpha", "42", "Total:", "9,99,999", "x", "2.25", "a\tb", "n\xa0b",
+          "em\u2003sp", " pad ", "Rs.", "Number", "of", "Accounts"]
+#: column x jitter; .05/.25 land on the 0.1-rounding boundary
+_JITTER = [0.0, 0.05, -0.05, 0.1, 0.25, 1.0, 3.0]
+
+
+def _layout(rng):
+    """One seeded document layout: aligned grids (half with a wrapped
+    header), media runs inside text bands, image-only pages,
+    heading-sized lines and free text."""
+    runs = []
+    for page in range(1, rng.randint(1, 3) + 1):
+        y = rng.uniform(0, 20)
+        if rng.random() < 0.1:  # image-only (scanned) page
+            for k in range(rng.randint(1, 2)):
+                runs.append(_run(page, rng.uniform(0, 300), y + 50 * k, "",
+                                 media=f"img:{rng.randint(1, 9)}"))
+            continue
+        for _ in range(rng.randint(1, 8)):
+            shape, sz = rng.random(), rng.choice([5.0, 7.0, 9.0, 12.0])
+            if shape < 0.4:  # aligned grid
+                xs = [round(rng.uniform(0, 40) + c * rng.uniform(40, 90), 1)
+                      + rng.choice([0.0, 0.05, 0.25])
+                      for c in range(rng.randint(2, 6))]
+                wrapped = rng.random() < 0.5
+                for x in xs:
+                    runs.append(_run(page, x, y, rng.choice(_WORDS), sz))
+                    if wrapped and rng.random() < 0.6:
+                        runs.append(_run(page, x + rng.choice(_JITTER),
+                                         y + rng.choice([1.5, 2.0, 3.0]),
+                                         rng.choice(_WORDS), sz))
+                y += rng.uniform(5, 12)
+                for _ in range(rng.randint(1, 6)):
+                    for x in xs:
+                        if rng.random() < 0.85:
+                            runs.append(_run(page, x + rng.choice(_JITTER),
+                                             y + rng.choice([0.0, 0.0, 0.5]),
+                                             rng.choice(_WORDS), sz))
+                    y += rng.uniform(3, 12)
+            elif shape < 0.5:
+                runs.append(_run(page, rng.uniform(0, 400), y, "",
+                                 media=f"img:{rng.randint(1, 9)}"))
+            elif shape < 0.6:
+                runs.append(_run(page, rng.uniform(0, 100), y,
+                                 " ".join(rng.sample(_WORDS, 2)), sz * 1.5))
+            else:
+                for _ in range(rng.randint(1, 4)):
+                    runs.append(_run(page, rng.uniform(0, 500), y,
+                                     rng.choice(_WORDS), sz))
+            y += rng.uniform(2, 14)
+    return runs
+
+
+def _tie_layout():
+    """Exact ties the random layouts never hit: a wrapped header word
+    centred between two column slots (the first slot takes it), two row
+    lines exactly _BAND_GAP apart (one band) and a row cell exactly 2.0
+    left of a column (that column)."""
+    runs = [_run(1, x, 0.0, t, 10.0)
+            for x, t in ((0.0, "AA"), (100.0, "BB"), (200.0, "CC"))]
+    runs.append(_run(1, 50.0, 2.0, "mid", 10.0))
+    for y in (10.0, 20.0, 24.0, 34.0):
+        runs += [_run(1, x, y, f"r{y:g}", 10.0) for x in (0.0, 100.0, 200.0)]
+    return runs + [_run(1, x, 44.0, t, 10.0)
+                   for x, t in ((0.0, "a"), (98.0, "b"), (200.0, "c"))]
+
+
+def test_pdf_runs_golden_spans():
+    """The spans of 400 seeded layouts and the tie layout hash to the
+    value the windowed Spark SQL reconstruction (deleted) gave for the
+    same runs."""
+    import hashlib
+    import json
+    import random
+
+    rng = random.Random(13)
+    spans = [ingest.pdf_runs_to_spans(runs) for runs in
+             [_layout(rng) for _ in range(400)] + [_tie_layout()]]
+    kinds = [s["kind"] for doc in spans for s in doc]
+    assert {k: kinds.count(k) for k in set(kinds)} == _GOLDEN_KINDS
+    assert any(s["media_ref"].startswith("needs_ocr:")
+               for doc in spans for s in doc if s["kind"] == "media")
+    blob = json.dumps([[[s["kind"], s["text"], s["media_ref"], s["offset"]]
+                        for s in doc] for doc in spans])
+    assert hashlib.sha256(blob.encode()).hexdigest() == _GOLDEN_SHA256
+
+
+#: computed over the same 401 layouts (26,458 runs) by the windowed
+#: Spark SQL reconstruction that pdf_runs_to_spans replaced
+_GOLDEN_KINDS = {"heading": 1165, "media": 463, "table": 657, "text": 2129}
+_GOLDEN_SHA256 = (
+    "41e55ae11377845d100e8b6bc1ecc4d90ec127d51ffdc6c37449ae5c3c1102f8")
 
 
 def test_tokenize_html_anchor_block_and_unclosed():
@@ -192,16 +294,34 @@ def test_objstm_pdf_extracts_text():
 
 
 def test_ingest_pdf_partitioning_invariance(spark):
-    """The windowed single-pass reconstruction must give identical
-    spans regardless of the input's physical partitioning."""
+    """Identical spans regardless of the input's physical partitioning,
+    and a one-partition input is spread before the Python stage."""
     raw = spark.createDataFrame(
         [(f"crif-{i:03d}", bytearray(_objstm_pdf() if i % 2 else _mini_pdf([f"BT 1 0 0 1 50 700 Tm (hello {i}) Tj ET"])))
          for i in range(6)], "doc_id string, payload binary")
+    narrow = ingest.ingest_pdf(raw.coalesce(1))
     a = {r["doc_id"]: [tuple(s) for s in r["spans"]]
-         for r in ingest.ingest_pdf(raw.coalesce(1)).collect()}
+         for r in narrow.collect()}
     b = {r["doc_id"]: [tuple(s) for s in r["spans"]]
          for r in ingest.ingest_pdf(raw.repartition(16)).collect()}
     assert a == b and len(a) == 6
+    assert narrow.rdd.getNumPartitions() > 1
+
+
+def test_ingest_pdf_plan_is_one_python_stage(spark):
+    """Over an input already wider than the parallelism rule asks, the
+    PDF front is one MapInPandas and no Exchange."""
+    n = 2 * spark.sparkContext.defaultParallelism
+    rows = spark.sparkContext.parallelize(
+        [(f"crif-{i:03d}", bytearray(_mini_pdf(
+            [f"BT 1 0 0 1 50 700 Tm (hello {i}) Tj ET"])))
+         for i in range(n)], n)
+    docs = ingest.ingest_pdf(
+        spark.createDataFrame(rows, "doc_id string, payload binary"))
+    assert len(docs.collect()) == n
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Exchange") == 0, plan
 
 
 def _image_pdf() -> bytes:
@@ -243,29 +363,27 @@ def test_pdf_image_xobject_media_span(spark):
     assert spans[2]["text"] == "below the image"
 
 
-def test_runs_reconstruction_fuzz(spark):
+def test_runs_reconstruction_fuzz():
     """Random (x, y, size) run layouts must reconstruct without errors
     into densely-offset spans with the invariants of the span model
     (non-empty text except media, page-monotonic order)."""
     import random
 
-    rows = []
+    docs = []
     for seed in range(4):
         rng = random.Random(seed)
+        runs = []
         for i in range(rng.randint(5, 120)):
             page = rng.randint(1, 3)
             sz = rng.choice([4.0, 5.0, 7.0, 9.0])
             txt = " ".join(
                 rng.choice(["alpha", "42", "Total:", "9,99,999", "x"])
                 for _ in range(rng.randint(1, 4)))
-            rows.append((f"fz-{seed}", page, rng.uniform(0, 500),
-                         rng.uniform(0, 800),
-                         len(txt) * 0.5 * sz, sz, 5.0, txt, None))
-    runs = spark.createDataFrame(rows, ingest._RUNS_SCHEMA)
-    docs = {r["doc_id"]: [s.asDict() for s in r["spans"]]
-            for r in ingest.pdf_runs_to_documents(runs).collect()}
+            runs.append(_run(page, rng.uniform(0, 500), rng.uniform(0, 800),
+                             txt, sz))
+        docs.append(ingest.pdf_runs_to_spans(runs))
     assert len(docs) == 4
-    for spans in docs.values():
+    for spans in docs:
         assert [s["offset"] for s in spans] == list(range(len(spans)))
         pages = [int(s["media_ref"].split(":")[1]) for s in spans]
         assert pages == sorted(pages)
@@ -450,3 +568,34 @@ def test_ingest_html_null_payload(spark):
     got = {r["doc_id"]: [s["text"] for s in r["spans"]]
            for r in ingest.ingest_html(raw).collect()}
     assert got == {"html-ok": ["kept"], "html-null": []}
+
+
+@pytest.mark.parametrize("front", ["html", "pdf"])
+def test_duplicate_and_null_doc_ids_stay_separate(spark, front):
+    """Each input row is its own document: two payloads under one
+    doc_id and two under a NULL doc_id give four rows, each holding its
+    own payload's spans."""
+    if front == "html":
+        ingest_front = ingest.ingest_html
+        payloads = [f"<p>payload {i}</p>".encode() for i in range(4)]
+
+        def spans_of(b):
+            return ingest.tokenize_html(b.decode())
+    else:
+        ingest_front = ingest.ingest_pdf
+        payloads = [_mini_pdf([f"BT 1 0 0 1 10 700 Tm (payload {i}) Tj ET"])
+                    for i in range(4)]
+
+        def spans_of(b):
+            return ingest.pdf_runs_to_spans(ingest.pdf_text_runs(b))
+    ids = ["crif-dup", "crif-dup", None, None]
+    raw = spark.createDataFrame(
+        [(d, bytearray(b)) for d, b in zip(ids, payloads)],
+        "doc_id string, payload binary")
+
+    def key(doc_id, spans):
+        return (doc_id or "", [tuple(s.values()) for s in spans])
+    got = sorted(key(r["doc_id"], [s.asDict() for s in r["spans"]])
+                 for r in ingest_front(raw).collect())
+    assert got == sorted(key(d, spans_of(b)) for d, b in zip(ids, payloads))
+    assert all(len(spans) == 1 for _, spans in got)

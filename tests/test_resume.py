@@ -69,8 +69,9 @@ def test_lineage_leaves_session_overwrite_mode(spark, docs_path, tmp_path):
 @pytest.mark.parametrize("nothing_pending", ["empty_input", "empty_subset"])
 def test_run_with_nothing_pending(spark, docs_path, tmp_path, nothing_pending):
     """A run with nothing pending on a fresh output dir processes no
-    bucket, and a later full run into the same dir converges to a fresh
-    run."""
+    bucket and reads back as an empty frame with the columns and types
+    of a populated read, and a later full run into the same dir
+    converges to a fresh run."""
     docs = pipeline.load_documents(spark, docs_path)
     out = str(tmp_path / "out")
     if nothing_pending == "empty_input":
@@ -81,6 +82,9 @@ def test_run_with_nothing_pending(spark, docs_path, tmp_path, nothing_pending):
 
     fresh = str(tmp_path / "fresh")
     lineage.run_with_lineage(docs, fresh, 16)
+    empty = lineage.read_results(spark, out)
+    assert empty.count() == 0
+    assert empty.schema == spark.read.parquet(f"{fresh}/{lineage.RESULTS}").schema
     assert lineage.run_with_lineage(docs, out, 16)["buckets_processed"] == 16
     assert (_collect(lineage.read_results(spark, out))
             == _collect(lineage.read_results(spark, fresh)))
