@@ -1110,7 +1110,7 @@ def _q_rag_fallback(spark, sf):
         rows, "doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
     results = pipeline.extract_from_raw(docs)
-    return (with_rag_fallback(results, parse_documents(docs), enabled=True)
+    return (with_rag_fallback(results, parse_documents(docs))
             .where("param_id = 'bureau_credit_score'")
             .select("doc_id", "param_id", "value_num", "value_type",
                     "status", F.round("confidence", 6).alias("confidence"),

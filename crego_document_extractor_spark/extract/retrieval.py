@@ -7,27 +7,27 @@ its score are observable downstream, so ``retrieve_rows`` computes
 exactly that for one document's candidate pool: the best (candidate,
 score) per parameter.  It is the one Python retrieval form: the fused
 parse stage (parse.py) and the opt-in RAG fallback's answer stage
-(ops/answer.py) call it per document, over ``candidate_pool``.  No
-shuffle, no per-row Python UDF.
+(ops/answer.py) call it per document.  No shuffle, no per-row Python
+UDF.  What it computes is defined in :mod:`..semantics`: the query
+embeddings (``QUERY_MAT``), the candidates (``candidate_pool``) and
+the scoring (``retrieve_best``), which the oracle calls too; this
+module only labels the winners.
 
 The embedding itself is the deterministic hashed-feature vector from
 :mod:`..semantics` (replacing the reference's Ollama HTTP calls —
 sandboxed determinism is what its own consistency test demands,
-test_accuracy.py:79-115).  This code shares the exact scoring with
-the oracle, so retrieval parity is by construction; the relational
-engine (retrieval_sql.py) is the independent implementation.
+test_accuracy.py:79-115).  The relational engine (retrieval_sql.py)
+is the independent implementation.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
 from .. import semantics as S
-from ..specs import PARAMETER_SPECS, query_text
+from ..specs import PARAM_ORDER
 
-#: SQL form of ``candidate_pool`` over a full parse's tables/chunks:
-#: tables first, then text chunks, contents truncated to 1500 chars
-#: (crif.py:80-121).  No package code reads it; perfbench's
+#: SQL form of ``semantics.candidate_pool`` over a full parse's
+#: tables/chunks: tables first, then text chunks, contents truncated to
+#: 1500 chars (crif.py:80-121).  No package code reads it; perfbench's
 #: job_lineage replay builds its candidate pools with it.
 CANDIDATES_EXPR = (
     "concat("
@@ -40,21 +40,15 @@ CANDIDATES_EXPR = (
     ")"
 )
 
-_PARAM_IDS = [spec["param_id"] for spec in PARAMETER_SPECS]
-_QUERY_MAT = np.stack([S.embed(query_text(spec)) for spec in PARAMETER_SPECS])
-#: constant per process — recomputing it per document inside
-#: retrieve_best was pure overhead (r6)
-_QUERY_NORMS = np.linalg.norm(_QUERY_MAT, axis=1)
-
 
 def retrieve_rows(cand_list) -> list[dict]:
     """One document's candidate structs → the per-parameter best-chunk
     rows (the single shared definition — used by the fused parse stage
     and the RAG fallback's answer stage)."""
     cand_vecs = [S.embed(c["content"]) for c in cand_list]
-    retrieved = S.retrieve_best(_QUERY_MAT, cand_vecs, _QUERY_NORMS)
+    retrieved = S.retrieve_best(cand_vecs)
     row = []
-    for pid, (best_i, score) in zip(_PARAM_IDS, retrieved):
+    for pid, (best_i, score) in zip(PARAM_ORDER, retrieved):
         if best_i is None:
             row.append({"param_id": pid, "ctype": None,
                         "ref_idx": None, "score": None})
@@ -63,19 +57,3 @@ def retrieve_rows(cand_list) -> list[dict]:
             row.append({"param_id": pid, "ctype": c["ctype"],
                         "ref_idx": int(c["ref_idx"]), "score": score})
     return row
-
-
-def candidate_pool(doc_kind: str, tables, chunks) -> list[dict]:
-    """One document's retrieval candidates: tables first, then text
-    chunks, contents truncated to MAX_CHUNK_CHARS; non-crif kinds have
-    none (crif.py:80-121).  Read by the fused parse stage and the RAG
-    fallback's answer stage."""
-    if doc_kind != "crif":
-        return []
-    pool = [{"ctype": "table", "ref_idx": t["id"],
-             "content": (t["raw"] or "")[:S.MAX_CHUNK_CHARS]}
-            for t in tables]
-    pool += [{"ctype": "text", "ref_idx": c["chunk_idx"],
-              "content": (c["text"] or "")[:S.MAX_CHUNK_CHARS]}
-             for c in chunks]
-    return pool

@@ -43,19 +43,13 @@ mega-document costs local CPU, not shuffle skew.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from . import sqlexpr as X
 from .. import semantics as S
-from ..specs import PARAMETER_SPECS, query_text
+from ..specs import PARAMETER_SPECS
 
 EMBED_DIM = S.EMBED_DIM
-
-#: 15x64 integer-valued query matrix + per-query norms (crif.py:136).
-_Q = np.stack([S.embed(query_text(sp)) for sp in PARAMETER_SPECS])
-_QN = [float(np.linalg.norm(q)) for q in _Q]
-assert all(qn > 0.0 for qn in _QN), "zero-norm retrieval query vector"
 
 #: retrieval candidates: tables first, then text chunks, contents
 #: truncated to 1500 chars (crif.py:80-121).  `fulltext`/`header` carry
@@ -105,12 +99,15 @@ _CA = (
 def _score_expr(i: int) -> str:
     """Cosine(candidate, query_i) with the oracle's exact float64
     operation order: dot / (qn * cn); 0.0 when the candidate norm is
-    zero (semantics.retrieve_best / embeddings.py:57-71)."""
-    q = _Q[i]
+    zero (semantics.retrieve_best / embeddings.py:57-71).  The query
+    vector (semantics.QUERY_MAT, integer-valued) and its norm become
+    literals."""
+    q = S.QUERY_MAT[i]
     terms = [f"s_{d} * {int(q[d])}L" for d in range(EMBED_DIM) if q[d] != 0.0]
     dot = " + ".join(terms)
+    qn = float(S.QUERY_NORMS[i])
     return (f"(CASE WHEN cn = 0.0d THEN 0.0d "
-            f"ELSE cast({dot} AS double) / ({_QN[i]!r}d * cn) END)")
+            f"ELSE cast({dot} AS double) / ({qn!r}d * cn) END)")
 
 
 def relational_extract_columns(df: DataFrame) -> DataFrame:

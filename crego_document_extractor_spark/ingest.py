@@ -387,6 +387,14 @@ def _page_images(objs: dict[int, bytes],
     return out
 
 
+#: content-stream name, number and operator tokens, matched in place at
+#: the cursor (``pattern.match(content, i)``; none is anchored, so this
+#: is ``re.match`` on the rest of the stream without copying it)
+_PDF_NAME = re.compile(rb"/[^\s\[\]()<>/%]*")
+_PDF_NUM = re.compile(rb"[-+]?(?:\d+\.?\d*|\.\d+)")
+_PDF_OP = re.compile(rb"[A-Za-z'\"*]+[0-9*]*")
+
+
 def _pdf_tokens(content: bytes):
     """(kind, value) token stream over a content stream: kind in
     str/num/name/lbrack/rbrack/op."""
@@ -443,19 +451,19 @@ def _pdf_tokens(content: bytes):
             yield "rbrack", None
             i += 1
         elif ch == b"/":
-            m = re.match(rb"/[^\s\[\]()<>/%]*", content[i:])
+            m = _PDF_NAME.match(content, i)
             yield "name", m.group()
             i += len(m.group())
         elif ch == b"%":
             j = content.find(b"\n", i)
             i = n if j < 0 else j + 1
         else:
-            m = re.match(rb"[-+]?(?:\d+\.?\d*|\.\d+)", content[i:])
+            m = _PDF_NUM.match(content, i)
             if m:
                 yield "num", float(m.group())
                 i += len(m.group())
                 continue
-            m = re.match(rb"[A-Za-z'\"*]+[0-9*]*", content[i:])
+            m = _PDF_OP.match(content, i)
             if m:
                 yield "op", m.group().decode("latin-1")
                 i += len(m.group())

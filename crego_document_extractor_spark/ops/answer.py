@@ -18,10 +18,12 @@ type.  Everything downstream of the answer string — the NOT_FOUND
 sentinel, the int/float/bool coercion rules (crif.py:503-530), the
 0.6 confidence and boost multiply — mirrors the reference exactly.
 
-Off by default like the reference (``ENABLE_RAG=False``): only a
-caller passing ``enabled=True`` runs it.  No entry point or
+Off by default like the reference (``ENABLE_RAG=False``): it runs
+only where a caller calls ``with_rag_fallback``.  No entry point or
 environment variable turns it on, so ``pipeline.run`` returns the
-same rows as every other entry point.
+same rows as every other entry point.  The queries, candidates and
+retrieval are the fused stage's (``semantics.QUERY_MAT``,
+``semantics.candidate_pool``, ``retrieval.retrieve_rows``).
 """
 
 from __future__ import annotations
@@ -34,8 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import semantics as S
-from ..extract.retrieval import candidate_pool, retrieve_rows
-from ..specs import PARAMETER_SPECS, query_text
+from ..extract.retrieval import retrieve_rows
+from ..specs import PARAM_ORDER, PARAMETER_SPECS, SPEC_BY_ID
 
 NOT_FOUND = "NOT_FOUND"
 
@@ -43,9 +45,6 @@ _SENT_SPLIT = re.compile(r"(?<=[.!?])\s+|\n+| \| ")
 _NUM = re.compile(r"-?\d[\d,]*(?:\.\d+)?")
 _BOOL_TRUE = re.compile(r"\b(yes|true|present|exists)\b", re.I)
 _BOOL_FALSE = re.compile(r"\b(no|false|none|absent)\b", re.I)
-
-_SPEC_BY_ID = {s["param_id"]: s for s in PARAMETER_SPECS}
-_QUERY_VECS = {s["param_id"]: S.embed(query_text(s)) for s in PARAMETER_SPECS}
 
 
 def best_sentence(query_vec: np.ndarray, text: str,
@@ -66,9 +65,7 @@ def best_sentence(query_vec: np.ndarray, text: str,
         return None
     best, best_score = None, -2.0
     for s in sentences:
-        v = S.embed(s)
-        denom = float(np.linalg.norm(v) * np.linalg.norm(query_vec))
-        score = float(np.dot(v, query_vec) / denom) if denom else 0.0
+        score = S.cosine(S.embed(s), query_vec)
         if score > best_score:
             best, best_score = s, score
     return best
@@ -78,10 +75,9 @@ def extractive_answer(param_id: str, chunk_text: str) -> str:
     """Deterministic twin of llm.generate for the extraction prompt
     (crif.py:459-476): returns the value string, or NOT_FOUND.  The
     prompt truncates the section to 2000 chars — so do we."""
-    spec = _SPEC_BY_ID[param_id]
-    etype = spec.get("expected_type")
-    sent = best_sentence(_QUERY_VECS[param_id], (chunk_text or "")[:2000],
-                         etype)
+    etype = SPEC_BY_ID[param_id].get("expected_type")
+    sent = best_sentence(S.QUERY_MAT[PARAM_ORDER.index(param_id)],
+                         (chunk_text or "")[:2000], etype)
     if sent is None:
         return NOT_FOUND
     if etype in ("int", "float"):
@@ -134,7 +130,9 @@ def _answer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             content = {("table", t["id"]): t["raw"] for t in tables}
             content.update({("text", c["chunk_idx"]): c["text"]
                             for c in chunks})
-            for r in retrieve_rows(candidate_pool(kind, tables, chunks)):
+            pool = (S.candidate_pool(tables, chunks)
+                    if kind == "crif" else [])
+            for r in retrieve_rows(pool):
                 pid = r["param_id"]
                 if r["score"] is None or pid not in miss:
                     continue
@@ -142,7 +140,7 @@ def _answer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     pid, content.get((r["ctype"], r["ref_idx"])))
                 if ans == NOT_FOUND:
                     continue
-                etype = _SPEC_BY_ID[pid].get("expected_type")
+                etype = SPEC_BY_ID[pid].get("expected_type")
                 num, b, s = coerce(ans, etype)
                 # the retrieval score rides through the answer stage,
                 # so the patch needs no second retrieval
@@ -153,16 +151,16 @@ def _answer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows, columns=_FB_COLUMNS)
 
 
-def with_rag_fallback(results: DataFrame, parsed: DataFrame,
-                      enabled: bool = False) -> DataFrame:
+def with_rag_fallback(results: DataFrame, parsed: DataFrame) -> DataFrame:
     """Patch `results` rows whose programmatic extraction found a
     chunk but NO value (crif.py:190-206 eligibility: best chunk
     exists, value is None) with the deterministic extractive answer:
     value from the chunk's best sentence, confidence
     0.6 × similarity-boost(score), status 'extracted'.  Rows stay
     untouched when the answerer also fails (reference keeps the
-    original failed result) or when ``enabled`` is False (the
-    reference's ENABLE_RAG default, config.py:67).
+    original failed result).  The reference's ENABLE_RAG defaults to
+    False (config.py:67); a caller that wants no fallback does not call
+    this.
 
     Plan shape: the eligible slice is typically tiny (a handful of
     (doc, param) misses), so the full parse's clean spans are joined
@@ -170,8 +168,6 @@ def with_rag_fallback(results: DataFrame, parsed: DataFrame,
     and chunks, retrieves and answers per document (the parse's build
     UDF is pruned from the plan), and the patch is a left join back to
     `results` — broadcastable whenever the miss set is small."""
-    if not enabled:
-        return results
     from ..extract import sqlexpr as X
 
     policy_ids = ", ".join(

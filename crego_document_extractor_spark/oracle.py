@@ -16,7 +16,13 @@ reference's extraction control flow exactly:
 * output shape + overall  — output_formatter.py:12-70 and the API
   variant at main.py:70-78
 
-The Spark engine's JVM-side SQL is implemented independently and must
+Every derived value comes from :mod:`.semantics`, the same functions
+the fused stage calls (the query embeddings and scoring, the candidate
+pool, the report's and a chunk's accounts, the chunk-aware table values,
+the remark flags); this module holds only the reference's control flow,
+source labels, validation and confidence.  That guards the fused stage
+against drift in its own control flow, not in the shared derivations;
+the Spark engine's JVM-side SQL is implemented independently and must
 match this oracle row-for-row (tests/).
 """
 
@@ -25,12 +31,7 @@ from __future__ import annotations
 from typing import Any, Optional
 
 from . import semantics as S
-from .specs import PARAMETER_SPECS, query_text
-
-# Precomputed query embeddings, one per spec (crif.py:136)
-import numpy as _np
-
-_QUERY_MAT = _np.stack([S.embed(query_text(spec)) for spec in PARAMETER_SPECS])
+from .specs import PARAMETER_SPECS
 
 
 def _validate(spec: dict, value: Any) -> bool:
@@ -106,92 +107,53 @@ def parse_document(doc: dict) -> dict:
 
 def _report(parsed: dict) -> dict:
     """parse_crif_report (crif_parser.py:7-25) equivalents."""
-    accounts = []
-    for c in parsed["chunks"]:
-        if not c["header"].startswith("Account Information"):
-            continue
-        a = S.parse_account(c["text"])
-        if a:
-            accounts.append(a)
     return {
-        "accounts": accounts,
+        "accounts": S.report_accounts(parsed["chunks"]),
         "summary": S.account_summary(parsed["tables"]),
         "score": S.bureau_score(parsed["tables"]),
         "inquiries": S.credit_inquiries(parsed["tables"]),
     }
 
 
-def _candidates(parsed: dict) -> list[dict]:
-    """_prepare_document_chunks (crif.py:80-121): tables then chunks,
-    contents truncated to 1500 chars."""
-    cands = []
-    for t in parsed["tables"]:
-        cands.append({"type": "table", "ref": t, "idx": t["id"],
-                      "content": t["raw"][: S.MAX_CHUNK_CHARS]})
-    for c in parsed["chunks"]:
-        cands.append({"type": "text", "ref": c, "idx": c["chunk_idx"],
-                      "content": c["text"][: S.MAX_CHUNK_CHARS]})
-    return cands
+#: each direct parameter's source label (crif.py:223-250)
+_DIRECT_SOURCES = {
+    "bureau_credit_score": "Verification Table",
+    "bureau_written_off_debt_amount": "Account Summary Table",
+    "bureau_max_loans": "Account Summary Table",
+    "bureau_max_active_loans": "Account Summary Table",
+    "bureau_credit_inquiries": "Inquiry Table",
+}
 
 
 def _direct_report_value(spec_id: str, report: dict) -> tuple[Any, str]:
     """crif.py:223-250."""
-    if spec_id == "bureau_credit_score":
-        return report["score"], "Verification Table"
-    if spec_id == "bureau_written_off_debt_amount":
-        return report["summary"]["total_writeoff_amount"], "Account Summary Table"
-    if spec_id == "bureau_max_loans":
-        return int(report["summary"]["total_accounts"]), "Account Summary Table"
-    if spec_id == "bureau_max_active_loans":
-        return int(report["summary"]["active_accounts"]), "Account Summary Table"
-    if spec_id == "bureau_credit_inquiries":
-        return report["inquiries"], "Inquiry Table"
-    return None, "Unknown direct parameter"
+    summary = report["summary"]
+    value = {
+        "bureau_credit_score": report["score"],
+        "bureau_written_off_debt_amount": summary["total_writeoff_amount"],
+        "bureau_max_loans": int(summary["total_accounts"]),
+        "bureau_max_active_loans": int(summary["active_accounts"]),
+        "bureau_credit_inquiries": report["inquiries"],
+    }.get(spec_id)
+    return value, _DIRECT_SOURCES.get(spec_id, "Unknown direct parameter")
 
 
-def _direct_chunk_value(spec_id: str, cand: dict) -> tuple[Any, Optional[str]]:
-    """crif.py:311-359 — chunk-aware attempt (table candidates only)."""
-    if cand["type"] != "table":
-        return None, None
-    t = cand["ref"]
-    src_tail = f"(from Table {t['id'] + 1})"  # crif.py:99 source label
-    if spec_id == "bureau_credit_score":
-        v = S.bureau_score_from_table(t)
-        return v, f"Verification Table {src_tail}" if v is not None else None
-    if spec_id == "bureau_written_off_debt_amount":
-        summ = S.account_summary_from_table(t)
-        if summ:
-            return summ["total_writeoff_amount"], f"Account Summary Table {src_tail}"
-        return None, None
-    if spec_id == "bureau_max_loans":
-        summ = S.account_summary_from_table(t)
-        if summ:
-            return int(summ["total_accounts"]), f"Account Summary Table {src_tail}"
-        return None, None
-    if spec_id == "bureau_max_active_loans":
-        summ = S.account_summary_from_table(t)
-        if summ:
-            return int(summ["active_accounts"]), f"Account Summary Table {src_tail}"
-        return None, None
-    if spec_id == "bureau_credit_inquiries":
-        v = S.credit_inquiries_from_table(t)
-        return v, f"Inquiry Table {src_tail}" if v is not None else None
-    return None, None
-
-
-_FLAG_FNS = {
-    "bureau_suit_filed": S.has_suit_filed,
-    "bureau_wilful_default": S.has_wilful_default,
-    "bureau_settlement_writeoff": S.has_settlement_writeoff,
-}
+def _derived_value(spec_id: str, accounts: list[dict]) -> Any:
+    """crif.py:279-300 — the DPD counts and the live PL/BL check."""
+    for days in (30, 60, 90):
+        if spec_id == f"bureau_dpd_{days}":
+            return sum(1 for a in accounts if a["worst_dpd"] >= days)
+    if spec_id == "bureau_no_live_pl_bl":
+        return not any(S.is_live_pl_bl(a) for a in accounts)
+    return None
 
 
 def extract_crif(parsed: dict) -> list[dict]:
     doc_id = parsed["doc_id"]
     report = _report(parsed)
-    cands = _candidates(parsed)
-    cand_vecs = [S.embed(c["content"]) for c in cands]
-    retrieved = S.retrieve_best(_QUERY_MAT, cand_vecs)
+    tables, chunks = parsed["tables"], parsed["chunks"]
+    cands = S.candidate_pool(tables, chunks)
+    retrieved = S.retrieve_best([S.embed(c["content"]) for c in cands])
     accounts = report["accounts"]
     rows = []
 
@@ -208,10 +170,16 @@ def extract_crif(parsed: dict) -> list[dict]:
                              0.0, "not_found", None))
             continue
         best = cands[best_i]
+        # table ids and chunk indexes are list positions
+        ref = (tables if best["ctype"] == "table" else chunks)[best["ref_idx"]]
 
         if spec["category"] == "direct":
-            value, source = _direct_chunk_value(pid, best)
+            # chunk-aware (crif.py:311-359, table candidates only)
+            value = (S.direct_table_value(pid, ref)
+                     if best["ctype"] == "table" else None)
             if value is not None:
+                # crif.py:99 source label
+                source = f"{_DIRECT_SOURCES[pid]} (from Table {ref['id'] + 1})"
                 conf = _confidence(spec, value, "chunk_aware")
             else:
                 value, source = _direct_report_value(pid, report)
@@ -219,42 +187,22 @@ def extract_crif(parsed: dict) -> list[dict]:
         elif spec["category"] == "flag":
             value = None
             # chunk-aware flags (crif.py:388-422)
-            if best["type"] == "text" and pid in _FLAG_FNS:
-                blocks = best["ref"]["text"].split("Account Number:")[1:]
-                chunk_accounts = [
-                    a for a in
-                    (S.parse_account("Account Number:" + b) for b in blocks)
-                    if a
-                ]
-                if chunk_accounts:
-                    fn = _FLAG_FNS[pid]
-                    matched = sum(1 for a in chunk_accounts if fn(a["remarks"]))
-                    if matched > 0:
-                        value = True
-                        source = (f"Account Remarks ({matched}/"
-                                  f"{len(chunk_accounts)} accounts in chunk)")
-                        conf = _confidence(spec, value, "chunk_aware")
+            if best["ctype"] == "text" and pid in S.FLAG_PREDICATES:
+                in_chunk = S.chunk_accounts(ref["text"])
+                matched = S.count_flagged(pid, in_chunk)
+                if matched > 0:
+                    value = True
+                    source = (f"Account Remarks ({matched}/"
+                              f"{len(in_chunk)} accounts in chunk)")
+                    conf = _confidence(spec, value, "chunk_aware")
             if value is None:
                 # report-level (crif.py:252-277); ntc/unknown → (False, 0)
-                if pid in _FLAG_FNS:
-                    fn = _FLAG_FNS[pid]
-                    matched = sum(1 for a in accounts if fn(a["remarks"]))
-                else:
-                    matched = 0
+                matched = S.count_flagged(pid, accounts)
                 value = matched > 0
                 source = f"Account Remarks ({matched}/{len(accounts)} accounts)"
                 conf = _confidence(spec, value, "embedding_guided")
-        else:  # derived (crif.py:279-300; always report-level per :428-436)
-            if pid == "bureau_dpd_30":
-                value = sum(1 for a in accounts if a["worst_dpd"] >= 30)
-            elif pid == "bureau_dpd_60":
-                value = sum(1 for a in accounts if a["worst_dpd"] >= 60)
-            elif pid == "bureau_dpd_90":
-                value = sum(1 for a in accounts if a["worst_dpd"] >= 90)
-            elif pid == "bureau_no_live_pl_bl":
-                value = not any(S.is_live_pl_bl(a) for a in accounts)
-            else:
-                value = None
+        else:  # derived (always report-level per crif.py:428-436)
+            value = _derived_value(pid, accounts)
             source = f"Computed from {len(accounts)} accounts"
             conf = _confidence(spec, value, "embedding_guided")
 
@@ -291,22 +239,11 @@ def extract_crif_legacy(parsed: dict) -> list[dict]:
         if spec["category"] == "direct":
             value, source = _direct_report_value(pid, report)
         elif spec["category"] == "flag":
-            if pid in _FLAG_FNS:
-                fn = _FLAG_FNS[pid]
-                matched = sum(1 for a in accounts if fn(a["remarks"]))
-            else:
-                matched = 0
+            matched = S.count_flagged(pid, accounts)
             value = matched > 0
             source = f"Account Remarks ({matched}/{len(accounts)} accounts)"
         else:
-            if pid == "bureau_dpd_30":
-                value = sum(1 for a in accounts if a["worst_dpd"] >= 30)
-            elif pid == "bureau_dpd_60":
-                value = sum(1 for a in accounts if a["worst_dpd"] >= 60)
-            elif pid == "bureau_dpd_90":
-                value = sum(1 for a in accounts if a["worst_dpd"] >= 90)
-            else:
-                value = not any(S.is_live_pl_bl(a) for a in accounts)
+            value = _derived_value(pid, accounts)
             source = f"Computed from {len(accounts)} accounts"
         w = _LEGACY_WEIGHTS[spec["category"]]
         conf = w if (value is not None and _validate(spec, value)) else 0.0

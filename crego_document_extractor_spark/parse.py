@@ -8,7 +8,10 @@
 * ``tables``       ordered table structs, id=enumerate (parser.py:90-106)
 * ``chunks``       header-segmented chunks (parser.py:107-124)
 
-Two physical forms share the :mod:`..semantics` definitions:
+Two physical forms share the :mod:`..semantics` definitions.  This
+module adds no derivation of its own (span cleaning, tables, chunks,
+report values, accounts, retrieval candidates and chunk-aware values
+all live there), only their Spark plumbing:
 
 * ``parse_documents(docs)``: JVM clean spans (``_clean_spans_sql``)
   plus one scalar ``pandas_udf`` (``_build``) that builds text, tables
@@ -30,7 +33,8 @@ from pyspark.sql import types as T
 
 from . import semantics as S
 from .extract.crif import _SUMMARY_FIELDS
-from .extract.retrieval import candidate_pool, retrieve_rows
+from .extract.retrieval import retrieve_rows
+from .extract.sqlexpr import WS
 from .specs import PARAMETER_SPECS
 
 SPAN_TYPE = T.StructType([
@@ -94,15 +98,6 @@ def _span_dicts(spans) -> list[dict]:
             for s in spans]
 
 
-#: chunk-aware flag parameters (crif_models.py:52-60 predicates — the
-#: same three the SQL engine's X.FLAG_PREDS encodes)
-_FLAG_FNS = {
-    "bureau_suit_filed": S.has_suit_filed,
-    "bureau_wilful_default": S.has_wilful_default,
-    "bureau_settlement_writeoff": S.has_settlement_writeoff,
-}
-
-
 def _fused_fields() -> list[T.StructField]:
     """The fused stage's output format, declared once and in column
     order: the Spark schema of ``parse_documents(docs,
@@ -120,14 +115,14 @@ def _fused_fields() -> list[T.StructField]:
              for f in _SUMMARY_FIELDS]
     cols += [("n_accounts", i32), ("rep_dpd30", i32), ("rep_dpd60", i32),
              ("rep_dpd90", i32), ("rep_live_plbl", b)]
-    cols += [(f"rep_m_{pid}", i32) for pid in _FLAG_FNS]
+    cols += [(f"rep_m_{pid}", i32) for pid in S.FLAG_PREDICATES]
     for i, spec in enumerate(PARAMETER_SPECS):
         if spec["category"] == "policy":
             continue
         cols.append((f"bscore_{i}", f64))
         if spec["category"] == "direct":
             cols += [(f"cv_{i}", f64), (f"bt_id_{i}", i32)]
-        elif spec["param_id"] in _FLAG_FNS:
+        elif spec["param_id"] in S.FLAG_PREDICATES:
             cols += [(f"nc_{i}", i32), (f"mc_{i}", i32)]
     cols += [("g_month", s), ("g_found", b), ("g_page", i32),
              ("g_sales", f64)]
@@ -135,27 +130,6 @@ def _fused_fields() -> list[T.StructField]:
 
 
 FUSED_SCHEMA = T.StructType(_fused_fields())
-
-
-def _direct_cv(pid: str, t: dict):
-    """Chunk-aware direct value from the winning TABLE candidate
-    (crif.py:311-359) — the Python twin of crif._direct_chunk_value's
-    SQL forms, built from the same semantics extractors the oracle
-    uses, so fused-vs-oracle parity is by shared definition."""
-    if pid == "bureau_credit_score":
-        return S.bureau_score_from_table(t)
-    if pid == "bureau_written_off_debt_amount":
-        s = S.account_summary_from_table(t)
-        return s["total_writeoff_amount"] if s else None
-    if pid == "bureau_max_loans":
-        s = S.account_summary_from_table(t)
-        return int(s["total_accounts"]) if s else None
-    if pid == "bureau_max_active_loans":
-        s = S.account_summary_from_table(t)
-        return int(s["active_accounts"]) if s else None
-    if pid == "bureau_credit_inquiries":
-        return S.credit_inquiries_from_table(t)
-    raise KeyError(pid)
 
 
 def _fused_row(doc_id: str, spans) -> dict:
@@ -177,23 +151,19 @@ def _fused_row(doc_id: str, spans) -> dict:
            "rep_score": S.bureau_score(tables),
            "rep_inquiries": S.credit_inquiries(tables),
            **{f"rep_sum_{f}": summary[f] for f in _SUMMARY_FIELDS}}
-    # ACCOUNT aggregates (parse_crif_report, crif_parser.py:7-25): one
-    # Account-Information chunk = one account; parse_account returns
-    # None on an empty Account Type — the validity the SQL path
-    # filters on
-    accts = [a for c in chunks
-             if c["header"].startswith("Account Information")
-             for a in (S.parse_account(c["text"]),) if a]
+    # report-level account aggregates (crif_models.py:47-88)
+    accts = S.report_accounts(chunks)
     row.update(n_accounts=len(accts),
                rep_dpd30=sum(a["worst_dpd"] >= 30 for a in accts),
                rep_dpd60=sum(a["worst_dpd"] >= 60 for a in accts),
                rep_dpd90=sum(a["worst_dpd"] >= 90 for a in accts),
                rep_live_plbl=any(S.is_live_pl_bl(a) for a in accts))
-    for pid, fn in _FLAG_FNS.items():
-        row[f"rep_m_{pid}"] = sum(fn(a["remarks"]) for a in accts)
+    for pid in S.FLAG_PREDICATES:
+        row[f"rep_m_{pid}"] = S.count_flagged(pid, accts)
     # per-parameter scalars (crif.py:311-426 chunk-aware paths) from
     # the winning candidate
-    retr = retrieve_rows(candidate_pool(kind, tables, chunks))
+    retr = retrieve_rows(S.candidate_pool(tables, chunks)
+                         if kind == "crif" else [])
     tab_by_id = {t["id"]: t for t in tables}
     chunk_by_idx = {c["chunk_idx"]: c for c in chunks}
     for i, spec in enumerate(PARAMETER_SPECS):
@@ -206,21 +176,15 @@ def _fused_row(doc_id: str, spans) -> dict:
         if cat == "direct":
             t = (tab_by_id.get(r["ref_idx"])
                  if won and r["ctype"] == "table" else None)
-            cv = None if t is None else _direct_cv(pid, t)
+            cv = None if t is None else S.direct_table_value(pid, t)
             row[f"cv_{i}"] = None if cv is None else float(cv)
             row[f"bt_id_{i}"] = None if t is None else t["id"]
-        elif pid in _FLAG_FNS:
+        elif pid in S.FLAG_PREDICATES:
             c = (chunk_by_idx.get(r["ref_idx"])
                  if won and r["ctype"] == "text" else None)
-            # crif.py:395-401 sub-block split
-            blocks = ([] if c is None
-                      else c["text"].split("Account Number:")[1:])
-            chunk_accts = [a for b in blocks
-                           for a in (S.parse_account("Account Number:" + b),)
-                           if a]
+            chunk_accts = [] if c is None else S.chunk_accounts(c["text"])
             row[f"nc_{i}"] = len(chunk_accts)
-            row[f"mc_{i}"] = sum(1 for a in chunk_accts
-                                 if _FLAG_FNS[pid](a["remarks"]))
+            row[f"mc_{i}"] = S.count_flagged(pid, chunk_accts)
     # GSTR primitives (gstr.with_gstr_columns), read only for gstr docs
     # (crif.extract_all); gstr_month is the rendered text's only reader
     gstr = kind == "gstr"
@@ -260,13 +224,6 @@ def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 # semantics.clean_spans line by line; tests/test_jvm_parse and the
 # scripts/smoke.py span diff pin the full parse against the oracle.
 
-#: Java-regex char class of exactly CPython's str whitespace set
-#: (Py_UNICODE_ISSPACE) — `str.split()` / `str.strip()` parity needs
-#: the full set, not regex \s (which lacks \xa0 etc.)
-_PY_WS_CLASS = "[" + "".join(
-    f"\\\\u{o:04x}" for o in range(0x10000) if chr(o).isspace()) + "]"
-
-
 def _clean_spans_sql() -> str:
     """semantics.clean_spans: stable sort by offset, drop boilerplate
     (kind stoplist + link-density, semantics.is_boilerplate), re-densify
@@ -274,7 +231,7 @@ def _clean_spans_sql() -> str:
     tagging each span with its original index before the comparator
     sort (Python `sorted` is stable)."""
     links = "((length(s.text) - length(replace(s.text, ']('))) div 2)"
-    words = (f"size(filter(split(s.text, '{_PY_WS_CLASS}+'), "
+    words = (f"size(filter(split(s.text, '{WS}+'), "
              f"w -> w != ''))")
     boiler = (f"(s.kind IN ('nav', 'footer', 'ad') OR "
               f"(s.kind = 'text' AND {links} >= 2 AND "

@@ -1,12 +1,21 @@
 """Shared pure-Python semantic core.
 
-Single source of truth for every piece of reference behavior that runs
-Python-side (the fused extraction stage, the relational engine's Arrow
-build of text/tables/chunks, the RAG fallback's answer stage, and the
-test oracle).  The JVM-side Spark SQL re-implementations in
-``extract/`` are written *independently* and unit-tested against these
-functions, so span/parameter equality between Spark and the oracle is a
-meaningful check, not a tautology.
+The one Python definition of every piece of reference behavior that
+runs Python-side: span cleaning, rendering, tables and chunks; the
+account and table-signature parsers; the CRIF derivations (the query
+embeddings ``QUERY_MAT``, the retrieval ``candidate_pool`` and
+``retrieve_best``, the report's ``report_accounts``, a chunk's
+``chunk_accounts``, the chunk-aware ``direct_table_value`` and the
+remark flags ``FLAG_PREDICATES``/``count_flagged``); and the GSTR
+values.  Its callers are the fused extraction stage
+(``parse._fused_row``), the full parse's build UDF (``parse._build``),
+the retrieval rows (``extract/retrieval.py``), the RAG fallback's
+answer stage (``ops/answer.py``) and the test oracle (``oracle.py``),
+which adds only the reference's control flow, labels and confidence
+on top.  The JVM-side Spark SQL re-implementations in ``extract/``
+are written *independently* and tested against these functions, so
+span/parameter equality between Spark and the oracle is a meaningful
+check, not a tautology.
 
 Every function cites the reference lines (file:line under
 /root/reference) whose semantics it mirrors.  No code is copied from
@@ -23,6 +32,8 @@ from collections import Counter
 from typing import Any, Optional
 
 import numpy as np
+
+from .specs import PARAMETER_SPECS, query_text
 
 # ---------------------------------------------------------------------------
 # Boilerplate stripping (north_star: tag-class stoplist + link-density)
@@ -322,6 +333,39 @@ def is_live_pl_bl(account: dict) -> bool:
     return "personal loan" in t or "business loan" in t
 
 
+#: the flag parameters read from account remarks, with their predicate
+#: (crif_models.py:52-60; bureau_ntc_accepted has none) — the same three
+#: the SQL engine's sqlexpr.FLAG_PREDS encodes
+FLAG_PREDICATES = {
+    "bureau_suit_filed": has_suit_filed,
+    "bureau_wilful_default": has_wilful_default,
+    "bureau_settlement_writeoff": has_settlement_writeoff,
+}
+
+
+def count_flagged(param_id: str, accounts: list[dict]) -> int:
+    """crif.py:252-277 and 388-422 — the accounts whose remarks carry
+    the parameter's flag; 0 for a flag without a remark predicate."""
+    pred = FLAG_PREDICATES.get(param_id)
+    return sum(1 for a in accounts if pred(a["remarks"])) if pred else 0
+
+
+def report_accounts(chunks: list[dict]) -> list[dict]:
+    """parse_crif_report (crif_parser.py:7-25): one account per
+    'Account Information' chunk; a block whose Account Type is empty is
+    no account (parse_account returns None)."""
+    return [a for c in chunks
+            if c["header"].startswith("Account Information")
+            for a in (parse_account(c["text"]),) if a]
+
+
+def chunk_accounts(text: str) -> list[dict]:
+    """crif.py:395-401 — the accounts inside one text chunk: every
+    'Account Number:' opens a sub-block, parsed with its label."""
+    return [a for b in text.split("Account Number:")[1:]
+            for a in (parse_account("Account Number:" + b),) if a]
+
+
 # ---------------------------------------------------------------------------
 # Table-signature extractors (crif_parser.py:28-127)
 # ---------------------------------------------------------------------------
@@ -395,6 +439,27 @@ def credit_inquiries_from_table(table: dict) -> Optional[int]:
             if val:
                 return int(clean_number(val))
     return None
+
+
+#: the account-summary field of each direct parameter read from an
+#: account-summary table (crif.py:311-359)
+_SUMMARY_PARAMS = {
+    "bureau_written_off_debt_amount": "total_writeoff_amount",
+    "bureau_max_loans": "total_accounts",
+    "bureau_max_active_loans": "active_accounts",
+}
+
+
+def direct_table_value(param_id: str, table: dict) -> Any:
+    """crif.py:311-359 — a direct parameter's chunk-aware value from the
+    winning table candidate, or None when the table lacks its
+    signature."""
+    if param_id == "bureau_credit_score":
+        return bureau_score_from_table(table)
+    if param_id == "bureau_credit_inquiries":
+        return credit_inquiries_from_table(table)
+    summary = account_summary_from_table(table)
+    return summary[_SUMMARY_PARAMS[param_id]] if summary else None
 
 
 # first-match-over-tables fallbacks (crif_parser.py:49-63, 89-97, 119-127)
@@ -560,6 +625,13 @@ def embed(text: str) -> np.ndarray:
     return vec
 
 
+#: one query embedding per parameter, in spec order (crif.py:136), and
+#: their norms: every retrieval form's queries (retrieve_best, the
+#: relational engine's score literals, the RAG answerer)
+QUERY_MAT = np.stack([embed(query_text(spec)) for spec in PARAMETER_SPECS])
+QUERY_NORMS = np.linalg.norm(QUERY_MAT, axis=1)
+
+
 def cosine(v1: np.ndarray, v2: np.ndarray) -> float:
     """embeddings.py:57-71 — 0.0 when either norm is zero."""
     n1 = float(np.linalg.norm(v1))
@@ -579,33 +651,41 @@ def cosine(v1: np.ndarray, v2: np.ndarray) -> float:
 SIMILARITY_THRESHOLD = 0.15
 
 
-def retrieve_best(query_mat: np.ndarray,
-                  cand_vecs: list[np.ndarray],
-                  query_norms: np.ndarray | None = None,
-                  ) -> list[tuple[Optional[int], float]]:
-    """Stable-argmax + threshold for a whole query matrix (p×d): the
-    observable effect of embeddings.py:73-136 (score all, stable sort
-    desc, top-3, filter >= SIMILARITY_THRESHOLD, take [0]); returns
-    one (candidate_index | None, best_score) per query.  Shared
-    verbatim by the oracle and by extract.retrieval.retrieve_rows (the
-    fused stage's and the RAG fallback's retrieval), so all compute
-    bit-identical scores.  np.argmax keeps the FIRST maximum, matching
-    the reference's stable sort (embeddings.py:85).
+MAX_CHUNK_CHARS = 1500  # crif.py:86
 
-    ``query_norms`` optionally passes the precomputed
-    ``np.linalg.norm(query_mat, axis=1)`` — the fused parse stage calls
-    this once per document with the SAME constant query matrix, so
-    recomputing its norms per document was pure overhead (r6)."""
-    p = query_mat.shape[0]
+
+def candidate_pool(tables: list[dict], chunks: list[dict]) -> list[dict]:
+    """_prepare_document_chunks (crif.py:80-121): a CRIF document's
+    retrieval candidates, tables then text chunks, contents truncated
+    to MAX_CHUNK_CHARS; each ``{ctype, ref_idx, content}``, the shape of
+    retrieval.CANDIDATES_EXPR."""
+    pool = [{"ctype": "table", "ref_idx": t["id"],
+             "content": (t["raw"] or "")[:MAX_CHUNK_CHARS]}
+            for t in tables]
+    pool += [{"ctype": "text", "ref_idx": c["chunk_idx"],
+              "content": (c["text"] or "")[:MAX_CHUNK_CHARS]}
+             for c in chunks]
+    return pool
+
+
+def retrieve_best(cand_vecs: list[np.ndarray]
+                  ) -> list[tuple[Optional[int], float]]:
+    """Stable-argmax + threshold of every query in QUERY_MAT over the
+    candidate vectors: the observable effect of embeddings.py:73-136
+    (score all, stable sort desc, top-3, filter >= SIMILARITY_THRESHOLD,
+    take [0]); returns one (candidate_index | None, best_score) per
+    parameter.  The oracle and extract.retrieval.retrieve_rows (the
+    fused stage's and the RAG fallback's retrieval) both call it, so
+    all compute bit-identical scores.  np.argmax keeps the FIRST
+    maximum, matching the reference's stable sort (embeddings.py:85)."""
+    p = QUERY_MAT.shape[0]
     if not cand_vecs:
         return [(None, 0.0)] * p
     m = np.stack(cand_vecs)  # n×d
-    qn = (np.linalg.norm(query_mat, axis=1)
-          if query_norms is None else query_norms)
     cn = np.linalg.norm(m, axis=1)
-    denom = qn[:, None] * cn[None, :]
+    denom = QUERY_NORMS[:, None] * cn[None, :]
     with np.errstate(divide="ignore", invalid="ignore"):
-        sims = np.where(denom == 0.0, 0.0, (query_mat @ m.T) / denom)
+        sims = np.where(denom == 0.0, 0.0, (QUERY_MAT @ m.T) / denom)
     # row-wise first-maximum + threshold, fully vectorized (the former
     # per-parameter Python loop with one np.argmax call per row was
     # ~0.2 s per 2000 docs); np.argmax(axis=1) keeps the FIRST max per
@@ -646,6 +726,3 @@ def similarity_boost(score: float) -> float:
     if score >= 0.50:
         return 0.7
     return 0.5
-
-
-MAX_CHUNK_CHARS = 1500  # crif.py:86

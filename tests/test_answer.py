@@ -62,7 +62,7 @@ def test_with_rag_fallback_patches_miss(spark, miss_docs):
     assert target["value_num"] is None  # programmatic miss (no table)
     assert target["status"] == "extracted"  # but a chunk WAS retrieved
 
-    patched = A.with_rag_fallback(results, parsed, enabled=True)
+    patched = A.with_rag_fallback(results, parsed)
     got = {r["param_id"]: r for r in patched.collect()}
     row = got["bureau_credit_score"]
     assert row["value_num"] == 742.0
@@ -75,10 +75,3 @@ def test_with_rag_fallback_patches_miss(spark, miss_docs):
     for pid, r in got.items():
         if pid != "bureau_credit_score":
             assert tuple(r) == tuple(base[pid]), pid
-
-
-def test_rag_fallback_flag_off_is_identity(spark, miss_docs):
-    parsed = parse_documents(miss_docs)
-    results = pipeline.extract_from_raw(miss_docs)
-    out = A.with_rag_fallback(results, parsed, enabled=False)
-    assert out is results

@@ -142,3 +142,20 @@ def test_jvm_parse_partition_invariant(spark, n_parts):
     _assert_equal({r["doc_id"]: r
                    for r in parse.parse_documents(sdf).collect()},
                   _py_rows(docs))
+
+
+def test_ws_class_is_python_whitespace(spark):
+    """``sqlexpr.WS``, the Java-regex class the SQL forms of Python's
+    ``str.split()``/``strip()`` use, matches exactly the code points
+    CPython's ``str.isspace()`` does, over the whole BMP (a lone
+    surrogate reaches the JVM as '?')."""
+    from crego_document_extractor_spark.extract.sqlexpr import WS
+
+    rows = spark.range(0x10000).selectExpr(
+        "cast(id AS int) AS c",
+        "format_string('%c', cast(id AS int)) AS ch",
+    ).selectExpr("c", "ch", f"ch rlike '^' || '{WS}' || '$' AS ws").collect()
+    assert len(rows) == 0x10000
+    for c, ch, ws in rows:
+        assert ch == ("?" if 0xD800 <= c <= 0xDFFF else chr(c)), c
+        assert ws == chr(c).isspace(), c

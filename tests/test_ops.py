@@ -630,10 +630,20 @@ def test_duplicate_ngram_report(spark):
         ("d2", shared + " tail beta"),
         ("d3", "five six seven eight nine"),
         ("d4", "shorty"),                        # < n tokens: no grams, no crash
+        # one doc_id on two rows: counts pool over its rows, and each
+        # row's grams count as one document in the census
+        ("d5", "red green blue yellow"),
+        ("d5", "red green blue yellow black"),
     ]
-    out = {r["doc_id"]: r for r in duplicate_ngram_report(
+    got = duplicate_ngram_report(
         spark.createDataFrame(rows, ["doc_id", "text"]),
-        n=4, min_docs=2).collect()}
+        n=4, min_docs=2).collect()
+    assert len(got) == len(rows)
+    # d5: 1 + 2 grams; "red green blue yellow" is in both rows, so it is
+    # duplicated, and counted once per row
+    assert [(r["n_grams"], r["n_dup_grams"], r["dup_ratio"])
+            for r in got if r["doc_id"] == "d5"] == [(3, 2, 2 / 3)] * 2
+    out = {r["doc_id"]: r for r in got}
     # d1/d2 share TWO 4-grams: "one two three four", "two three four tail"
     assert out["d1"]["n_grams"] == 3 and out["d1"]["n_dup_grams"] == 2
     assert out["d2"]["n_dup_grams"] == 2

@@ -163,7 +163,7 @@ def test_run_plan_ignores_engine_env(spark, raw_docs, monkeypatch):
 
 
 def test_run_plan_ignores_rag_env(spark, raw_docs, monkeypatch):
-    """The RAG fallback is off unless a caller passes enabled=True: with
+    """The RAG fallback runs only where a caller calls it: with
     SPARK_GRAFT_ENABLE_RAG=1 set, pipeline.run still ships the fused
     plan (no fallback groupBy, join or second MapInPandas)."""
     monkeypatch.setenv("SPARK_GRAFT_ENABLE_RAG", "1")
@@ -250,7 +250,7 @@ def test_rag_fallback_plan_has_no_arrow_udf(spark, raw_docs):
     docs = spark.createDataFrame(
         [(d["doc_id"], d["spans"]) for d in raw_docs[:40]], DOCUMENTS_SCHEMA)
     out = with_rag_fallback(pipeline.extract_from_raw(docs),
-                            pipeline.parse_documents(docs), enabled=True)
+                            pipeline.parse_documents(docs))
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan, plan
