@@ -1383,14 +1383,10 @@ def _q_a9b_engine_agreement(spark, sf):
 
 
 def _a9b_expected_rows() -> int:
-    from crego_document_extractor_spark import corpus
-    n = 0
-    for d in corpus.gen_documents(60, seed=11):
-        if d["doc_id"].startswith("crif-"):
-            n += 15
-        elif d["doc_id"].startswith("gstr-"):
-            n += 2
-    return n
+    from crego_document_extractor_spark import corpus, semantics
+    rows = {"crif": 15, "gstr": 2}
+    return sum(rows.get(semantics.doc_kind(d["doc_id"]), 0)
+               for d in corpus.gen_documents(60, seed=11))
 
 
 def _q_token_stats(spark, sf):
@@ -1560,7 +1556,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # --- DuckDB twins for the inline nested-table queries -----------------------
 
 def _duck_hash16(tok: str) -> str:
-    """DuckDB twin of ops/textstats._tok_hash16 (first 16 md5 bits as
+    """DuckDB twin of ops/textstats.tok_hash16 (first 16 md5 bits as
     an int via ascii() arithmetic)."""
     return "(" + " + ".join(
         f"(ascii(substr(md5({tok}), {i}, 1)) - "

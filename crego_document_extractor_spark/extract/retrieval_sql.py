@@ -51,6 +51,12 @@ from ..specs import PARAMETER_SPECS
 
 EMBED_DIM = S.EMBED_DIM
 
+#: SQL: the embedding tokens of string expression ``{s}`` — the twin of
+#: ``semantics.embed``'s ``re.findall('[a-z0-9]+', s.lower())``: a split
+#: on the complement, whose empty pieces contribute sign 0 (pinned over
+#: the BMP by tests/test_jvm_parse.py::test_retrieval_split_is_embed_tokens)
+TOKENS = "split(lower({s}), '[^a-z0-9]+')"
+
 #: retrieval candidates: tables first, then text chunks, contents
 #: truncated to 1500 chars (crif.py:80-121).  `fulltext`/`header` carry
 #: the untruncated chunk for the chunk-aware flag path and the account
@@ -196,10 +202,8 @@ def relational_extract_columns(df: DataFrame) -> DataFrame:
     sel += [F.col(f"{c}__n").alias(c) for c in prim_carry]
     sel += [F.col(n) for n in unit_cols]
     sel += [F.col(c) for c in acct_cols]
-    # Python tokenization parity: re.findall('[a-z0-9]+', s.lower()) ==
-    # split on the complement, empty pieces contributing sign 0.
     sel.append(F.explode_outer(
-        F.expr("split(lower(u.content), '[^a-z0-9]+')")).alias("tok"))
+        F.expr(TOKENS.format(s="u.content"))).alias("tok"))
     tk = ex.select(*sel)
     tk = (tk.withColumn("h", F.expr(
               "CASE WHEN tok IS NOT NULL AND tok != '' "

@@ -310,25 +310,35 @@ def _parse_cmap(text: bytes) -> tuple[int, dict[int, str]]:
     return codelen, mapping
 
 
+def _page_resources(objs: dict[int, bytes], page_body: bytes,
+                    key: bytes) -> list[tuple[bytes, int]]:
+    """(name, object number) of each entry in the `key` dictionary
+    (``Font`` or ``XObject``) of a page's /Resources, inline or by
+    reference."""
+    res = page_body
+    m = re.search(rb"/Resources\s+(\d+)\s+0\s+R", page_body)
+    if m and int(m.group(1)) in objs:
+        res = objs[int(m.group(1))]
+    dm = re.search(rb"/" + key + rb"\s*(?:<<(.*?)>>|(\d+)\s+0\s+R)", res,
+                   re.S)
+    if not dm:
+        return []
+    d = dm.group(1)
+    if d is None:
+        d = objs.get(int(dm.group(2)), b"")
+    return [(name, int(ref)) for name, ref in
+            re.findall(rb"/([^\s/<>\[\]()]+)\s+(\d+)\s+0\s+R", d)]
+
+
 def _page_fonts(objs: dict[int, bytes],
                 page_body: bytes) -> dict[bytes, tuple[int, dict]]:
     """Font-name → parsed ToUnicode CMap for a page's /Resources (CID
     fonts show glyph IDs in the content stream; the CMap recovers
     text).  Fonts without a ToUnicode stream fall back to latin-1."""
-    res = page_body
-    m = re.search(rb"/Resources\s+(\d+)\s+0\s+R", page_body)
-    if m and int(m.group(1)) in objs:
-        res = objs[int(m.group(1))]
     fonts: dict[bytes, tuple[int, dict]] = {}
-    fm = re.search(rb"/Font\s*(?:<<(.*?)>>|(\d+)\s+0\s+R)", res, re.S)
-    if not fm:
-        return fonts
-    fdict = fm.group(1)
-    if fdict is None:
-        fdict = objs.get(int(fm.group(2)), b"")
-    for name, ref in re.findall(rb"/([^\s/<>\[\]()]+)\s+(\d+)\s+0\s+R", fdict):
+    for name, ref in _page_resources(objs, page_body, b"Font"):
         tm = re.search(rb"/ToUnicode\s+(\d+)\s+0\s+R",
-                       objs.get(int(ref), b""))
+                       objs.get(ref, b""))
         if tm:
             stream = _obj_stream(objs.get(int(tm.group(1)), b""), objs)
             if stream:
@@ -370,21 +380,9 @@ def _page_images(objs: dict[int, bytes],
     """XObject name → object number for the page's IMAGE XObjects —
     a `Do` on one of these emits a media span (north_star: interleaved
     text + media documents)."""
-    res = page_body
-    m = re.search(rb"/Resources\s+(\d+)\s+0\s+R", page_body)
-    if m and int(m.group(1)) in objs:
-        res = objs[int(m.group(1))]
-    out: dict[bytes, int] = {}
-    xm = re.search(rb"/XObject\s*(?:<<(.*?)>>|(\d+)\s+0\s+R)", res, re.S)
-    if not xm:
-        return out
-    xdict = xm.group(1)
-    if xdict is None:
-        xdict = objs.get(int(xm.group(2)), b"")
-    for name, ref in re.findall(rb"/([^\s/<>\[\]()]+)\s+(\d+)\s+0\s+R", xdict):
-        if re.search(rb"/Subtype\s*/Image\b", objs.get(int(ref), b"")):
-            out[b"/" + name] = int(ref)
-    return out
+    return {b"/" + name: ref
+            for name, ref in _page_resources(objs, page_body, b"XObject")
+            if re.search(rb"/Subtype\s*/Image\b", objs.get(ref, b""))}
 
 
 #: content-stream name, number and operator tokens, matched in place at

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .textstats import doc_lines, tok_hash16, word_ngrams
+
 #: patterns valid AND equivalent in Java regex and RE2 — no
 #: backreferences, no lookaround, ASCII \b
 EMAIL_PAT = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -73,13 +75,6 @@ def mix_by_source(df: DataFrame, weights: dict, budget: int,
             .where(F.col("mix_rank") <= quota))
 
 
-def _doc_lines(text_col: str) -> str:
-    """SQL: trimmed non-blank lines of `text_col` (same normalization
-    as textstats.with_repetition_stats)."""
-    return (f"filter(transform(split({text_col}, '\\n'), l -> trim(l)), "
-            f"l -> l != '')")
-
-
 def boilerplate_lines(df: DataFrame, min_docs: int = 10,
                       text_col: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
@@ -89,7 +84,7 @@ def boilerplate_lines(df: DataFrame, min_docs: int = 10,
     array_distinct'd BEFORE the explode, so n_docs is a plain count(*)
     (map-side combinable) rather than a count-distinct expand."""
     return (df.select(F.explode(
-                F.expr(f"array_distinct({_doc_lines(text_col)})"))
+                F.expr(f"array_distinct({doc_lines(text_col)})"))
                 .alias("line"))
             .groupBy("line")
             .agg(F.count("*").alias("n_docs"))
@@ -118,30 +113,13 @@ def remove_boilerplate_lines(df: DataFrame, min_docs: int = 10,
     # text was re-split four times per row and the census membership
     # filter ran twice
     return (df.crossJoin(F.broadcast(census))
-            .withColumn("_lines", F.expr(_doc_lines(text_col)))
+            .withColumn("_lines", F.expr(doc_lines(text_col)))
             .withColumn("_kept", F.expr(
                 "filter(_lines, l -> NOT array_contains(_bl, l))"))
             .withColumn("n_removed_lines",
                         F.expr("size(_lines) - size(_kept)"))
             .withColumn(text_col, F.expr("array_join(_kept, '\\n')"))
             .drop("_bl", "_lines", "_kept"))
-
-
-def _word_ngrams(text_col: str, n: int) -> str:
-    """SQL: distinct lowercase word n-grams of `text_col`.  The token
-    array binds once (r6): spliced into the transform lambda, the
-    text was re-split per gram position."""
-    from .textstats import _bind
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
-    # CASE guard: sequence(1, 0) is DESCENDING [1, 0] in Spark — the
-    # un-guarded form crashes on docs with < n tokens (slice start 0)
-    return _bind(
-        toks, "tk",
-        f"CASE WHEN size(tk) >= {n} THEN "
-        f"array_distinct(transform("
-        f"sequence(1, size(tk) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(tk, i, {n})))) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END")
 
 
 def contamination_report(df: DataFrame, eval_df: DataFrame, n: int = 8,
@@ -159,13 +137,12 @@ def contamination_report(df: DataFrame, eval_df: DataFrame, n: int = 8,
     standard n-gram overlap decontamination used ahead of LLM
     training runs (the reference has no equivalent; cited op class:
     SURVEY.md §2.9 pipeline extensions)."""
+    distinct_grams = f"array_distinct({word_ngrams(text_col, n)})"
     evals = (eval_df
-             .select(F.explode(F.expr(_word_ngrams(text_col, n)))
-                     .alias("gram"))
+             .select(F.explode(F.expr(distinct_grams)).alias("gram"))
              .distinct())
     grams = df.select(F.col(id_col).alias("doc_id"),
-                      F.explode(F.expr(_word_ngrams(text_col, n)))
-                      .alias("gram"))
+                      F.explode(F.expr(distinct_grams)).alias("gram"))
     return (grams.join(F.broadcast(evals), "gram")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_contam_grams"),
@@ -183,13 +160,6 @@ def drop_contaminated(df: DataFrame, eval_df: DataFrame, n: int = 8,
                    id_col, "left_anti")
 
 
-#: hex-nibble numeric value, portable across Spark SQL and DuckDB
-#: (ascii() arithmetic — no engine-specific conv()/from_hex)
-def _hexval(ch: str) -> str:
-    return (f"(ascii({ch}) - CASE WHEN {ch} BETWEEN '0' AND '9' "
-            f"THEN 48 ELSE 87 END)")
-
-
 def epoch_shard(df: DataFrame, n_shards: int = 16, seed: int = 0,
                 id_col: str = "doc_id") -> DataFrame:
     """Deterministic training-epoch shuffle + shard assignment.
@@ -197,17 +167,14 @@ def epoch_shard(df: DataFrame, n_shards: int = 16, seed: int = 0,
     ``shuffle_key`` = md5(seed ‖ id): a content-independent uniform
     hex string whose LEXICOGRAPHIC order is the epoch's global
     shuffle order (portable — no engine-specific hash).  ``shard`` =
-    first-16-bits-of-md5 mod n_shards, built from ascii() arithmetic
-    so Spark and an oracle compute the identical value.  Narrow
-    projection — the assignment itself needs NO shuffle; writers
-    repartition by ``shard`` to land one file set per shard."""
-    key = f"md5(concat('{seed}:', cast({id_col} AS string)))"
-    v = (f"({_hexval(f'substring({key}, 1, 1)')} * 4096 + "
-         f"{_hexval(f'substring({key}, 2, 1)')} * 256 + "
-         f"{_hexval(f'substring({key}, 3, 1)')} * 16 + "
-         f"{_hexval(f'substring({key}, 4, 1)')})")
-    return (df.withColumn("shuffle_key", F.expr(key))
-            .withColumn("shard", F.expr(f"{v} % {n_shards}")))
+    first-16-bits-of-md5 mod n_shards (`textstats.tok_hash16`: ascii()
+    arithmetic, so Spark and an oracle compute the identical value).
+    Narrow projection — the assignment itself needs NO shuffle;
+    writers repartition by ``shard`` to land one file set per shard."""
+    salted = f"concat('{seed}:', cast({id_col} AS string))"
+    return (df.withColumn("shuffle_key", F.expr(f"md5({salted})"))
+            .withColumn("shard",
+                        F.expr(f"{tok_hash16(salted)} % {n_shards}")))
 
 
 def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -255,9 +222,8 @@ def duplicate_ngram_report(df: DataFrame, n: int = 8, min_docs: int = 2,
     pooled per `doc_id` and joined back to every input row, so that
     claim assumes unique `doc_id`s: rows sharing one all get the
     pooled counts."""
-    grams = df.select(F.col(id_col).alias("doc_id"),
-                      F.explode(F.expr(_word_ngrams(text_col, n)))
-                      .alias("gram"))
+    grams = df.select(F.col(id_col).alias("doc_id"), F.explode(F.expr(
+        f"array_distinct({word_ngrams(text_col, n)})")).alias("gram"))
     census = (grams.groupBy("gram")
               .agg(F.count("*").alias("_nd"))
               .where(F.col("_nd") >= min_docs)
@@ -274,21 +240,6 @@ def duplicate_ngram_report(df: DataFrame, n: int = 8, min_docs: int = 2,
             .withColumn("dup_ratio", F.expr(
                 "CASE WHEN n_grams > 0 THEN n_dup_grams / "
                 "cast(n_grams AS double) ELSE 0.0d END")))
-
-
-def _word_ngrams_all(text_col: str, n: int) -> str:
-    """SQL: ALL (non-distinct) lowercase word n-grams of `text_col`,
-    in text order — occurrence counts matter when the grams estimate
-    a distribution (unlike `_word_ngrams`, whose distinct sets feed
-    overlap checks).  Token array bound once, as in `_word_ngrams`."""
-    from .textstats import _bind
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
-    return _bind(
-        toks, "tk",
-        f"CASE WHEN size(tk) >= {n} THEN "
-        f"transform(sequence(1, size(tk) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(tk, i, {n}))) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END")
 
 
 def dsir_logratios(df: DataFrame, target_df: DataFrame,
@@ -309,12 +260,11 @@ def dsir_logratios(df: DataFrame, target_df: DataFrame,
     (ops/similarity.ivf_topk).  Two tiny jobs; nothing data-sized
     crosses a shuffle except the bucket counts."""
     import math
-    from .textstats import _tok_hash16
-    bucket = f"({_tok_hash16('gram')} % {n_buckets})"
+    bucket = f"({tok_hash16('gram')} % {n_buckets})"
 
     def census(d: DataFrame) -> list:
         rows = (d.select(F.explode(
-                    F.expr(_word_ngrams_all(text_col, n))).alias("gram"))
+                    F.expr(word_ngrams(text_col, n))).alias("gram"))
                 .groupBy(F.expr(bucket).alias("b"))
                 .count().collect())
         counts = [0] * n_buckets
@@ -338,11 +288,10 @@ def with_dsir_weight(df: DataFrame, logratios: list, n: int = 2,
     the document's hashed n-grams, added in text order so Spark and
     the DuckDB oracle see the identical float sequence.  Adds
     ``dsir_logw`` (rounded to 4)."""
-    from .textstats import _tok_hash16
     lr = "array(" + ", ".join(f"{float(v)!r}d" for v in logratios) + ")"
-    h = _tok_hash16("g")
+    h = tok_hash16("g")
     return df.withColumn("dsir_logw", F.expr(
-        f"round(aggregate({_word_ngrams_all(text_col, n)}, "
+        f"round(aggregate({word_ngrams(text_col, n)}, "
         f"cast(0.0 AS double), "
         f"(acc, g) -> acc + element_at({lr}, ({h} % {len(logratios)}) + 1)"
         f"), 4)"))
@@ -367,11 +316,10 @@ def dsir_select(df: DataFrame, target_df: DataFrame, k: int,
     on every run/cluster-size — the same auditability property as
     `stratified_sample`.  Returns (id, source-ish passthroughs kept
     by caller via select) with dsir_logw + dsir_key."""
-    from .textstats import _tok_hash16
     lrs = dsir_logratios(df, target_df, n_buckets, n, text_col)
     scored = with_dsir_weight(df, lrs, n, text_col)
     if gumbel:
-        hkey = _tok_hash16(f"concat('dsir:', cast({id_col} AS string))")
+        hkey = tok_hash16(f"concat('dsir:', cast({id_col} AS string))")
         noise = f"round(-ln(-ln(({hkey} + 0.5d) / 65536.0d)), 6)"
     else:
         noise = "cast(0.0 AS double)"
@@ -550,8 +498,7 @@ def split_corpus(df: DataFrame, val_frac: float = 0.01,
     sampling variance: the realized fractions converge to the
     requested ones by the uniformity of md5, and membership is
     auditable (recompute the hash, get the split)."""
-    from .textstats import _tok_hash16
-    h = _tok_hash16(f"concat('{salt}:', cast({id_col} AS string))")
+    h = tok_hash16(f"concat('{salt}:', cast({id_col} AS string))")
     v = int(65536 * val_frac)
     t = int(65536 * test_frac)
     return df.withColumn("split", F.expr(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .textstats import doc_lines, gram, gram_starts
+
 
 def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of byte-identical texts (hash-groupBy)."""
@@ -48,19 +50,12 @@ def _minhash_scalar(df: DataFrame, n_hashes: int,
     its tokens) and the n seeded values derive from that int
     (``hash(h, seed)``) — the standard single-basis +
     per-permutation-mix construction (datasketch uses one SHA1 basis
-    the same way).
-
-    The CASE guard matters: sequence(1, 0) is DESCENDING [1, 0] in
-    Spark, so the un-guarded form emits phantom positions on docs with
-    < k tokens (and element_at past the end throws under ANSI)."""
+    the same way)."""
     k = shingle_k
     toks = df.select("doc_id", F.split("text", " ").alias("toks"))
     pos = toks.select(
         "doc_id", "toks",
-        F.explode(F.expr(
-            f"CASE WHEN size(toks) >= {k} THEN "
-            f"sequence(1, size(toks) - {k - 1}) "
-            f"ELSE CAST(array() AS ARRAY<INT>) END")).alias("i"))
+        F.explode(F.expr(gram_starts("size(toks)", k))).alias("i"))
     args = ", ".join("element_at(toks, i)" if j == 0 else
                      f"element_at(toks, i + {j})" for j in range(k))
     sh = pos.select("doc_id", F.expr(f"hash({args})").alias("h"))
@@ -229,20 +224,10 @@ def embedding_near_duplicates(df: DataFrame, threshold: float = 0.9,
     scored — O(N²/2^bits) per table instead of the full cross join),
     verified with exact JVM cosine ≥ threshold.  Same scale shape as
     MinHash banding: bucket groupBy, bounded fan-out, exact verify."""
-    from .similarity import _rand_proj_bits, _with_norm, cosine_pre
+    from .similarity import cosine_pre, lsh_tables
 
-    frames = []
-    for t in range(n_tables):
-        frames.append(df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            F.lit(t).alias("tbl"),
-            F.expr(_rand_proj_bits(vec_col, dim, bits, t)).alias("bucket")))
-    b = frames[0]
-    for o in frames[1:]:
-        b = b.unionByName(o)
-    # pre-cast + per-side norm once (r6): the old form re-ran both
-    # 64-element norm folds per candidate pair inside cosine_expr
-    b = _with_norm(b, "v", "vd", "nv")
+    b = lsh_tables(df, "id", "vd", "nv", n_tables, bits, dim,
+                   id_col, vec_col)
     a, c = b.alias("a"), b.alias("b")
     cand = (a.join(c, (F.col("a.tbl") == F.col("b.tbl")) &
                       (F.col("a.bucket") == F.col("b.bucket")) &
@@ -349,7 +334,7 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
     Differs from `curation.remove_boilerplate_lines` (which drops ALL
     copies of high-frequency lines): dedup preserves the content once.
 
-    Paragraph = trimmed non-blank line (curation._doc_lines — the same
+    Paragraph = trimmed non-blank line (textstats.doc_lines — the same
     normalization the boilerplate census uses).
 
     Returns (doc_id, text, n_paragraphs, n_dropped) — one row per
@@ -363,11 +348,10 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
     paragraph is one hot join key — run remove_boilerplate_lines first
     to strip ubiquitous lines, and AQE skew-join splits the remainder.
     """
-    from .curation import _doc_lines
     # bind the line array once (r6): spliced into both size() and the
     # posexplode, the split+trim+filter pipeline ran twice per row
     e = (df.select(F.col(id_col).alias("doc_id"),
-                   F.expr(_doc_lines(text_col)).alias("_ps"))
+                   F.expr(doc_lines(text_col)).alias("_ps"))
          .select("doc_id",
                  F.expr("size(_ps)").alias("n_paragraphs"),
                  F.posexplode_outer("_ps").alias("pos0", "para"))
@@ -435,16 +419,11 @@ def remove_duplicated_windows(df: DataFrame, n: int = 8,
     # explode the window START POSITIONS and build the gram in the
     # codegen projection above the Generate (r6, the `_minhash_scalar`
     # pattern): no interpreted transform lambda, no per-doc
-    # array<struct> materialization — gram strings are identical
-    # (same concat_ws over the same slice)
-    starts = (f"CASE WHEN n_tokens >= {n} THEN "
-              f"sequence(1, n_tokens - {n} + 1) "
-              f"ELSE CAST(array() AS ARRAY<INT>) END")
-    inst = (base.select("doc_id", "toks",
-                        F.explode(F.expr(starts)).alias("start"))
+    # array<struct> materialization
+    inst = (base.select("doc_id", "toks", F.explode(F.expr(
+                gram_starts("n_tokens", n))).alias("start"))
             .select("doc_id", "start",
-                    F.expr(f"concat_ws(' ', slice(toks, start, {n}))")
-                    .alias("gram"))
+                    F.expr(gram("toks", "start", n)).alias("gram"))
             .withColumn("ikey", F.expr(
                 "concat(lpad(cast(doc_id AS string), 12, '0'), ':', "
                 "lpad(cast(start AS string), 9, '0'))")))
@@ -504,7 +483,7 @@ def semantic_dedup(items: DataFrame, n_cells: int = 8,
 
     Returns the surviving rows of `items` with their ``cell``."""
     from .similarity import (ivf_centroids, ivf_train, ivf_cells_expr,
-                             _with_norm, cosine_pre)
+                             with_norm, cosine_pre)
     cents = (ivf_train(items, n_cells, n_iter, id_col, vec_col)
              if n_iter else
              ivf_centroids(items, n_cells, id_col, vec_col))
@@ -512,7 +491,7 @@ def semantic_dedup(items: DataFrame, n_cells: int = 8,
         "cell", F.expr(ivf_cells_expr(cents, vec_col, 1))[0])
     # pre-cast + per-side norm once (r6): the within-cell quadratic
     # scored both norm folds per pair through cosine_expr
-    asn = _with_norm(asg, vec_col, "_vd", "_nv")
+    asn = with_norm(asg, vec_col, "_vd", "_nv")
     a = asn.select(F.col("cell").alias("_c"),
                    F.col(id_col).alias("d1"),
                    F.col("_vd").alias("_v1"), F.col("_nv").alias("_n1"))

@@ -69,12 +69,12 @@ def retrieve_context(queries: DataFrame, kb: DataFrame, top_k: int = 2,
     """Per query row (query_id, query_text, query_vec) → formatted
     context string (rag_service.py:200-206): broadcast-crossjoin cosine
     scoring, top-k window, threshold filter, 500-char chunk caps."""
-    from .similarity import _with_norm, cosine_pre
+    from .similarity import cosine_pre, with_norm
 
     # per-side norms once before the cross join (r6, as in
     # similarity.brute_force_topk — bit-identical scores)
-    q = _with_norm(queries, "query_vec", "_qd", "_nq")
-    k2 = _with_norm(kb, "embedding", "_kd", "_nk")
+    q = with_norm(queries, "query_vec", "_qd", "_nq")
+    k2 = with_norm(kb, "embedding", "_kd", "_nk")
     scored = (q.crossJoin(F.broadcast(k2))
               .withColumn("sim", F.expr(cosine_pre("_qd", "_kd",
                                                    "_nq", "_nk"))))

@@ -11,6 +11,8 @@
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -45,31 +47,38 @@ def cosine_pre(a: str, b: str, na: str, nb: str) -> str:
             f"ELSE {d} / ({na} * {nb}) END)")
 
 
-def _with_norm(df: DataFrame, src_col: str, vec_alias: str,
+def with_norm(df: DataFrame, src_col: str, vec_alias: str,
                norm_alias: str) -> DataFrame:
     """Append the pre-cast double array + its norm for one side."""
     return (df.withColumn(vec_alias, F.expr(TO_D.format(v=src_col)))
             .withColumn(norm_alias, F.expr(NORM_D.format(v=vec_alias))))
 
 
-def brute_force_topk(items: DataFrame, queries: DataFrame, k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k neighbors per query (queries broadcast; norms
-    precomputed per side — r6)."""
-    q = _with_norm(queries.select(F.col(id_col).alias("query_id"),
-                                  F.col(vec_col).alias("_q0")),
-                   "_q0", "qv", "nq").drop("_q0")
-    c = _with_norm(items.select(F.col(id_col).alias("cand_id"),
-                                F.col(vec_col).alias("_c0")),
-                   "_c0", "cv", "nc").drop("_c0")
-    scored = (c.join(F.broadcast(q))
-              .where("query_id != cand_id")
-              .withColumn("sim", F.expr(cosine_pre("qv", "cv", "nq", "nc"))))
+def _score_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The top-k tail of every search: score the (query_id, qv, nq,
+    cand_id, cv, nc) pairs by cosine and keep each query's `k` best
+    (ties → smallest cand_id)."""
+    scored = pairs.withColumn("sim", F.expr(cosine_pre("qv", "cv",
+                                                       "nq", "nc")))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "cand_id", "rank",
                     F.round("sim", 6).alias("sim")))
+
+
+def brute_force_topk(items: DataFrame, queries: DataFrame, k: int = 10,
+                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Exact top-k neighbors per query (queries broadcast; norms
+    precomputed per side — r6)."""
+    q = with_norm(queries.select(F.col(id_col).alias("query_id"),
+                                 F.col(vec_col).alias("_q0")),
+                  "_q0", "qv", "nq").drop("_q0")
+    c = with_norm(items.select(F.col(id_col).alias("cand_id"),
+                               F.col(vec_col).alias("_c0")),
+                  "_c0", "cv", "nc").drop("_c0")
+    return _score_topk(c.join(F.broadcast(q)).where("query_id != cand_id"),
+                       k)
 
 
 def _rand_proj_bits(vec_col: str, dim: int, bits: int, table_seed: int) -> str:
@@ -88,40 +97,36 @@ def _rand_proj_bits(vec_col: str, dim: int, bits: int, table_seed: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+def lsh_tables(df: DataFrame, id_as: str, vec_as: str, norm_as: str,
+               n_tables: int, bits: int, dim: int,
+               id_col: str = "vec_id",
+               vec_col: str = "embedding") -> DataFrame:
+    """One row per (vector, hash table): (`id_as`, tbl, bucket,
+    `vec_as`, `norm_as`) — the bucket union that LSH search and
+    near-dup detection join on, with the vector pre-cast to double and
+    its norm taken once per row (r6: scored per bucket pair)."""
+    tables = [df.select(
+        F.col(id_col).alias(id_as), F.col(vec_col).alias("_v0"),
+        F.lit(t).alias("tbl"),
+        F.expr(_rand_proj_bits(vec_col, dim, bits, t)).alias("bucket"))
+        for t in range(n_tables)]
+    return with_norm(functools.reduce(DataFrame.unionByName, tables),
+                     "_v0", vec_as, norm_as).drop("_v0")
+
+
 def lsh_topk(items: DataFrame, queries: DataFrame, k: int = 10,
              bits: int = 8, n_tables: int = 2, dim: int = 64,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k: score only bucket-sharing candidates across
     `n_tables` independent hash tables."""
-    def bucketed(df, role):
-        out = []
-        for t in range(n_tables):
-            out.append(df.select(
-                F.col(id_col).alias(f"{role}_id"),
-                F.col(vec_col).alias(f"{role[0]}v"),
-                F.lit(t).alias("tbl"),
-                F.expr(_rand_proj_bits(vec_col, dim, bits, t)).alias("bucket")))
-        res = out[0]
-        for o in out[1:]:
-            res = res.unionByName(o)
-        # pre-cast + per-side norm once (r6) — scored per bucket pair
-        return _with_norm(res, f"{role[0]}v", f"_{role[0]}vd",
-                          f"n{role[0]}")
-
-    q = bucketed(queries, "query")
-    c = bucketed(items, "cand")
-    cand = (q.join(c, ["tbl", "bucket"])
-            .where("query_id != cand_id")
-            .select("query_id", F.col("_qvd").alias("qv"), "nq",
-                    "cand_id", F.col("_cvd").alias("cv"), "nc")
-            .distinct())
-    scored = cand.withColumn("sim", F.expr(cosine_pre("qv", "cv",
-                                                      "nq", "nc")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "cand_id", "rank",
-                    F.round("sim", 6).alias("sim")))
+    q = lsh_tables(queries, "query_id", "qv", "nq", n_tables, bits, dim,
+                   id_col, vec_col)
+    c = lsh_tables(items, "cand_id", "cv", "nc", n_tables, bits, dim,
+                   id_col, vec_col)
+    return _score_topk(q.join(c, ["tbl", "bucket"])
+                       .where("query_id != cand_id")
+                       .select("query_id", "qv", "nq", "cand_id", "cv", "nc")
+                       .distinct(), k)
 
 
 def _lit_vec(vals) -> str:
@@ -209,24 +214,17 @@ def ivf_topk(items: DataFrame, queries: DataFrame, k: int = 10,
     window over candidates (|items| × nprobe / n_cells rows, not
     |items| × |queries|)."""
     cents = centroids or ivf_centroids(items, n_cells, id_col, vec_col)
-    it = _with_norm(
+    it = with_norm(
         items.select(
             F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_c0"),
             F.expr(ivf_cells_expr(cents, vec_col, 1))[0].alias("cell")),
         "_c0", "cv", "nc").drop("_c0")
-    q = _with_norm(
+    q = with_norm(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("_q0"),
             F.explode(F.expr(ivf_cells_expr(cents, vec_col, nprobe)))
             .alias("cell")),
         "_q0", "qv", "nq").drop("_q0")
-    scored = (it.join(F.broadcast(q), "cell")
-              .where("query_id != cand_id")
-              .withColumn("sim", F.expr(cosine_pre("qv", "cv",
-                                                   "nq", "nc"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "cand_id", "rank",
-                    F.round("sim", 6).alias("sim")))
+    return _score_topk(it.join(F.broadcast(q), "cell")
+                       .where("query_id != cand_id"), k)
 

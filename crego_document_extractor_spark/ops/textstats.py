@@ -26,6 +26,48 @@ def _bind(bound_expr: str, var: str, body: str) -> str:
     return (f"element_at(transform(array({bound_expr}), "
             f"{var} -> {body}), 1)")
 
+
+def words(text_col: str) -> str:
+    """SQL: the lowercase words of `text_col` — split on Java's ``\\s``
+    (space, TAB, LF, VT, FF, CR; not CPython's 29 separators), empty
+    pieces dropped.  Every word-level operator, BPE training and BPE
+    serving take their words from here."""
+    return f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
+
+
+def doc_lines(text_col: str) -> str:
+    """SQL: the trimmed non-blank lines of `text_col`."""
+    return (f"filter(transform(split({text_col}, '\\n'), "
+            f"l -> trim(l)), l -> l != '')")
+
+
+def gram_starts(size: str, n: int) -> str:
+    """SQL: the start positions of the `n`-grams of an array of `size`
+    elements, none when it has fewer than `n` (the CASE guard matters:
+    sequence(1, 0) is DESCENDING [1, 0] in Spark)."""
+    return (f"CASE WHEN {size} >= {n} THEN "
+            f"sequence(1, {size} - {n - 1}) "
+            f"ELSE CAST(array() AS ARRAY<INT>) END")
+
+
+def gram(toks: str, i: str, n: int) -> str:
+    """SQL: the `n`-gram of array `toks` starting at position `i`, its
+    tokens joined by single spaces."""
+    return f"concat_ws(' ', slice({toks}, {i}, {n}))"
+
+
+def word_ngrams(text_col: str, n: int) -> str:
+    """SQL: all word `n`-grams of `text_col` (see `words`), in text
+    order.  The word array binds once (r6): spliced into the transform
+    lambda, the text was re-split per gram position."""
+    return _bind(
+        words(text_col), "tk",
+        f"CASE WHEN size(tk) >= {n} THEN "
+        f"transform(sequence(1, size(tk) - {n - 1}), "
+        f"i -> {gram('tk', 'i', n)}) "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END")
+
+
 #: tiny trigram→language profile (deterministic heuristic stand-in; a
 #: real deployment would broadcast a fastText-style table)
 _LANG_MARKERS = {
@@ -133,10 +175,8 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     consumer, including INSIDE the dup-chars lambda, where it was
     rebuilt once per line (quadratic split work on top of the
     intended O(lines²) local dup count)."""
-    lines = (f"filter(transform(split({text_col}, '\\n'), "
-             f"l -> trim(l)), l -> l != '')")
     stats = _bind(
-        lines, "ls",
+        doc_lines(text_col), "ls",
         "named_struct("
         "'n', size(ls), "
         "'dup_frac', CASE WHEN size(ls) = 0 THEN 0.0d ELSE "
@@ -168,16 +208,11 @@ def ngram_topk(df: DataFrame, n: int = 2, k: int = 20,
     # explode the gram START POSITIONS and build the gram string in
     # the codegen projection above the Generate (r6: the transform-
     # lambda form ran interpreted per gram — and the round-start
-    # version additionally re-split the text per position; the CASE
-    # guard matters: sequence(1, 0) is DESCENDING [1, 0] in Spark)
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
-    return (df.select("doc_id", F.expr(toks).alias("toks"))
+    # version additionally re-split the text per position)
+    return (df.select("doc_id", F.expr(words(text_col)).alias("toks"))
             .select("doc_id", "toks", F.explode(F.expr(
-                f"CASE WHEN size(toks) >= {n} THEN "
-                f"sequence(1, size(toks) - {n - 1}) "
-                f"ELSE CAST(array() AS ARRAY<INT>) END")).alias("i"))
-            .select("doc_id", F.expr(
-                f"concat_ws(' ', slice(toks, i, {n}))").alias("gram"))
+                gram_starts("size(toks)", n))).alias("i"))
+            .select("doc_id", F.expr(gram("toks", "i", n)).alias("gram"))
             .groupBy("gram")
             .agg(F.count("*").alias("n_occurrences"),
                  F.countDistinct("doc_id").alias("n_docs"))
@@ -185,7 +220,7 @@ def ngram_topk(df: DataFrame, n: int = 2, k: int = 20,
             .limit(k))
 
 
-def _tok_hash16(tok: str) -> str:
+def tok_hash16(tok: str) -> str:
     """SQL: the token's first 16 md5 bits as an integer in
     [0, 65535] — ascii() arithmetic so Spark and a DuckDB oracle
     compute the identical value.  The md5 binds once (r6): spliced
@@ -202,7 +237,7 @@ def _tok_hash16(tok: str) -> str:
 def _tok_weight(tok: str) -> str:
     """SQL: deterministic per-token weight in [-0.5, 0.5] — the
     scaled 16-bit token hash."""
-    return f"({_tok_hash16(tok)} / 65535.0d - 0.5d)"
+    return f"({tok_hash16(tok)} / 65535.0d - 0.5d)"
 
 
 def with_model_quality_score(df: DataFrame, text_col: str = "text",
@@ -221,11 +256,10 @@ def with_model_quality_score(df: DataFrame, text_col: str = "text",
     (see `with_rag_fallback`'s broadcast KB for the device) with the
     hash weight as the OOV fallback.  Adds ``model_n_tokens`` and
     ``model_quality_score`` (rounded to 6, oracle-checkable)."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
     # bind the token array once (r6): it was spliced into the fold,
     # the divisor and the count column — three tokenizations per row
     stats = _bind(
-        toks, "tk",
+        words(text_col), "tk",
         f"named_struct('n', size(tk), 'mean_w', "
         f"aggregate(tk, 0.0d, (a, t) -> a + {_tok_weight('t')}) "
         f"/ cast(greatest(size(tk), 1) AS double))")
@@ -323,9 +357,8 @@ def hashed_features(df: DataFrame, dim: int = 8,
     the `dim` cells count over it — the old form ran `dim` filter
     passes over a re-spliced token array, recomputing the md5 hash of
     every token per bucket (dim × 4 md5 calls per token)."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
-    buckets = _bind(toks, "tk",
-                    f"transform(tk, t -> pmod({_tok_hash16('t')}, {dim}))")
+    buckets = _bind(words(text_col), "tk",
+                    f"transform(tk, t -> pmod({tok_hash16('t')}, {dim}))")
     cells = ", ".join(
         f"size(filter(bk, b -> b = {j})) "
         f"/ cast(greatest(size(bk), 1) AS double)"
@@ -353,7 +386,7 @@ def train_quality_classifier(df: DataFrame, label_col: str = "label",
     corpus size except the scan.
 
     Serving the result = `with_model_quality_score` with these
-    weights broadcast (vocab hashing is shared via `_tok_hash16`).
+    weights broadcast (vocab hashing is shared via `tok_hash16`).
 
     Returns (weights, bias)."""
     feats = hashed_features(df, dim=dim, text_col=text_col)
@@ -403,7 +436,7 @@ def ngram_lm_train(df: DataFrame, text_col: str = "text",
     one explode → map-side-combined hash aggregate.  Documents are
     sentence-framed with a BOS token ``<s>`` so the first word is
     scored too."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
+    toks = words(text_col)
     uni = (df.select(F.explode(F.expr(toks)).alias("w"))
            .groupBy("w").agg(F.count("*").alias("c_w")))
     bi = (_bi_pairs_exploded(df.select(F.expr(toks).alias("toks")))
@@ -427,9 +460,8 @@ def with_perplexity(df: DataFrame, bi: DataFrame, stats: DataFrame,
     otherwise) → per-doc hash aggregate.  The perplexity filter of
     CCNet drops docs above a per-language percentile of
     ``lm_perplexity`` — composable with `corpus_scorecard`."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
     ids = _bi_pairs_exploded(
-        df.select("doc_id", F.expr(toks).alias("toks")))
+        df.select("doc_id", F.expr(words(text_col)).alias("toks")))
     ctx = (bi.groupBy("w1").agg(F.sum("c_bi").alias("c_ctx")))
     scored = (ids
               .join(bi, ["w1", "w2"], "left")
@@ -485,9 +517,8 @@ def tfidf_topk(df: DataFrame, k: int = 5, text_col: str = "text",
     caller owns the blocks and must release them with
     ``result.sparkSession.catalog.clearCache()`` or by unpersisting
     the plan when done (r5 ADVICE)."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
     tf = (df.select(F.col(id_col).alias("doc_id"),
-                    F.explode(F.expr(toks)).alias("term"))
+                    F.explode(F.expr(words(text_col))).alias("term"))
           .groupBy("doc_id", "term")
           .agg(F.count("*").alias("tf")))
     if cache_tf:
@@ -527,18 +558,11 @@ def with_top_ngram_coverage(df: DataFrame, n: int = 2,
     the gram pipeline (split included) into the per-distinct-gram
     count lambda, rebuilding it once per distinct gram on top of the
     intended local count."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
-    grams = _bind(
-        toks, "tk",
-        f"CASE WHEN size(tk) >= {n} THEN "
-        f"transform(sequence(1, size(tk) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(tk, i, {n}))) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END")
     counted = ("transform(array_distinct(gs), g -> "
                "named_struct('g', g, 'c', "
                "size(filter(gs, x -> x = g))))")
     best = _bind(
-        grams, "gs",
+        word_ngrams(text_col, n), "gs",
         f"try_element_at(array_sort({counted}, (l, r) -> "
         f"CASE WHEN l.c > r.c THEN -1 WHEN l.c < r.c THEN 1 "
         f"WHEN l.g < r.g THEN -1 ELSE 1 END), 1)")
@@ -592,13 +616,12 @@ def with_readability(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``flesch`` (round 4).  Pure scalar projection — no shuffle.
     The three counts bind once into a struct (r6): each was spliced
     twice (its own column + the flesch formula)."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
     stats = (f"named_struct("
              f"'sents', greatest(size(filter(split({text_col}, '[.!?]+'), "
              f"s -> trim(s) != '')), 1), "
              f"'syls', size(regexp_extract_all(lower({text_col}), "
              f"'[aeiouy]+', 0)), "
-             f"'words', greatest(size({toks}), 1))")
+             f"'words', greatest(size({words(text_col)}), 1))")
     return (df.withColumn("_fl", F.expr(stats))
             .withColumn("n_sentences", F.expr("_fl.sents"))
             .withColumn("n_syllables", F.expr("_fl.syls"))
@@ -626,10 +649,8 @@ def with_line_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     oracle replays it bit-for-bit (fractions round 4).  The line
     array binds once into a struct (r6): it was spliced into all five
     signals, re-splitting the text per output column."""
-    lines = (f"filter(transform(split({text_col}, '\\n'), "
-             f"l -> trim(l)), l -> l != '')")
     stats = _bind(
-        lines, "ls",
+        doc_lines(text_col), "ls",
         "named_struct("
         "'n_lines', size(ls), "
         "'endp', size(filter(ls, l -> "

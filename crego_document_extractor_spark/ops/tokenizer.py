@@ -29,7 +29,11 @@ the same pass.
 """
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.functions import pandas_udf
+
+from .textstats import words
 
 __all__ = ["word_census", "pair_census", "apply_merge", "bpe_train",
            "bpe_encode"]
@@ -46,11 +50,10 @@ def word_census(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, n_occurrences, symbols) — the one corpus-sized pass.
 
     `symbols` starts as the word's characters; merge training mutates
-    it.  Scale shape: explode whitespace tokens → hash-aggregate with
-    map-side partial counts; output is vocab-sized.
+    it.  Scale shape: explode the words (`textstats.words`) →
+    hash-aggregate with map-side partial counts; output is vocab-sized.
     """
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
-    return (df.select(F.explode(F.expr(toks)).alias("word"))
+    return (df.select(F.explode(F.expr(words(text_col))).alias("word"))
             .groupBy("word")
             .agg(F.count("*").alias("n_occurrences"))
             .withColumn(
@@ -125,10 +128,12 @@ def bpe_encode(df: DataFrame, merges: list[tuple[str, str]],
     learned merge list, adding ``bpe_pieces`` (array<string>) and
     ``n_bpe_pieces``.
 
-    This is the honest 100 TB shape for tokenizer SERVING — an
-    Arrow-batched mapInPandas stage (narrow, no shuffle), exactly how
-    production pipelines tokenize: the merge table rides the task
-    closure (a few thousand pairs), each worker memoizes the encoding
+    This is the honest 100 TB shape for tokenizer SERVING — one
+    Arrow-batched scalar pandas_udf (narrow, no shuffle), exactly how
+    production pipelines tokenize: its input is the document's words
+    from the same JVM split as `word_census` (`textstats.words`), so
+    only the words cross into Python; the merge table rides the task
+    closure (a few thousand pairs), each task memoizes the encoding
     per distinct word, and the greedy fold applies merges in learned
     order — bit-identical to the training-time `apply_merge` fold, so
     ``encode(train_corpus)`` reproduces the final training vocabulary
@@ -139,10 +144,10 @@ def bpe_encode(df: DataFrame, merges: list[tuple[str, str]],
     n_merges interpreted HOFs per row — the Python stage with per-word
     memoization is measurably the right trade here, like the fused
     parse stage (BENCH/ENGINE_AB.md)."""
-
     mlist = [tuple(m) for m in merges]
+    cache: dict[str, list[str]] = {}
 
-    def _encode_word(word: str, cache: dict) -> list[str]:
+    def _encode_word(word: str) -> list[str]:
         hit = cache.get(word)
         if hit is not None:
             return hit
@@ -158,25 +163,11 @@ def bpe_encode(df: DataFrame, merges: list[tuple[str, str]],
         cache[word] = syms
         return syms
 
-    def _batches(batches):
-        cache: dict = {}
-        for pdf in batches:
-            pieces = []
-            for text in pdf[text_col]:
-                toks = [t for t in (text or "").lower().split() if t]
-                doc: list[str] = []
-                for t in toks:
-                    doc.extend(_encode_word(t, cache))
-                pieces.append(doc)
-            out = pdf.copy()
-            out["bpe_pieces"] = pieces
-            out["n_bpe_pieces"] = [len(p) for p in pieces]
-            yield out
+    @pandas_udf("array<string>")
+    def _encode(docs: pd.Series) -> pd.Series:
+        # a NULL text has NULL words: no pieces
+        return pd.Series([[p for w in (ws if ws is not None else ())
+                           for p in _encode_word(w)] for ws in docs])
 
-    from pyspark.sql.types import (ArrayType, IntegerType, StringType,
-                                   StructField, StructType)
-    # StructType.add MUTATES the receiver — never call it on df.schema
-    schema = StructType(list(df.schema.fields) + [
-        StructField("bpe_pieces", ArrayType(StringType())),
-        StructField("n_bpe_pieces", IntegerType())])
-    return df.mapInPandas(_batches, schema=schema)
+    return (df.withColumn("bpe_pieces", _encode(F.expr(words(text_col))))
+            .withColumn("n_bpe_pieces", F.size("bpe_pieces")))

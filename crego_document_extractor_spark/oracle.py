@@ -268,9 +268,10 @@ def extract_gstr(parsed: dict) -> list[dict]:
 def extract_document(doc: dict) -> dict:
     """Full per-document oracle: clean spans + parameter rows."""
     parsed = parse_document(doc)
-    if doc["doc_id"].startswith("crif-"):
+    kind = S.doc_kind(doc["doc_id"])
+    if kind == "crif":
         results = extract_crif(parsed)
-    elif doc["doc_id"].startswith("gstr-"):
+    elif kind == "gstr":
         results = extract_gstr(parsed)
     else:
         results = []

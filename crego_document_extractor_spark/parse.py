@@ -73,21 +73,14 @@ DOCUMENTS_SCHEMA = T.StructType([
     T.StructField("spans", T.ArrayType(SPAN_TYPE)),
 ])
 
-_KINDS = ("crif", "gstr", "html")
-
-
-def _doc_kind(doc_id: str | None) -> str:
-    # a NULL doc_id is 'other', as in DOC_KIND_SQL
-    head = (doc_id or "").split("-", 1)[0]
-    return head if head in _KINDS else "other"
-
-
-#: SQL twin of ``_doc_kind`` — used by the parse cache to recompute the
-#: kind from the *requesting* doc_id at serve time (the cache key is
-#: content-only, so a byte-identical span payload may be shared across
-#: kinds; the routing kind must come from the caller, not the cache)
+#: SQL twin of ``semantics.doc_kind`` — used by the parse cache to
+#: recompute the kind from the *requesting* doc_id at serve time (the
+#: cache key is content-only, so a byte-identical span payload may be
+#: shared across kinds; the routing kind must come from the caller, not
+#: the cache)
 DOC_KIND_SQL = (
-    "CASE WHEN element_at(split(doc_id, '-'), 1) IN ('crif', 'gstr', 'html') "
+    "CASE WHEN element_at(split(doc_id, '-'), 1) IN ("
+    + ", ".join(f"'{k}'" for k in S.DOC_KINDS) + ") "
     "THEN element_at(split(doc_id, '-'), 1) ELSE 'other' END"
 )
 
@@ -141,7 +134,7 @@ def _fused_row(doc_id: str, spans) -> dict:
     fused-vs-oracle parity is by shared definition; the relational
     engine is the independent physical form, cross-checked by the A9b
     agreement query and tests/test_paths.py."""
-    kind = _doc_kind(doc_id)
+    kind = S.doc_kind(doc_id)
     cs = S.clean_spans(_span_dicts(spans))
     tables = S.build_tables(cs)
     chunks = S.build_chunks(cs)

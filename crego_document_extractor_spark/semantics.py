@@ -1,7 +1,8 @@
 """Shared pure-Python semantic core.
 
 The one Python definition of every piece of reference behavior that
-runs Python-side: span cleaning, rendering, tables and chunks; the
+runs Python-side: the document kind a doc_id routes to; span
+cleaning, rendering, tables and chunks; the
 account and table-signature parsers; the CRIF derivations (the query
 embeddings ``QUERY_MAT``, the retrieval ``candidate_pool`` and
 ``retrieve_best``, the report's ``report_accounts``, a chunk's
@@ -34,6 +35,21 @@ from typing import Any, Optional
 import numpy as np
 
 from .specs import PARAMETER_SPECS, query_text
+
+# ---------------------------------------------------------------------------
+# Routing: a document's kind comes from its doc_id
+# ---------------------------------------------------------------------------
+
+#: the kinds a doc_id routes to; any other doc_id is kind 'other'
+DOC_KINDS = ("crif", "gstr", "html")
+
+
+def doc_kind(doc_id: str | None) -> str:
+    """The part of `doc_id` before its first '-' when that is one of
+    `DOC_KINDS`, else 'other' (also for a NULL doc_id).  Its SQL twin
+    is ``parse.DOC_KIND_SQL``."""
+    head = (doc_id or "").split("-", 1)[0]
+    return head if head in DOC_KINDS else "other"
 
 # ---------------------------------------------------------------------------
 # Boilerplate stripping (north_star: tag-class stoplist + link-density)

@@ -1,6 +1,6 @@
 """Focused differential tests for the full parse (`parse_documents`:
 JVM clean spans plus the one build UDF): every output column must equal
-the Python twin (`oracle.parse_document` plus `parse._doc_kind`, the
+the Python twin (`oracle.parse_document` plus `semantics.doc_kind`, the
 same semantics functions the fused stage runs) value-for-value —
 including the edge cases the SQL clean-spans expression had to
 reproduce deliberately (stable offset sort, CPython whitespace
@@ -10,12 +10,12 @@ tables and chunks from this parse (`test_sql_engine_reads_any_full_parse`)."""
 
 import pytest
 
-from crego_document_extractor_spark import corpus, oracle, parse
+from crego_document_extractor_spark import corpus, oracle, parse, semantics
 
 
 def _py_rows(docs):
     return {d["doc_id"]: dict(oracle.parse_document(d),
-                              doc_kind=parse._doc_kind(d["doc_id"]),
+                              doc_kind=semantics.doc_kind(d["doc_id"]),
                               n_spans=len(d["spans"]))
             for d in docs}
 
@@ -159,3 +159,24 @@ def test_ws_class_is_python_whitespace(spark):
     for c, ch, ws in rows:
         assert ch == ("?" if 0xD800 <= c <= 0xDFFF else chr(c)), c
         assert ws == chr(c).isspace(), c
+
+
+def test_retrieval_split_is_embed_tokens(spark):
+    """The relational engine's retrieval tokenizer
+    (``retrieval_sql.TOKENS``, its empty pieces dropped, as they add
+    sign 0) gives ``semantics.embed``'s tokens
+    (``re.findall('[a-z0-9]+', s.lower())``) for 'a' + c + 'b', for
+    every BMP code point c outside the surrogates.  Spark's ``lower``
+    and CPython's differ on a few newer code points, none of which
+    lowercases into [a-z0-9]."""
+    from crego_document_extractor_spark.extract.retrieval_sql import TOKENS
+
+    toks = TOKENS.format(s="'a' || format_string('%c', c) || 'b'")
+    rows = (spark.range(0x10000).where("id < 55296 OR id > 57343")
+            .selectExpr("cast(id AS int) AS c")
+            .selectExpr("c", f"filter({toks}, t -> t != '') AS toks")
+            .collect())
+    assert len(rows) == 0x10000 - 0x800
+    for c, got in rows:
+        assert list(got) == semantics._TOKEN_RE.findall(
+            ("a" + chr(c) + "b").lower()), c

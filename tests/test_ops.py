@@ -905,12 +905,17 @@ def test_bpe_encode_roundtrip(spark):
     """Serving a trained BPE model over the training corpus
     reproduces the final training segmentations exactly (encode's
     greedy per-merge fold == apply_merge's fold), with per-doc piece
-    concatenation in token order."""
+    concatenation in token order.  Both split words on Java's \\s
+    only: NBSP, EM SPACE, NEL and U+001C (whitespace to Python's
+    str.split) stay inside words."""
+    import re
+
     from crego_document_extractor_spark.ops import tokenizer
 
     texts = ["low lower lowest low low",
              "new newer newest new lower",
-             "wide wider widest new low"]
+             "wide wider widest new low",
+             "low\u00a0lower new\u2003wide\tlow\u0085new\u001clow"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id int, text string")
     merges, words = tokenizer.bpe_train(df, n_merges=6)
@@ -918,7 +923,8 @@ def test_bpe_encode_roundtrip(spark):
     got = {r["doc_id"]: (list(r["bpe_pieces"]), r["n_bpe_pieces"])
            for r in tokenizer.bpe_encode(df, merges).collect()}
     for i, t in enumerate(texts):
-        exp = [p for tok in t.lower().split() for p in seg[tok]]
+        exp = [p for tok in re.split("[ \t\n\x0b\f\r]+", t.lower())
+               if tok for p in seg[tok]]
         assert got[i] == (exp, len(exp)), i
     # unseen text still encodes (characters + any applicable merges)
     df2 = spark.createDataFrame([(9, "lowly")], "doc_id int, text string")

@@ -215,30 +215,32 @@ BAD_INPUT_DOCS = [
     _doc("gstr-boiler-01", _BOILERPLATE_ONLY),
     # an unknown prefix: parsed like any document, extracted by neither
     _doc("misc-000001", DOC_FLAG_CHUNK["spans"]),
+    # a bare kind is its own prefix: extracted like crif-/gstr- ids
+    _doc("crif", DOC_FLAG_CHUNK["spans"]),
+    _doc("gstr", DOC_FLAG_CHUNK["spans"]),
+    # a NULL doc_id: kind 'other', so parsed but not extracted
+    _doc(None, DOC_FLAG_CHUNK["spans"]),
 ]
-
-# a NULL doc_id: kind 'other', so parsed but not extracted (the oracle's
-# extract_document needs a doc_id, its parse_document does not)
-DOC_NULL_ID = _doc(None, DOC_FLAG_CHUNK["spans"])
 
 
 @pytest.mark.parametrize("form", sorted(FORMS))
 def test_bad_input_spans_match_oracle(spark, form):
     """Empty spans, all-boilerplate spans (stoplisted kinds and
-    link-dense text), an unknown doc_id prefix and a NULL doc_id: the
-    clean spans and the result rows equal the oracle's, and the
-    unknown prefix and the NULL doc_id have no result rows."""
-    docs = _df(spark, BAD_INPUT_DOCS + [DOC_NULL_ID])
+    link-dense text), an unknown doc_id prefix, bare kind doc_ids and a
+    NULL doc_id: the clean spans and the result rows equal the
+    oracle's, the bare kinds are extracted, and the unknown prefix and
+    the NULL doc_id have no result rows."""
+    docs = _df(spark, BAD_INPUT_DOCS)
     spans = pipeline.clean_spans(pipeline.parse_documents(docs)).collect()
     assert {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
             for r in spans} == {
-        **{d["doc_id"]: oracle.extract_document(d)["clean_spans"]
-           for d in BAD_INPUT_DOCS},
-        None: oracle.parse_document(DOC_NULL_ID)["clean_spans"]}
+        d["doc_id"]: oracle.extract_document(d)["clean_spans"]
+        for d in BAD_INPUT_DOCS}
     got = {(r["doc_id"], r["param_id"]): r.asDict()
            for r in FORMS[form](docs).collect()}
     _assert_rows_equal(got, _expected(BAD_INPUT_DOCS))
     assert not any(d in ("misc-000001", None) for d, _ in got)
+    assert {d for d, _ in got} >= {"crif", "gstr"}
 
 
 def test_rag_fallback_plan_has_no_arrow_udf(spark, raw_docs):
