@@ -4,10 +4,16 @@
 deterministic span-corpus synthesized from /root/testdata/sf0.001's
 ``documents`` table.  ``queries()``/``oracle_sql()`` map the operator
 inventory of SURVEY.md §2 onto the driver tables (names carry the
-operator ids so the inventory can be checked line by line); inline
-VALUES queries check the reference's scalar semantics (DPD decode,
-currency cleaning, month regexes, boost ladder) through the DuckDB
-oracle as well.
+operator ids so the inventory can be checked line by line).
+
+The reference-parity queries come first.  Each runs the package's own
+definition over fixed inputs (``sqlexpr.clean_number``, ``gstr_month``,
+``dpd``, ``boost``, the table-signature extractors and
+``account_fields``), so the DuckDB oracle, the one independent
+spelling, checks the SQL that ships; ``q_ngram_jaccard`` and
+``q_skew_salted_topk`` likewise call ``ops/dedup`` and ``ops/skew``.
+A query that calls no package code is a ``bench.py`` key or is
+labelled in COVERAGE.md.
 """
 
 from __future__ import annotations
@@ -87,52 +93,39 @@ def _q_f1_field_extract(spark, sf):
 
 
 def _q_f3_clean_number_inline(spark, sf):
-    """F3: currency cleaning semantics (crif_parser.py:207-216)."""
-    return spark.sql("""
-        SELECT raw,
-               coalesce(try_cast(trim(regexp_replace(raw, ',|₹|Rs', '')) AS double), 0.0) AS cleaned
+    """F3: currency cleaning semantics (crif_parser.py:207-216) through
+    the shipped `sqlexpr.clean_number`."""
+    from crego_document_extractor_spark.extract import sqlexpr as X
+    return spark.sql(f"""
+        SELECT raw, {X.clean_number('raw')} AS cleaned
         FROM VALUES ('1,234.56'), ('₹5,00,000'), ('Rs 123'), ('  42 '),
                     (''), ('n/a'), ('-12.5'), ('1.2.3'), ('0') AS t(raw)
     """)
 
 
 def _q_f10_month_extract_inline(spark, sf):
-    """F10: GSTR month/year header regexes (gstr.py:39-65)."""
-    return spark.sql("""
-        SELECT id,
-          CASE WHEN mm != '' AND ym != ''
-               THEN concat(mm, ' ', element_at(split(ym, '-'), 1))
-               WHEN dm != '' THEN dm
-               ELSE 'Unknown Month' END AS month
-        FROM (
-          SELECT id,
-            regexp_extract(h, '(?i)(?:Month|Period)\\\\s*[:\\\\-]?\\\\s*([A-Za-z]+)', 1) AS mm,
-            regexp_extract(h, '(?i)(?:Year|Financial Year)\\\\s*[:\\\\-]?\\\\s*([0-9]{4}(?:-[0-9]{2,4})?)', 1) AS ym,
-            regexp_extract(h, '\\\\b(?:January|February|March|April|May|June|July|August|September|October|November|December)\\\\s*20[0-9]{2}\\\\b', 0) AS dm
-          FROM VALUES (1, 'Month : January\nYear : 2024-25'),
-                      (2, 'Period - April\nFinancial Year: 2023-2024'),
-                      (3, 'Filed for September 2025'),
-                      (4, 'no period info'),
-                      (5, 'month: may\nyear: 2022') AS t(id, h))
+    """F10: GSTR month/year header regexes (gstr.py:39-65) through the
+    shipped `sqlexpr.gstr_month`."""
+    from crego_document_extractor_spark.extract import sqlexpr as X
+    return spark.sql(f"""
+        SELECT id, {X.gstr_month('h')} AS month
+        FROM VALUES (1, 'Month : January\nYear : 2024-25'),
+                    (2, 'Period - April\nFinancial Year: 2023-2024'),
+                    (3, 'Filed for September 2025'),
+                    (4, 'no period info'),
+                    (5, 'month: may\nyear: 2022') AS t(id, h)
     """)
 
 
 def _q_a1_dpd_decode_inline(spark, sf):
-    """A1: DPD grade decode + worst-DPD fold (crif_models.py:11-50)."""
-    return spark.sql("""
-        SELECT acct, max(
-          CASE WHEN s IN ('000','std','000/std') THEN 0
-               WHEN s = '030' THEN 30 WHEN s = '060' THEN 60
-               WHEN s IN ('090','sub','090/sub') THEN 90
-               WHEN s IN ('120','dbt','120/dbt') THEN 120
-               WHEN s IN ('150','lss','150/lss','180') THEN 180
-               WHEN s = '-' THEN 0
-               ELSE coalesce(try_cast(regexp_extract(s, '^([0-9]+)', 1) AS int), 0) END
-        ) AS worst_dpd
-        FROM (SELECT acct, lower(trim(status)) AS s FROM VALUES
-              (1,'000'),(1,'STD'),(1,'030'), (2,'090'),(2,'SUB'),(2,'XXX'),
-              (3,'-'),(3,'45x'), (4,'180'),(4,'LSS'), (5,'7/DPD')
-              AS t(acct, status))
+    """A1: DPD grade decode + worst-DPD fold (crif_models.py:11-50)
+    through the shipped `sqlexpr.dpd`."""
+    from crego_document_extractor_spark.extract import sqlexpr as X
+    return spark.sql(f"""
+        SELECT acct, max({X.dpd('status')}) AS worst_dpd
+        FROM VALUES (1,'000'),(1,'STD'),(1,'030'), (2,'090'),(2,'SUB'),(2,'XXX'),
+                    (3,'-'),(3,'45x'), (4,'180'),(4,'LSS'), (5,'7/DPD')
+             AS t(acct, status)
         GROUP BY acct
     """)
 
@@ -177,11 +170,11 @@ def _q_a12_nullsafe_accuracy(spark, sf):
 
 
 def _q_a11_boost_ladder_inline(spark, sf):
-    """A11: similarity-boost tier ladder (config.py:29-34 order)."""
-    return spark.sql("""
-        SELECT cast(s AS double) AS s,
-               CASE WHEN s >= 0.85 THEN 1.0d WHEN s >= 0.70 THEN 0.9d
-                    WHEN s >= 0.50 THEN 0.7d ELSE 0.5d END AS boost
+    """A11: similarity-boost tier ladder (config.py:29-34 order) through
+    the shipped `sqlexpr.boost`."""
+    from crego_document_extractor_spark.extract import sqlexpr as X
+    return spark.sql(f"""
+        SELECT cast(s AS double) AS s, {X.boost('s')} AS boost
         FROM VALUES (0.99),(0.85),(0.849),(0.7),(0.69),(0.5),(0.49),(0.0),(-0.3) AS t(s)
     """)
 
@@ -321,24 +314,14 @@ def _q_text_quality(spark, sf):
 
 def _q_ngram_jaccard(spark, sf):
     """Dedup (n-gram Jaccard): token-set overlap between sampled doc
-    pairs of the same source."""
-    d = (_t(spark, sf, "documents").where("doc_id % 50 = 0")
-         .select("doc_id", "source",
-                 F.array_distinct(F.split("text", " ")).alias("toks")))
-    t = d.select("doc_id", "source", F.explode("toks").alias("tok"))
-    sizes = d.select("doc_id", F.expr("size(toks)").alias("n"))
-    pairs = (t.alias("a").join(t.alias("b"),
-                               (F.col("a.tok") == F.col("b.tok")) &
-                               (F.col("a.source") == F.col("b.source")) &
-                               (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-             .agg(F.count("*").alias("common")))
-    ja = (pairs.join(sizes.withColumnRenamed("doc_id", "d1")
-                     .withColumnRenamed("n", "n1"), "d1")
-          .join(sizes.withColumnRenamed("doc_id", "d2")
-                .withColumnRenamed("n", "n2"), "d2")
-          .withColumn("jaccard", F.expr("round(common / (n1 + n2 - common), 4)")))
-    return ja.where("jaccard >= 0.5").select("d1", "d2", "jaccard")
+    pairs of the same source (ops/dedup.ngram_jaccard_pairs).  The
+    operator filters the unrounded Jaccard and the oracle the rounded
+    one; the two differ only for a pair whose token-set union reaches
+    10,000."""
+    from crego_document_extractor_spark.ops.dedup import ngram_jaccard_pairs
+    d = _t(spark, sf, "documents").where("doc_id % 50 = 0")
+    return (ngram_jaccard_pairs(d, threshold=0.5, same_key="source")
+            .select("d1", "d2", F.round("jaccard", 4).alias("jaccard")))
 
 
 def _q_lang_profile(spark, sf):
@@ -350,18 +333,16 @@ def _q_lang_profile(spark, sf):
 
 def _q_skew_salted_topk(spark, sf):
     """Skew-salted two-phase aggregation: corpus token top-20 via
-    groupBy(token, salt) partial → groupBy(token) final (ops/skew.py);
-    result equals a plain group-count (the oracle)."""
-    d = _t(spark, sf, "documents")
-    toks = (d.select("doc_id", F.posexplode(F.split("text", " ")).alias("tp", "tok"))
-            .where("tok != ''"))
-    # deterministic per-occurrence salt (stable coordinates, not
-    # monotonically_increasing_id — identical across task retries)
-    salted = toks.withColumn(
-        "salt", F.pmod(F.abs(F.xxhash64("doc_id", "tp")), F.lit(16)))
-    partial = salted.groupBy("tok", "salt").agg(F.count("*").alias("pc"))
-    final = partial.groupBy("tok").agg(F.sum("pc").alias("n"))
-    return final.orderBy(F.desc("n"), F.asc("tok")).limit(20)
+    groupBy(token, salt) partial → groupBy(token) final
+    (ops/skew.salted_topk_tokens over one text span per document);
+    result equals a plain group-count (the oracle).  The operator
+    splits on ``\\s+``, the oracle on single spaces: the two agree
+    while the texts hold no other whitespace."""
+    from crego_document_extractor_spark.ops.skew import salted_topk_tokens
+    d = _t(spark, sf, "documents").select(
+        "doc_id", F.array(F.struct(F.lit("text").alias("kind"), "text"))
+        .alias("spans"))
+    return salted_topk_tokens(d, k=20)
 
 
 def _q_a5_active_loans_by_type_inline(spark, sf):
@@ -1495,6 +1476,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_lang_profile": _q_lang_profile,
         "q_skew_salted_topk": _q_skew_salted_topk,
         "q_a5_active_loans_by_type_inline": _q_a5_active_loans_by_type_inline,
+        "q_a9b_engine_agreement": _q_a9b_engine_agreement,
+        "q_s2_html_ingest": _q_s2_html_ingest,
+        "q_s2_pdf_ingest": _q_s2_pdf_ingest,
+        "q_f5_a6_summary_first_match": _q_f5_a6_summary_first_match,
+        "q_f6_t4_score_scan": _q_f6_t4_score_scan,
+        "q_f7_a7_inquiry_count": _q_f7_a7_inquiry_count,
+        "q_f8_f9_gstr_locator": _q_f8_f9_gstr_locator,
+        "q_j3_coalesce_fallback": _q_j3_coalesce_fallback,
+        "q_p5_account_parse": _q_p5_account_parse,
+        "q_a4_live_plbl_inline": _q_a4_live_plbl_inline,
+        "q_curation_funnel": _q_curation_funnel,
         "q_minhash_bands": _q_minhash_bands,
         "q_simhash": _q_simhash,
         "q_dedup_minhash_e2e": _q_dedup_minhash_e2e,
@@ -1515,7 +1507,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_decontaminate": _q_decontaminate,
         "q_dsir_select": _q_dsir_select,
         "q_tfidf_topk": _q_tfidf_topk,
-        "q_curation_funnel": _q_curation_funnel,
         "q_top_ngram_coverage": _q_top_ngram_coverage,
         "q_incremental_dedup": _q_incremental_dedup,
         "q_normalize_text": _q_normalize_text,
@@ -1534,16 +1525,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_perplexity": _q_perplexity,
         "q_epoch_shard": _q_epoch_shard,
         "q_ivf_ann_recall": _q_ivf_ann_recall,
-        "q_a9b_engine_agreement": _q_a9b_engine_agreement,
-        "q_s2_html_ingest": _q_s2_html_ingest,
-        "q_s2_pdf_ingest": _q_s2_pdf_ingest,
-        "q_f5_a6_summary_first_match": _q_f5_a6_summary_first_match,
-        "q_f6_t4_score_scan": _q_f6_t4_score_scan,
-        "q_f7_a7_inquiry_count": _q_f7_a7_inquiry_count,
-        "q_f8_f9_gstr_locator": _q_f8_f9_gstr_locator,
-        "q_j3_coalesce_fallback": _q_j3_coalesce_fallback,
-        "q_p5_account_parse": _q_p5_account_parse,
-        "q_a4_live_plbl_inline": _q_a4_live_plbl_inline,
         "q_a9_consistency": _q_a9_consistency,
         "q_token_stats": _q_token_stats,
         "q_fingerprint_distinct": _q_fingerprint_distinct,
@@ -2660,8 +2641,9 @@ def oracle_sql() -> dict[str, str]:
                            PRECEDING AND 1 PRECEDING), 0) AS n_in,
                          n_dropped
                        FROM f, tot)
-            SELECT stage_idx, stage, n_in, n_in - n_dropped AS n_kept,
-                   n_dropped
+            SELECT stage_idx, stage, CAST(n_in AS BIGINT) AS n_in,
+                   CAST(n_in - n_dropped AS BIGINT) AS n_kept,
+                   CAST(n_dropped AS BIGINT) AS n_dropped
             FROM funnel ORDER BY stage_idx
         """,
         "q_tfidf_topk": """

@@ -132,8 +132,6 @@ def account_fields(text: str) -> dict[str, str]:
         "is_active": f"contains(lower({text}), 'active')",
         "is_secured": f"contains(lower({at}), 'secured')",
         "current_balance": clean_number(extract_field(text, "Current Balance")),
-        "overdue_amount": clean_number(extract_field(text, "Overdue Amt")),
-        "sanctioned_amount": clean_number(extract_field(text, "Disbd Amt")),
         "worst_dpd": worst_dpd(text),
     }
 

@@ -62,10 +62,7 @@ def word_ngrams(text_col: str, n: int) -> str:
     lambda, the text was re-split per gram position."""
     return _bind(
         words(text_col), "tk",
-        f"CASE WHEN size(tk) >= {n} THEN "
-        f"transform(sequence(1, size(tk) - {n - 1}), "
-        f"i -> {gram('tk', 'i', n)}) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END")
+        f"transform({gram_starts('size(tk)', n)}, i -> {gram('tk', 'i', n)})")
 
 
 #: tiny trigram→language profile (deterministic heuristic stand-in; a
@@ -411,12 +408,11 @@ def _bi_pairs_exploded(src: DataFrame) -> DataFrame:
     """(doc cols..., w1, w2): BOS-framed bigram pairs off a bound
     `toks` column — token POSITIONS explode and the pair builds in the
     codegen projection above the Generate (r6: the transform-lambda
-    form ran interpreted per position; the CASE guard handles the
-    sub-1-token doc — sequence(1, 0) is DESCENDING in Spark)."""
+    form ran interpreted per position)."""
     keep = [c for c in src.columns if c != "toks"]
-    return (src.select(*keep, "toks", F.explode(F.expr(
-                "CASE WHEN size(toks) >= 1 THEN sequence(1, size(toks)) "
-                "ELSE CAST(array() AS ARRAY<INT>) END")).alias("i"))
+    return (src.select(*keep, "toks",
+                       F.explode(F.expr(gram_starts("size(toks)", 1)))
+                       .alias("i"))
             .select(*keep,
                     F.expr("CASE WHEN i = 1 THEN '<s>' "
                            "ELSE element_at(toks, i - 1) END").alias("w1"),

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .textstats import words
+from .textstats import gram_starts, words
 
 __all__ = ["word_census", "pair_census", "apply_merge", "bpe_train",
            "bpe_encode"]
@@ -67,12 +67,9 @@ def pair_census(words: DataFrame, k: int | None = None) -> DataFrame:
 
     One explode + hash-aggregate on a vocab-sized input; `k` caps the
     output with a TakeOrdered (no total sort)."""
-    pairs = ("CASE WHEN size(symbols) >= 2 THEN "
-             "transform(sequence(1, size(symbols) - 1), "
+    pairs = (f"transform({gram_starts('size(symbols)', 2)}, "
              "i -> struct(try_element_at(symbols, i) AS pair_left, "
-             "try_element_at(symbols, i + 1) AS pair_right)) "
-             f"ELSE CAST(array() AS ARRAY<STRUCT<pair_left: STRING, "
-             f"pair_right: STRING>>) END")
+             "try_element_at(symbols, i + 1) AS pair_right))")
     out = (words.select("n_occurrences",
                         F.explode(F.expr(pairs)).alias("p"))
            .select("p.pair_left", "p.pair_right", "n_occurrences")

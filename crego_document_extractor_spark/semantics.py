@@ -286,9 +286,9 @@ def dpd_for_status(status: str) -> int:
 
 
 def _field_from_lines(lines: list[str], field_name: str) -> str:
-    """`extract_field` over a pre-split line list (r6: parse_account
-    ran five separate extract_field calls, each re-splitting the block
-    into lines; identical first-match / after-first-':' semantics)."""
+    """`extract_field` over a pre-split line list, so an account
+    block is split into lines once for all its field lookups
+    (identical first-match / after-first-':' semantics)."""
     for line in lines:
         if field_name in line:
             parts = line.split(":", 1)
@@ -299,7 +299,9 @@ def _field_from_lines(lines: list[str], field_name: str) -> str:
 
 def parse_account(text: str) -> Optional[dict]:
     """crif_parser.py:146-174 — parse one account block; None when
-    Account Type is empty."""
+    Account Type is empty.  Only the fields a parameter reads: the
+    reference's secured flag and balance/overdue/sanctioned amounts
+    feed no parameter."""
     lines = text.split("\n")
     account_type = _field_from_lines(lines, "Account Type")
     if not account_type:
@@ -312,16 +314,9 @@ def parse_account(text: str) -> Optional[dict]:
             d = dpd_for_status(st)
             if d > worst:
                 worst = d
-    cb = _field_from_lines(lines, "Current Balance")
-    od = _field_from_lines(lines, "Overdue Amt")
-    sa = _field_from_lines(lines, "Disbd Amt")
     return {
         "account_type": account_type,
         "is_active": "active" in text.lower(),  # crif_parser.py:156
-        "is_secured": "secured" in account_type.lower(),  # :157
-        "current_balance": clean_number(cb) if cb else 0.0,
-        "overdue_amount": clean_number(od) if od else 0.0,
-        "sanctioned_amount": clean_number(sa) if sa else 0.0,
         "remarks": remarks or "",
         "worst_dpd": worst,  # crif_models.py:47-50 (0 when no history)
     }
